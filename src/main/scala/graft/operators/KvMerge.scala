@@ -173,7 +173,7 @@ object KvMerge {
     graft.sources.kv.KvSchemaMeta.read(path).foreach { recorded =>
       val live = ParquetIO.listFilesStatus(path).flatMap {
         case (f, len, mt) => graft.sources.kv.KvSource.toStructType(
-          ParquetIO.fileSchemaCached(f, len, mt)).fieldNames
+          ParquetIO.footer(f, len, mt).schema).fieldNames
       }.map(_.toLowerCase).toSet
       val renames = graft.sources.kv.KvEvolution.read(path).renames
       val kept = recorded.fields.filter(f =>

@@ -286,7 +286,7 @@ object TextQueries {
           .coalesce(1).sortWithinPartitions(col("doc_id"))
           .write.mode("overwrite").parquet(staged)
       }
-      val total = ParquetIO.listFiles(staged).map(ParquetIO.rowCount).sum
+      val total = ParquetIO.listFiles(staged).map(ParquetIO.footer(_).rowCount).sum
       // fixed per-sf paths CLEARED up front, not UUID-fresh ones: each
       // invocation previously stranded a full deduped-corpus copy plus
       // checkpoint in /tmp, and a bench sweep invokes this gate dozens

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -32,7 +32,23 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ParquetIO {
 
+  /** The one Hadoop conf graft builds from: every parquet read and write
+    * and every FileSystem handle. No defaults — a defaulted
+    * `new Configuration()` parses Hadoop's `core-default.xml` on first
+    * use, per instance, and `ParquetFileReader.open(InputFile)` and the
+    * no-argument `ParquetReadOptions.builder()` each build one per open:
+    * 12–14 ms per footer open against 0.5 ms from this conf (40 files of
+    * 25 rows, JDK 17 C1 tier, 4-core Xeon). So every reader opens through
+    * [[openReader]] with [[readOptions]]; `ParquetIOGuardSpec` fails if
+    * another file under `src/main` opens one itself.
+    */
   def hadoopConf: Configuration = new Configuration(false)
+
+  /** Read options built from [[hadoopConf]]; callers add range/filter. */
+  private def readOptions(): ParquetReadOptions.Builder = HadoopReadOptions.builder(hadoopConf)
+
+  private def openReader(file: Path, opts: ParquetReadOptions.Builder): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, hadoopConf), opts.build())
 
   /** List data files under path (a single parquet file or a directory). */
   def listFiles(path: String): Seq[Path] = listFilesStatus(path).map(_._1)
@@ -256,31 +272,24 @@ object ParquetIO {
       }
     }.toOption.flatten
 
-  // ---- driver-side planning caches -------------------------------------
+  // ---- footers: one read per file, JVM-wide ----------------------------
   // A kv/log/cdc query plans by reading per-file footers (row groups,
-  // schemas). Re-reading every footer at every query is O(files) driver
-  // IO — untenable on a many-file table. Footers are immutable for a
-  // given (path, len, mtime), so cache on that signature; bounded by
+  // schemas, stats). Re-reading every footer at every query is O(files)
+  // driver IO — untenable on a many-file table. Footers are immutable
+  // for a given (path, len, mtime), so cache the DERIVED planning view on
+  // that signature (never the whole ParquetMetadata); bounded by
   // wholesale clearing (planning metadata is cheap to rebuild).
   private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Seq[RowGroupInfo]]()
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), MessageType]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Footer]()
   private val MaxCacheEntries = 262144
 
-  def footerInfoCached(file: Path, len: Long, mtime: Long): Seq[RowGroupInfo] = {
-    if (footerCache.size > MaxCacheEntries) footerCache.clear()
-    footerCache.computeIfAbsent((file.toString, len, mtime), _ => footerInfo(file))
-  }
-
-  def fileSchemaCached(file: Path, len: Long, mtime: Long): MessageType = {
-    if (schemaCache.size > MaxCacheEntries) schemaCache.clear()
-    schemaCache.computeIfAbsent((file.toString, len, mtime), _ => fileSchema(file))
-  }
+  /** Footer opens so far, JVM-wide — one per [[footer]] cache miss. */
+  val footerReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** (rowCount, byte ranges of row groups) from the footer — used for
     * split planning and exact streaming-offset accounting without reading
-    * data pages.
+    * data pages — plus the group's raw per-column statistics (the zone-map
+    * index's input, [[graft.sources.kv.KvIndex]]).
     *
     * `endByte` is the exact on-disk end of the group: the NEXT group's
     * starting position (groups are laid out back-to-back), or
@@ -293,93 +302,89 @@ object ParquetIO {
     * (split packing targets, statistics), never for range boundaries.
     */
   case class RowGroupInfo(startByte: Long, totalByteSize: Long, rowCount: Long,
-      endByte: Long)
+      endByte: Long, stats: Map[String, ColStats])
 
-  def footerInfo(file: Path): Seq[RowGroupInfo] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, hadoopConf))
-    try {
-      import scala.jdk.CollectionConverters._
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      blocks.zipWithIndex.map { case (b, i) =>
-        val end =
-          if (i + 1 < blocks.length) blocks(i + 1).getStartingPos
-          else b.getStartingPos + b.getCompressedSize
-        RowGroupInfo(b.getStartingPos, b.getTotalByteSize, b.getRowCount, end)
-      }
-    } finally reader.close()
-  }
-
-  def rowCount(file: Path): Long = footerInfo(file).map(_.rowCount).sum
-
-  /** Per-file column statistics folded across row groups, from the footer
-    * only. `None` fields mean "not trustworthy" (a row group without
-    * stats, unknown null counts) — callers must refuse pushdown then.
-    * Values are raw parquet-typed (java.lang.Long / java.lang.Double /
-    * parquet Binary); min/max are None for all-null columns.
+  /** Column statistics by dotted column path. `None` fields mean "not
+    * trustworthy" (a chunk without stats, unknown null counts) — callers
+    * must refuse pushdown then. Values are raw parquet-typed
+    * (java.lang.Long / java.lang.Double / parquet Binary); min/max are
+    * None for all-null columns.
     */
   case class ColStats(nullCount: Option[Long], min: Option[Any], max: Option[Any])
 
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Map[String, ColStats]]()
+  /** Everything graft plans from one file's footer. `stats` folds the
+    * groups' stats per file (any untrusted group makes the file's column
+    * untrusted; min/max fold with the column's own comparator — parquet
+    * orders BINARY stats unsigned-lexicographically, matching UTF8String
+    * ordering for valid UTF-8).
+    */
+  case class Footer(schema: MessageType, groups: Seq[RowGroupInfo]) {
+    def rowCount: Long = groups.map(_.rowCount).sum
 
-  def columnStatsCached(file: Path, len: Long, mtime: Long): Map[String, ColStats] = {
-    if (statsCache.size > MaxCacheEntries) statsCache.clear()
-    statsCache.computeIfAbsent((file.toString, len, mtime), _ => columnStats(file))
+    lazy val stats: Map[String, ColStats] = {
+      import scala.jdk.CollectionConverters._
+      val types = schema.getColumns.asScala
+        .map(c => c.getPath.mkString(".") -> c.getPrimitiveType).toMap
+      groups.headOption.map(_.stats.keys).getOrElse(Nil).map { name =>
+        val chunks = groups.map(_.stats.get(name))
+        name -> (if (chunks.exists(_.forall(_.nullCount.isEmpty))) ColStats(None, None, None)
+          else {
+            val cmp = types(name).comparator().asInstanceOf[java.util.Comparator[Any]]
+            val cs = chunks.flatten
+            ColStats(Some(cs.flatMap(_.nullCount).sum),
+              cs.flatMap(_.min).reduceOption((a, b) => if (cmp.compare(a, b) <= 0) a else b),
+              cs.flatMap(_.max).reduceOption((a, b) => if (cmp.compare(a, b) >= 0) a else b))
+          })
+      }.toMap
+    }
   }
 
-  def columnStats(file: Path): Map[String, ColStats] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, hadoopConf))
+  /** The footer of `file` at signature (len, mtime): read at most once
+    * per signature JVM-wide — one footer read per file EVER.
+    */
+  def footer(file: Path, len: Long, mtime: Long): Footer = {
+    if (footerCache.size > MaxCacheEntries) footerCache.clear()
+    footerCache.computeIfAbsent((file.toString, len, mtime), _ => readFooter(file))
+  }
+
+  /** [[footer]] for a bare path: one status call supplies the signature. */
+  def footer(file: Path): Footer = {
+    val st = file.getFileSystem(hadoopConf).getFileStatus(file)
+    footer(file, st.getLen, st.getModificationTime)
+  }
+
+  private def readFooter(file: Path): Footer = {
+    footerReads.incrementAndGet()
+    val reader = openReader(file, readOptions())
     try {
       import scala.jdk.CollectionConverters._
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val names = blocks.headOption.map(_.getColumns.asScala.map(_.getPath.toDotString).toSeq)
-        .getOrElse(Seq.empty)
-      names.map { name =>
-        val chunks = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == name))
-        val folded =
-          if (chunks.exists(_.isEmpty)) ColStats(None, None, None)
-          else {
-            val stats = chunks.map(_.get.getStatistics)
-            if (stats.exists(s => s == null || s.isEmpty || s.getNumNulls < 0))
-              ColStats(None, None, None)
-            else {
-              val nulls = stats.map(_.getNumNulls).sum
-              val withVals = stats.filter(_.hasNonNullValue)
-              // fold min/max with the column's own comparator (parquet
-              // orders BINARY stats unsigned-lexicographically, matching
-              // UTF8String ordering for valid UTF-8)
-              val minV = withVals.map(_.genericGetMin).reduceOption { (a, b) =>
-                val c = withVals.head.comparator
-                  .asInstanceOf[java.util.Comparator[Any]].compare(a, b)
-                if (c <= 0) a else b
-              }
-              val maxV = withVals.map(_.genericGetMax).reduceOption { (a, b) =>
-                val c = withVals.head.comparator
-                  .asInstanceOf[java.util.Comparator[Any]].compare(a, b)
-                if (c >= 0) a else b
-              }
-              ColStats(Some(nulls), minV, maxV)
-            }
-          }
-        name -> folded
-      }.toMap
+      val groups = blocks.zipWithIndex.map { case (b, i) =>
+        val end =
+          if (i + 1 < blocks.length) blocks(i + 1).getStartingPos
+          else b.getStartingPos + b.getCompressedSize
+        val stats = b.getColumns.asScala.map { cc =>
+          val st = cc.getStatistics
+          val vals = st != null && st.hasNonNullValue
+          cc.getPath.toDotString -> ColStats(
+            Option.when(st != null && st.isNumNullsSet)(st.getNumNulls),
+            Option.when(vals)(st.genericGetMin), Option.when(vals)(st.genericGetMax))
+        }.toMap
+        RowGroupInfo(b.getStartingPos, b.getTotalByteSize, b.getRowCount, end, stats)
+      }
+      Footer(reader.getFooter.getFileMetaData.getSchema, groups)
     } finally reader.close()
-  }
-
-  def fileSchema(file: Path): MessageType = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, hadoopConf))
-    try reader.getFooter.getFileMetaData.getSchema finally reader.close()
   }
 
   /** Intersection schema: columns present with IDENTICAL types in every
     * file of the listing. Filters may only be compiled against this —
     * a sparse attribute column (absent in some files) pushed into the
     * parquet reader would misjudge rows whose file lacks the column.
-    * Footer schemas are signature-cached: one footer read per file EVER.
+    * Footer schemas come from [[footer]]: one footer read per file EVER.
     */
   def commonSchema(files: Seq[(Path, Long, Long)]): Option[MessageType] = {
     if (files.isEmpty) return None
-    val schemas = files.map { case (f, len, mt) => fileSchemaCached(f, len, mt) }
+    val schemas = files.map { case (f, len, mt) => footer(f, len, mt).schema }
     Some(schemas.tail.foldLeft(schemas.head) { (acc, s) =>
       import scala.jdk.CollectionConverters._
       val fields = acc.getFields.asScala.filter { f =>
@@ -676,10 +681,10 @@ object ParquetIO {
       skipRowGroups: Int = 0,
       aliases: Map[String, String] = Map.empty)
       : Iterator[InternalRow] with AutoCloseable = {
-    val optsB = ParquetReadOptions.builder()
+    val optsB = readOptions()
     range.foreach { case (s, e) => optsB.withRange(s, e) }
     filter.foreach(f => optsB.withRecordFilter(FilterCompat.get(f)))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, hadoopConf), optsB.build())
+    val reader = openReader(file, optsB)
     val fileType = reader.getFooter.getFileMetaData.getSchema
     // Column-mapping resolution (KvEvolution "name mode"): a requested
     // column absent from THIS file but recorded under a physical alias

@@ -41,7 +41,7 @@ class CdcSource extends TableProvider with DataSourceRegister {
     val base = Option(options.get("catalog")).map(SchemaCatalog.parse).getOrElse {
       val files = ParquetIO.listFiles(options.get("path"))
       require(files.nonEmpty, s"no changelog files under ${options.get("path")}")
-      KvSource.toStructType(ParquetIO.fileSchema(files.head))
+      KvSource.toStructType(ParquetIO.footer(files.head).schema)
     }
     // total-order change sequence, synthesized by the reader when the
     // changelog file doesn't carry it
@@ -87,7 +87,7 @@ object CdcInputPartition {
     * not capped at changelog file count (large backfill batches split).
     */
   def planFile(file: Path, fileSeq: Long, targetBytes: Long): Seq[CdcInputPartition] = {
-    val groups = ParquetIO.footerInfo(file)
+    val groups = ParquetIO.footer(file).groups
     if (groups.isEmpty) Nil
     else {
       val splits = scala.collection.mutable.ArrayBuffer.empty[CdcInputPartition]

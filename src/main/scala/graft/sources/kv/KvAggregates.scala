@@ -40,8 +40,8 @@ object KvAggregates {
     if (KvEvolution.read(path).renames.nonEmpty) return None
     val files = ParquetIO.listFilesStatus(path)
     val perFile = files.map { case (f, len, mt) =>
-      val rows = ParquetIO.footerInfoCached(f, len, mt).map(_.rowCount).sum
-      (rows, ParquetIO.columnStatsCached(f, len, mt))
+      val ft = ParquetIO.footer(f, len, mt)
+      (ft.rowCount, ft.stats)
     }
     val totalRows = perFile.map(_._1).sum
 

@@ -86,7 +86,7 @@ object KvBloom {
     }
     // driver-side per-file widths from cached footers (no data pages)
     val widths = files.map { case (f, len, mtime) =>
-      val rows = ParquetIO.footerInfoCached(f, len, mtime).map(_.rowCount).sum
+      val rows = ParquetIO.footer(f, len, mtime).rowCount
       val nb = widthFor(rows, bitsPerKey)
       require(nb <= Int.MaxValue,
         s"bloom width $nb exceeds Int range — lower bitsPerKey or split files")
@@ -194,7 +194,7 @@ object KvBloom {
       sc.entryFor(f.getName, len, mt).isEmpty }
     if (newFiles.isEmpty) return 0
     val widths = newFiles.map { case (f, len, mtime) =>
-      val rows = ParquetIO.footerInfoCached(f, len, mtime).map(_.rowCount).sum
+      val rows = ParquetIO.footer(f, len, mtime).rowCount
       val nb = widthFor(rows, bitsPerKey)
       require(nb <= Int.MaxValue,
         s"bloom width $nb exceeds Int range — lower bitsPerKey or split files")

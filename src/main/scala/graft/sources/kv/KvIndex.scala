@@ -1,8 +1,7 @@
 package graft.sources.kv
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.sources._
 import graft.sources.ParquetIO
@@ -34,7 +33,7 @@ object KvIndex {
   case class Zone(min: Option[Any], max: Option[Any], nullsOnly: Boolean)
 
   /** Per-file zones straight from footer column statistics (the cached
-    * `ParquetIO.columnStatsCached` values) — lets `mayMatch` prune whole
+    * `ParquetIO.footer(...).stats` values) — lets `mayMatch` prune whole
     * FILES against runtime (DPP-style) join-key filters without an index
     * sidecar. Raw parquet stat types normalize to the comparator domain
     * `cmp` understands; anything else yields an unbounded zone (kept).
@@ -115,46 +114,47 @@ object KvIndex {
   }
 
   /** Footer-only zone extraction for `files` — the shared walk behind
-    * [[build]] (all files) and [[append]] (new files only).
+    * [[build]] (all files) and [[append]] (new files only). Reads the
+    * signature-cached [[ParquetIO.footer]], so a file the planner has
+    * already seen costs no second open.
     */
   private def entriesFor(files: Seq[(Path, Long, Long)], cols: Seq[String])
       : Seq[(String, Long, Long, String)] = {
+    import scala.jdk.CollectionConverters._
+    def widen(v: Any): Option[Any] = v match {
+      case i: java.lang.Integer => Some(i.longValue())
+      case l: java.lang.Long => Some(l.longValue())
+      case fl: java.lang.Float => Some(fl.doubleValue())
+      case d: java.lang.Double => Some(d.doubleValue())
+      case _ => None
+    }
     files.map { case (f, len, mtime) =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, ParquetIO.hadoopConf))
-      try {
-        import scala.jdk.CollectionConverters._
-        val groups = reader.getFooter.getBlocks.asScala.map { b =>
-          val byCol = b.getColumns.asScala.flatMap { cc =>
-            val name = cc.getPath.toDotString
-            if (!cols.contains(name)) None
-            else {
-              val st = cc.getStatistics
-              if (st == null || !st.hasNonNullValue) {
-                Some(name -> Zone(None, None, nullsOnly = st != null && st.getNumNulls == b.getRowCount))
-              } else {
-                def widen(v: Any): Option[Any] = v match {
-                  case i: java.lang.Integer => Some(i.longValue())
-                  case l: java.lang.Long => Some(l.longValue())
-                  case fl: java.lang.Float => Some(fl.doubleValue())
-                  case d: java.lang.Double => Some(d.doubleValue())
-                  case _ => None
-                }
-                val (mn, mx) = cc.getPrimitiveType.getPrimitiveTypeName match {
-                  case PrimitiveTypeName.INT64 | PrimitiveTypeName.INT32 |
-                       PrimitiveTypeName.DOUBLE | PrimitiveTypeName.FLOAT =>
-                    (widen(st.genericGetMin), widen(st.genericGetMax))
-                  case PrimitiveTypeName.BINARY =>
-                    (Option[Any](st.minAsString()), Option[Any](st.maxAsString()))
-                  case _ => (None, None)
-                }
-                Some(name -> Zone(mn, mx, nullsOnly = false))
+      val ft = ParquetIO.footer(f, len, mtime)
+      // file column order, so entry JSON keeps the footer's column order
+      val indexed = ft.schema.getColumns.asScala
+        .map(c => (c.getPath.mkString("."), c.getPrimitiveType))
+        .filter { case (name, _) => cols.contains(name) }
+      val groups = ft.groups.map { g =>
+        val byCol = indexed.flatMap { case (name, tpe) =>
+          g.stats.get(name).map {
+            case ParquetIO.ColStats(_, Some(mn), Some(mx)) =>
+              val (zmn, zmx) = tpe.getPrimitiveTypeName match {
+                case PrimitiveTypeName.INT64 | PrimitiveTypeName.INT32 |
+                     PrimitiveTypeName.DOUBLE | PrimitiveTypeName.FLOAT =>
+                  (widen(mn), widen(mx))
+                case PrimitiveTypeName.BINARY =>
+                  val str = tpe.stringifier()
+                  (Option[Any](str.stringify(mn.asInstanceOf[Binary])),
+                    Option[Any](str.stringify(mx.asInstanceOf[Binary])))
+                case _ => (None, None)
               }
-            }
-          }.toMap
-          b.getStartingPos -> byCol
+              name -> Zone(zmn, zmx, nullsOnly = false)
+            case s => name -> Zone(None, None, nullsOnly = s.nullCount.contains(g.rowCount))
+          }
         }.toMap
-        (f.getName, len, mtime, entryJson(groups))
-      } finally reader.close()
+        g.startByte -> byCol
+      }.toMap
+      (f.getName, len, mtime, entryJson(groups))
     }
   }
 

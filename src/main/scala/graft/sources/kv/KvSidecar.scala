@@ -102,7 +102,7 @@ object KvSidecar {
   // ---- cached reads ----------------------------------------------------
   // meta.json and shard bodies are immutable once published (publish is
   // a whole-directory swap), so both caches key on (path, len, mtime) —
-  // the ParquetIO.footerInfoCached discipline. Bounded by wholesale
+  // the ParquetIO.footer discipline. Bounded by wholesale
   // clearing; sidecars are cheap to re-read.
 
   private val metaCache =
@@ -247,11 +247,6 @@ object KvSidecar {
   /** Spec/bench hook: drop every cached sidecar parse. */
   def clearCaches(): Unit = { metaCache.clear(); shardCache.clear() }
 
-  /** Delete a sidecar (and any legacy monolithic blob) — the
-    * invalidation path when an index's contents can no longer be
-    * trusted (e.g. a column-type widening changes the Bloom hash
-    * domain). Absence is always safe: readers degrade to "no index".
-    */
   /** Invalidate a sidecar but KEEP its configuration: the shards are
     * deleted and the meta is republished with `"stale": true`, so
     * [[open]] refuses to serve it while a maintenance rebuild
@@ -273,6 +268,11 @@ object KvSidecar {
     }
   }
 
+  /** Delete a sidecar (and any legacy monolithic blob) — the
+    * invalidation path when an index's contents can no longer be
+    * trusted (e.g. a column-type widening changes the Bloom hash
+    * domain). Absence is always safe: readers degrade to "no index".
+    */
   def drop(tablePath: String, name: String): Unit = {
     val dir = dirOf(tablePath, name)
     val fs = dir.getFileSystem(ParquetIO.hadoopConf)
@@ -282,11 +282,6 @@ object KvSidecar {
     ()
   }
 
-  /** Driver-side staging helper: write `entries` (fileName, len, mtime,
-    * entryJson) into shard files under `tmpDir` — used by builders whose
-    * per-entry payload is footer-derived (zone maps). Distributed
-    * builders ([[KvBloom]]) write shard files from executors instead.
-    */
   /** Merge `newEntries` into an open sidecar during a publish stage —
     * the incremental-maintenance write path shared by `KvIndex.append`
     * and `KvBloom.append` (one implementation, two tiers): with an
@@ -332,6 +327,11 @@ object KvSidecar {
     } finally w.close()
   }
 
+  /** Driver-side staging helper: write `entries` (fileName, len, mtime,
+    * entryJson) into shard files under `tmpDir` — used by builders whose
+    * per-entry payload is footer-derived (zone maps). Distributed
+    * builders ([[KvBloom]]) write shard files from executors instead.
+    */
   def stageEntries(fs: FileSystem, tmpDir: Path, numShards: Int,
       entries: Iterator[(String, Long, Long, String)]): Unit = {
     val writers = scala.collection.mutable.Map.empty[Int, java.io.BufferedWriter]

@@ -73,7 +73,7 @@ class KvSource extends TableProvider with DataSourceRegister {
         val files = ParquetIO.listFilesStatus(path(options), snapshot)
         require(files.nonEmpty, s"no parquet files under ${path(options)} and no catalog option")
         val union = files.map { case (f, len, mt) =>
-          KvSource.toStructType(ParquetIO.fileSchemaCached(f, len, mt))
+          KvSource.toStructType(ParquetIO.footer(f, len, mt).schema)
         }.reduce(KvSchemaMeta.union)
         // The footer union sees every name ever written — including
         // bytes the evolution ledger dropped or renamed away. A CURRENT
@@ -622,7 +622,7 @@ class KvScan(path: String, requiredSchema: StructType, tableSchema: StructType,
     val bloomReader = if (allFilters.isEmpty) None else KvBloom.reader(path)
     def fileMayMatch(f: Path, len: Long, mtime: Long): Boolean =
       (runtimeFilters.isEmpty || {
-        val zones = KvIndex.zonesFromStats(ParquetIO.columnStatsCached(f, len, mtime))
+        val zones = KvIndex.zonesFromStats(ParquetIO.footer(f, len, mtime).stats)
         runtimeFilters.forall(rf => KvIndex.mayMatch(rf, zones))
       }) && (bloomReader.flatMap(_.bloomsFor(f.getName, len, mtime)) match {
         case Some(blooms) => allFilters.forall(fl => KvBloom.mayMatch(fl, blooms))
@@ -632,7 +632,7 @@ class KvScan(path: String, requiredSchema: StructType, tableSchema: StructType,
       .filter { case (f, len, mtime) => fileMayMatch(f, len, mtime) }
       .flatMap { case (f, len, mtime) =>
         val fileZones = zoneReader.flatMap(_.zonesFor(f.getName, len, mtime))
-        ParquetIO.footerInfoCached(f, len, mtime)
+        ParquetIO.footer(f, len, mtime).groups
           .filter(g => fileZones.flatMap(_.get(g.startByte)) match {
             case Some(zones) => allFilters.forall(fl => KvIndex.mayMatch(fl, zones))
             case None => true

@@ -106,7 +106,7 @@ object KvVectorized {
     */
   def scanEligible(path: String, schema: StructType): Boolean =
     ParquetIO.listFilesStatus(path).forall { case (f, len, mt) =>
-      eligible(ParquetIO.fileSchemaCached(f, len, mt), schema)
+      eligible(ParquetIO.footer(f, len, mt).schema, schema)
     }
 
   /** Columnar reader over one partition's chunk list — each chunk is the

@@ -58,15 +58,16 @@ class LogContinuousReaderFactory(schema: StructType, raw: Boolean, pollMs: Long)
       private var pos = p.startRow
       private var it: Iterator[InternalRow] with AutoCloseable = _
       private var current: InternalRow = _
+      private var dataSchema: StructType = _
 
       private def open(): Unit = {
         val resolved = new Path(p.file)
-        val dataSchema =
-          if (raw) KvSource.toStructType(ParquetIO.fileSchema(resolved)) else schema
+        val ft = ParquetIO.footer(resolved)
+        dataSchema = if (raw) KvSource.toStructType(ft.schema) else schema
         // seek on every (re)open: skip whole row groups below `pos` from
         // the footer, step the remainder within one group — the EOF-poll
         // loop must not re-scan the consumed prefix each wakeup
-        val groups = ParquetIO.footerInfo(resolved)
+        val groups = ft.groups
         val cum = groups.scanLeft(0L)(_ + _.rowCount)
         val skipGroups =
           if (pos >= cum.last) groups.length
@@ -84,11 +85,8 @@ class LogContinuousReaderFactory(schema: StructType, raw: Boolean, pollMs: Long)
             if (it.hasNext) {
               val r = it.next()
               current =
-                if (raw) {
-                  val resolved = new Path(p.file)
-                  LogReaderFactory.toRawRow(r,
-                    KvSource.toStructType(ParquetIO.fileSchema(resolved)), p.shard, pos)
-                } else r
+                if (raw) LogReaderFactory.toRawRow(r, dataSchema, p.shard, pos)
+                else r
               pos += 1
               return true
             } else {

@@ -56,7 +56,7 @@ class LogSource extends TableProvider with DataSourceRegister {
         else Option(options.get("catalog")).map(SchemaCatalog.parse).getOrElse {
           val files = ParquetIO.listFiles(options.get("path"))
           require(files.nonEmpty, s"no shards under ${options.get("path")} and no catalog option")
-          KvSource.toStructType(ParquetIO.fileSchema(files.head))
+          KvSource.toStructType(ParquetIO.footer(files.head).schema)
         }
     }
   }
@@ -111,7 +111,7 @@ object LogSource {
     // grows/changes — per-trigger offset resolution costs one listing,
     // not O(shards) footer reads
     ParquetIO.listFilesStatus(path).map { case (f, len, mt) =>
-      f.getName -> ParquetIO.footerInfoCached(f, len, mt).map(_.rowCount).sum
+      f.getName -> ParquetIO.footer(f, len, mt).rowCount
     }.toMap
 
   /** shard name → full file path. */
@@ -139,7 +139,7 @@ object LogSource {
   def planShardPartitions(file: Path, len: Long, mtime: Long, shard: String,
       from: Long, to: Long, targetBytes: Long): Seq[LogInputPartition] = {
     if (from >= to) return Nil
-    val groups = ParquetIO.footerInfoCached(file, len, mtime)
+    val groups = ParquetIO.footer(file, len, mtime).groups
     if (groups.isEmpty)
       return Seq(LogInputPartition(file.toString, shard, from, to,
         fileLen = len, fileMtime = mtime))
@@ -313,7 +313,7 @@ class LogScan(path: String, schema: StructType, tableSchema: StructType,
     */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
     val perShard = ParquetIO.listFilesStatus(path).map { case (f, len, mt) =>
-      val groups = ParquetIO.footerInfoCached(f, len, mt)
+      val groups = ParquetIO.footer(f, len, mt).groups
       f.getName -> ((groups.map(_.totalByteSize).sum, groups.map(_.rowCount).sum))
     }.toMap
     val counts = perShard.view.mapValues(_._2).toMap
@@ -342,7 +342,7 @@ class LogScan(path: String, schema: StructType, tableSchema: StructType,
     private lazy val planned: Array[InputPartition] = {
       val status = LogSource.shardFileStatus(path)
       val counts = status.map { case (n, (f, len, mt)) =>
-        n -> ParquetIO.footerInfoCached(f, len, mt).map(_.rowCount).sum
+        n -> ParquetIO.footer(f, len, mt).rowCount
       }
       val start = LogSource.resolveOffsets(
         options.getOrDefault("starting.offsets", "earliest"), counts)
@@ -586,7 +586,7 @@ class LogReaderFactory(schema: StructType, raw: Boolean,
     val p = partition.asInstanceOf[LogInputPartition]
     val resolved = new Path(p.file)
     val dataSchema =
-      if (raw) KvSource.toStructType(ParquetIO.fileSchema(resolved))
+      if (raw) KvSource.toStructType(ParquetIO.footer(resolved).schema)
       else if (avroJson.isDefined)
         StructType(Seq(StructField(avroCol, org.apache.spark.sql.types.BinaryType)))
       else schema

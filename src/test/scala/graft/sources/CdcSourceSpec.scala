@@ -154,7 +154,7 @@ class CdcSourceSpec extends SparkSpec {
       w.write(g)
     }
     w.close()
-    assert(ParquetIO.footerInfo(f).length > 1, "fixture must span several row groups")
+    assert(ParquetIO.footer(f).groups.length > 1, "fixture must span several row groups")
 
     // split.size.mb=0 ⇒ one partition per row group
     val split = spark.read.format("cdc").option("path", dir)

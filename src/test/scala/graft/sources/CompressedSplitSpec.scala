@@ -40,7 +40,7 @@ class CompressedSplitSpec extends SparkSpec {
     f
   }
 
-  private lazy val groups = ParquetIO.footerInfo(file)
+  private lazy val groups = ParquetIO.footer(file).groups
 
   test("fixture: many groups, compression ratio makes uncompressed ranges overshoot") {
     assert(groups.length >= 8)

@@ -1,0 +1,49 @@
+package graft.sources
+
+import graft.SparkSpec
+import graft.sources.kv.{KvBloom, KvIndex, KvInputPartition, KvScan}
+import org.apache.spark.sql.functions._
+
+/** One footer read per file, JVM-wide: sidecar maintenance and planning
+  * share the signature-cached [[ParquetIO.footer]], so a new file is
+  * opened for its footer exactly once however many consumers need it.
+  */
+class FooterReadsSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def appendFile(dir: String, keys: Seq[Long]): Unit =
+    keys.map(k => (k, s"v$k")).toDF("k", "v").coalesce(1)
+      .write.format("kv").option("path", dir).mode("append").save()
+
+  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Set[String] = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val scan = df.queryExecution.sparkPlan.collectFirst {
+      case b: BatchScanExec if b.scan.isInstanceOf[KvScan] => b.scan.asInstanceOf[KvScan]
+    }.get
+    scan.toBatch.planInputPartitions()
+      .flatMap(_.asInstanceOf[KvInputPartition].chunks.map(_.file)).toSet
+  }
+
+  test("N appended files cost N footer reads across sidecar append and planning; re-plans cost 0") {
+    val dir = java.nio.file.Files.createTempDirectory("kvfooters").toString + "/t"
+    (0 until 2).foreach(i => appendFile(dir, (i * 100L until (i + 1) * 100L)))
+    KvBloom.build(spark, dir, Seq("k"))
+    KvIndex.build(dir, Seq("k"))
+    def lookup() = spark.read.format("kv").option("path", dir).load()
+      .filter(col("k") === 350L)
+
+    val n = 3
+    val before = ParquetIO.footerReads.get()
+    (2 until 2 + n).foreach(i => appendFile(dir, (i * 100L until (i + 1) * 100L)))
+    assert(KvBloom.append(spark, dir) == n)
+    assert(KvIndex.append(dir) == n)
+    assert(plannedFiles(lookup()).size == 1, "the lookup prunes to its owning file")
+    assert(ParquetIO.footerReads.get() - before == n,
+      "each new file's footer is read once, shared by bloom, zone map and planner")
+
+    val planned = ParquetIO.footerReads.get()
+    plannedFiles(lookup())
+    assert(lookup().select("v").as[String].collect().toSeq == Seq("v350"))
+    assert(ParquetIO.footerReads.get() == planned, "re-planning must not re-read a footer")
+  }
+}

@@ -61,7 +61,7 @@ class KvSourceSpec extends SparkSpec {
   }
 
   test("filter compiler NNF + residual semantics") {
-    val schema = ParquetIO.fileSchema(ParquetIO.listFiles(liPath).head)
+    val schema = ParquetIO.footer(ParquetIO.listFiles(liPath).head).schema
     // Not(And(a,b)) → Or(Not a, Not b): compilable (both sides eq → notEq)
     val nnf = KvFilters.toNNF(Not(And(EqualTo("l_returnflag", "R"), EqualTo("l_linestatus", "F"))))
     assert(nnf == Or(Not(EqualTo("l_returnflag", "R")), Not(EqualTo("l_linestatus", "F"))))
@@ -223,7 +223,7 @@ class KvSourceSpec extends SparkSpec {
     // 100 rows / 30-row flushes from one task → 4 part files
     val files = ParquetIO.listFiles(dir)
     assert(files.length == 4, s"expected 4 rolled files, got ${files.map(_.getName)}")
-    assert(files.forall(f => ParquetIO.rowCount(f) <= 30))
+    assert(files.forall(f => ParquetIO.footer(f).rowCount <= 30))
     val got = spark.read.format("kv").option("path", dir).load()
       .orderBy("k").as[(Long, String)].collect().toSeq
     assert(got == (0 until 100).map(i => (i.toLong, s"v$i")))

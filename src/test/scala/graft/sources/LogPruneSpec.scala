@@ -89,7 +89,7 @@ class LogPruneSpec extends SparkSpec {
       w.write(ParquetIO.rowToGroup(row, schema, mt))
     }
     w.close()
-    assert(ParquetIO.footerInfo(file).length >= 4) // sorted ids → tight group stats
+    assert(ParquetIO.footer(file).groups.length >= 4) // sorted ids → tight group stats
     val vec = spark.read.format("log").option("path", dir).load()
       .filter(col("id") >= 900L)
     val plan = planOf(vec)

@@ -50,11 +50,11 @@ class LogSeekSpec extends SparkSpec {
   }
 
   test("fixture file has several row groups") {
-    assert(ParquetIO.footerInfo(shardFile).length >= 4)
+    assert(ParquetIO.footer(shardFile).groups.length >= 4)
   }
 
   test("readFile(skipRowGroups=k) starts at group k's first row") {
-    val groups = ParquetIO.footerInfo(shardFile)
+    val groups = ParquetIO.footer(shardFile).groups
     val cum = groups.scanLeft(0L)(_ + _.rowCount)
     val k = groups.length / 2
     val it = ParquetIO.readFile(shardFile, schema, skipRowGroups = k)
@@ -66,7 +66,7 @@ class LogSeekSpec extends SparkSpec {
   }
 
   test("mid-file offset plans a seek, not a prefix re-scan") {
-    val groups = ParquetIO.footerInfo(shardFile)
+    val groups = ParquetIO.footer(shardFile).groups
     val cum = groups.scanLeft(0L)(_ + _.rowCount)
     val total = cum.last
     val from = total / 2
@@ -83,7 +83,7 @@ class LogSeekSpec extends SparkSpec {
   }
 
   test("tiny targetBytes splits a shard into contiguous disjoint group partitions") {
-    val groups = ParquetIO.footerInfo(shardFile)
+    val groups = ParquetIO.footer(shardFile).groups
     val cum = groups.scanLeft(0L)(_ + _.rowCount)
     val total = cum.last
     val (len, mtime) = fileStatus
@@ -96,7 +96,7 @@ class LogSeekSpec extends SparkSpec {
   }
 
   test("sub-range clamps to [from, to) across group boundaries") {
-    val groups = ParquetIO.footerInfo(shardFile)
+    val groups = ParquetIO.footer(shardFile).groups
     val cum = groups.scanLeft(0L)(_ + _.rowCount)
     val total = cum.last
     val (from, to) = (total / 3, 2 * total / 3)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftSession
 
 /** Benchmark main — driver contract: one JSON line with per-query
   * wall-clock seconds on SPARK_GRAFT_SF_DIR.
@@ -14,26 +14,19 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tuneForGates(spark)
+    val spark = GraftSession.build(s"local[$cpus]")
 
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+    // timed: build + execute on the gate's clone; the clone is made and
+    // the gate's caches released outside the timed region
+    def run(name: String): Double =
+      try GraftSession.runGate(spark) { s =>
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(s, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
+        -1.0
       }
-      (System.nanoTime() - t0) / 1e9
-    }
 
     run("q1_pricing_summary") // warmup (unmeasured)
     // Streaming-JIT warmup (round-8 protocol, BASELINE.md): the FIRST

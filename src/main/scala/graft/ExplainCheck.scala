@@ -1,18 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.GraftSession
 object ExplainCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.build("local[8]")
     spark.sparkContext.setLogLevel("ERROR")
-    Tables.tuneForGates(spark)
     val dir = "/root/testdata/sf0.01"
+    def gate[T](q: String)(f: DataFrame => T): T =
+      GraftSession.runGate(spark)(s => f(SparkEntry.queries(q)(s, dir)))
     // Batch probes inspect the AQE FINAL plan (round-8 fix): stringifying
     // an un-executed AdaptiveSparkPlan shows the initial tree with zero
     // WholeStageCodegen spans — execute first, then read what actually ran.
-    def finalPlanString(df: org.apache.spark.sql.DataFrame): String = {
+    def finalPlanString(df: DataFrame): String = {
       // execute THIS queryExecution distributed-only (df.write would
       // execute a clone and leave this one un-finalized)
       df.queryExecution.executedPlan.execute().foreach(_ => ())
@@ -23,7 +22,7 @@ object ExplainCheck {
       }
     }
     for (q <- Seq("q6_revenue_forecast", "q5_region_revenue", "q3_shipping_priority", "q_kv_scan")) {
-      val plan = finalPlanString(SparkEntry.queries(q)(spark, dir))
+      val plan = gate(q)(finalPlanString)
       println(s"=== $q === (AQE final plan)")
       println("  pushed: " + plan.linesIterator.filter(_.contains("PushedFilters")).map(_.trim.take(150)).mkString(" | "))
       println("  broadcast joins: " + plan.linesIterator.count(_.contains("BroadcastHashJoin")))
@@ -45,7 +44,7 @@ object ExplainCheck {
         "q_ann_pca3", "q_ann_ivfpq_residual", "q_ann_ivf_cosine",
         "q_ann_binary", "q_ann_binary_ivf",
         "q_ann_filtered", "q_ann_filtered_ivf", "q_ann_filtered_post")) {
-      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+      val plan = gate(q)(_.queryExecution.optimizedPlan)
       val windows = plan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window
             if !w.child.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.GlobalLimit]) => w
@@ -55,8 +54,7 @@ object ExplainCheck {
     // search-index mode: satisfied filters leave no post-scan Filter
     // containment dedup: candidate generation must be an equi-join on the
     // rarest shingle — no cartesian product, no window over the corpus
-    val cPlan = SparkEntry.queries("q_dedup_containment")(spark, dir)
-      .queryExecution.optimizedPlan
+    val cPlan = gate("q_dedup_containment")(_.queryExecution.optimizedPlan)
     val cart = cPlan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join if j.condition.isEmpty => j
     }
@@ -69,7 +67,7 @@ object ExplainCheck {
     // corpus-side shuffle for scoring); bloom decontamination must keep
     // every corpus-touching join a broadcast
     for (q <- Seq("q_dsir_resample", "q_doc_decontaminate_bloom")) {
-      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+      val plan = gate(q)(_.queryExecution.executedPlan.toString)
       println(s"=== $q === sortmerge joins: " +
         plan.linesIterator.count(_.contains("SortMergeJoin")) +
         " on the corpus path (bucket-histogram SMJ is <=buckets rows), broadcasts: " +
@@ -84,7 +82,7 @@ object ExplainCheck {
     println("=== chunkDocuments === exchanges: " +
       chunkPlan.linesIterator.count(_.contains("Exchange")) + " (want 0)")
     for (q <- Seq("q_doc_vocab_topk", "q_doc_bigram_surprisal")) {
-      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+      val plan = gate(q)(_.queryExecution.optimizedPlan)
       val wins = plan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
       }
@@ -93,8 +91,7 @@ object ExplainCheck {
 
     // span dedup: duplicated-window detection is groupBy + hot-set join —
     // no window functions anywhere, no cartesian joins
-    val sPlan = SparkEntry.queries("q_doc_dedup_spans")(spark, dir)
-      .queryExecution.optimizedPlan
+    val sPlan = gate("q_doc_dedup_spans")(_.queryExecution.optimizedPlan)
     val sWin = sPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }
@@ -121,7 +118,7 @@ object ExplainCheck {
     // as-of family: every direction exactly one hash Exchange
     for ((nm, q) <- Seq(("asof_backward", "q_events_asof"),
         ("asof_forward", "q_events_asof_fwd"), ("asof_nearest", "q_events_asof_near"))) {
-      val p = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+      val p = gate(q)(_.queryExecution.executedPlan.toString)
       println(s"=== $nm === hash exchanges: " +
         p.linesIterator.count(_.contains("Exchange hashpartitioning")) + " (want 1)")
     }
@@ -129,7 +126,7 @@ object ExplainCheck {
     // round-7 additions: retrieval/mining plans keep every corpus join a
     // broadcast and never window; fuzzy join must stay an equi-join
     for (q <- Seq("q_doc_bm25", "q_ann_sq8", "q_embed_margin_mine", "q_embed_mmr")) {
-      val p = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+      val p = gate(q)(_.queryExecution.executedPlan.toString)
       println(s"=== $q === sortmerge joins: " +
         p.linesIterator.count(_.contains("SortMergeJoin")) +
         " (want 0), windows: " + p.linesIterator.count(_.contains("Window")) +
@@ -137,8 +134,7 @@ object ExplainCheck {
         p.linesIterator.count(_.contains("BroadcastExchange")))
     }
     {
-      val p = SparkEntry.queries("q_fuzzy_join")(spark, dir)
-        .queryExecution.executedPlan.toString
+      val p = gate("q_fuzzy_join")(_.queryExecution.executedPlan.toString)
       println("=== q_fuzzy_join === cartesian/BNLJ: " +
         p.linesIterator.count(l => l.contains("CartesianProduct") ||
           l.contains("BroadcastNestedLoopJoin")) + " (want 0)")
@@ -147,7 +143,7 @@ object ExplainCheck {
     // round-7 fourth wave: cascades broadcast their shortlists; drift and
     // pagerank shuffle only keyed aggregates; time travel keeps pushdown
     for (q <- Seq("q_ann_ivfpq_refine", "q_pipeline_rerank")) {
-      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+      val plan = gate(q)(_.queryExecution.executedPlan)
       // tree-collect (the PlanInvariantSpec semantics): windows inside the
       // CACHED k-means training chain don't count — the candidate path
       // itself must have none
@@ -160,15 +156,14 @@ object ExplainCheck {
         p.linesIterator.count(_.contains("SortMergeJoin")))
     }
     for (q <- Seq("q_corpus_drift", "q_graph_pagerank", "q_pipeline_ccnet")) {
-      val p = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+      val p = gate(q)(_.queryExecution.executedPlan.toString)
       println(s"=== $q === windows: " +
         p.linesIterator.count(_.contains("WindowExec")) +
         ", cartesian/BNLJ (non-broadcast-hinted): " +
         p.linesIterator.count(_.contains("CartesianProduct")) + " (want 0)")
     }
     {
-      val p = SparkEntry.queries("q_kv_time_travel")(spark, dir)
-        .queryExecution.executedPlan.toString
+      val p = gate("q_kv_time_travel")(_.queryExecution.executedPlan.toString)
       println("=== q_kv_time_travel === snapshot scan pushes filters: " +
         p.contains("PushedFilters") + ", footer-agg pushdown (want false under snapshot): " +
         p.contains("PushedAggregation"))
@@ -181,8 +176,7 @@ object ExplainCheck {
     // joins at BUILD time — corpus-sized columnar assembly, the same
     // accepted shape as q_ann_ivfpq_refine's keyed-aggregate SMJs.)
     {
-      val plan = SparkEntry.queries("q_ann_ivfpq_residual_indexed")(spark, dir)
-        .queryExecution.executedPlan
+      val plan = gate("q_ann_ivfpq_residual_indexed")(_.queryExecution.executedPlan)
       val p = plan.toString
       println("=== q_ann_ivfpq_residual_indexed (search path) === sortmerge joins: " +
         p.linesIterator.count(_.contains("SortMergeJoin")) +
@@ -217,14 +211,10 @@ object ExplainCheck {
         .write.format("kv").option("path", b).mode("overwrite").save()
       graft.operators.KvMerge.bucketize(spark, a, 8, Seq("k"))
       graft.operators.KvMerge.bucketize(spark, b, 8, Seq("k"))
-      // restore the PRIOR threshold, not a hardcoded default
-      val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val p =
-        try spark.read.table(s"kvcat.`$a`")
-          .join(spark.read.table(s"kvcat.`$b`"), "k")
-          .queryExecution.executedPlan.toString
-        finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      val noBc = GraftSession.clone(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      val p = noBc.read.table(s"kvcat.`$a`")
+        .join(noBc.read.table(s"kvcat.`$b`"), "k")
+        .queryExecution.executedPlan.toString
       println("=== kv bucketed join (SPJ) === exchanges: " +
         p.linesIterator.count(_.contains("Exchange")) + " (want 0)")
     }
@@ -265,18 +255,15 @@ object ExplainCheck {
       val edges = spark.range(500).selectExpr("id % 97 AS src", "(id * 7 + 1) % 97 AS dst")
       val path = java.nio.file.Files.createTempDirectory("explainpr").toString + "/edges"
       graft.operators.GraphRank.prepareEdgesBucketed(spark, edges, "src", "dst", path, 4)
-      val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val p = try {
-        val ewd = spark.read.table(s"kvcat.`$path`")
-        val ranks = ewd.select(col("src").as("id")).distinct()
-          .withColumn("rank_micro", lit(1000000L))
-        ranks.select(col("id").as("src"), col("rank_micro"))
-          .join(ewd, "src")
-          .selectExpr("dst AS id", "rank_micro DIV outdeg AS c")
-          .groupBy(col("id")).agg(sum(col("c")).as("inflow"))
-          .queryExecution.executedPlan.toString
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      val noBc = GraftSession.clone(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      val ewd = noBc.read.table(s"kvcat.`$path`")
+      val ranks = ewd.select(col("src").as("id")).distinct()
+        .withColumn("rank_micro", lit(1000000L))
+      val p = ranks.select(col("id").as("src"), col("rank_micro"))
+        .join(ewd, "src")
+        .selectExpr("dst AS id", "rank_micro DIV outdeg AS c")
+        .groupBy(col("id")).agg(sum(col("c")).as("inflow"))
+        .queryExecution.executedPlan.toString
       println("=== bucketed pagerank iteration === exchanges: " +
         p.linesIterator.count(_.contains("Exchange hashpartitioning")) +
         " (want <=2, rank-side only — the edge scan side has none)")
@@ -288,14 +275,12 @@ object ExplainCheck {
     // and the CMS estimate must reach the heavy-hitter rows as a
     // one-row broadcast, never a shuffle.
     {
-      val hplan = finalPlanString(
-        SparkEntry.queries("q_corpus_hll")(spark, dir))
+      val hplan = gate("q_corpus_hll")(finalPlanString)
       println("=== q_corpus_hll === partial ObjectHashAggregates: " +
         hplan.linesIterator.count(l =>
           l.contains("ObjectHashAggregate") && l.contains("partial")) +
         " (want >=1 — register merge happens map-side)")
-      val cplan = finalPlanString(
-        SparkEntry.queries("q_doc_cms_tokens")(spark, dir))
+      val cplan = gate("q_doc_cms_tokens")(finalPlanString)
       println("=== q_doc_cms_tokens === sketch broadcasts: " +
         cplan.linesIterator.count(l => l.contains("BroadcastNestedLoopJoin")
           || l.contains("BroadcastExchange")) +
@@ -307,8 +292,7 @@ object ExplainCheck {
     // shuffle must carry <= k (value, count) pairs per partition per
     // group (partial ObjectHashAggregate), never the raw values.
     {
-      val kplan = finalPlanString(
-        SparkEntry.queries("q_events_kll_quantiles")(spark, dir))
+      val kplan = gate("q_events_kll_quantiles")(finalPlanString)
       println("=== q_events_kll_quantiles === partial ObjectHashAggregates: " +
         kplan.linesIterator.count(l =>
           l.contains("ObjectHashAggregate") && l.contains("partial")) +
@@ -422,8 +406,7 @@ object ExplainCheck {
       println("=== sketch-budget planning subplan === raw-corpus parquet scans: " +
         pplan.linesIterator.count(l => l.contains("documents.parquet")) +
         " (want 0 — keep-rates derive from stored HLL rows alone)")
-      val gplan = finalPlanString(
-        SparkEntry.queries("q_sample_sketch_budget")(spark, dir))
+      val gplan = gate("q_sample_sketch_budget")(finalPlanString)
       println("=== q_sample_sketch_budget === plan-side broadcasts: " +
         gplan.linesIterator.count(_.contains("BroadcastExchange")) +
         " (want >=1 — the 5-row threshold table); sortmerge joins: " +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftSession
 
 /** Dump `.explain("formatted")` for named gates to files — the
   * before/after plan evidence for optimization rounds:
@@ -17,20 +17,12 @@ object PlanDump {
     val suffix = args(2)
     val names = args(3).split(",").toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
-    Tables.tuneForGates(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, dir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = GraftSession.runGate(spark)(s => SparkEntry.queries(n)(s, dir)
+        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$out/${n}_$suffix.txt"), plan)
       val exchanges = plan.linesIterator.count(_.contains("Exchange"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftSession
 
 /** Scale-trend evidence: run the headline operator families at two
   * fixture scales (sf0.01 → sf0.1, a 10× data ratio) and assert
@@ -40,15 +40,7 @@ object ScaleTrend {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tuneForGates(spark)
+    val spark = GraftSession.build(s"local[$cpus]")
 
     val small = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.01")
     val large = sys.env.getOrElse("SPARK_GRAFT_SF_LARGE", "/root/testdata/sf0.1")
@@ -57,10 +49,9 @@ object ScaleTrend {
     val floorSec = 0.3
     val runs = sys.env.getOrElse("SPARK_GRAFT_TREND_RUNS", "3").toInt
 
-    def run(name: String, dir: String): Double = {
+    def run(name: String, dir: String): Double = GraftSession.runGate(spark) { s =>
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
+      SparkEntry.queries(name)(s, dir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
     def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)

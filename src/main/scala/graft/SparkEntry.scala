@@ -9,7 +9,9 @@ import graft.queries._
   * `queries` is the checkable operator inventory: one entry per implemented
   * operator from SURVEY.md §2 (+ the training-data-pipeline extensions);
   * `oracleSql` holds the DuckDB-equivalent SQL for every entry that is
-  * ANSI-expressible (the rest get a rows-only check).
+  * ANSI-expressible (the rest get a rows-only check). Run a gate through
+  * `GraftSession.runGate`, which gives it its own session clone and
+  * releases its caches once it has executed.
   */
 object SparkEntry {
 
@@ -24,16 +26,6 @@ object SparkEntry {
       VectorQueries.defs ++ PipelineQueries.defs ++ SourceQueries.defs ++
       CurationQueries.defs ++
       SqlCorpus.defs ++ SqlCorpusB.defs ++ SqlCorpusC.defs ++ SqlCorpusD.defs)
-      .view.mapValues { fn =>
-        (s: SparkSession, d: String) => {
-          // Gate boundary: gates build + execute strictly sequentially, so
-          // the previous gate's registered model/corpus caches have no
-          // readers left — release them here (r14 verdict #1: persisted
-          // entries must not outlive their gate or warm a rerun's median).
-          graft.operators.SessionCaches.releaseAll()
-          fn(s, d)
-        }
-      }.toMap
 
   def oracleSql: Map[String, String] =
     Relational.oracles ++ EventsQueries.oracles ++ TextQueries.oracles ++

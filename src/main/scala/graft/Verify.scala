@@ -1,44 +1,40 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.graftshim.GraftSession
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  *  - `Verify <sfDir> <outDir>`: every gate;
+  *  - `Verify <sfDir> <outDir> <prefix,prefix,...>`: only the gates (and
+  *    oracles) whose name starts with one of the prefixes;
+  *  - `Verify <outDir>`: oracle_sql.json alone, without Spark — re-check
+  *    edited oracle SQL against an existing dump.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tuneForGates(spark)
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val (sfDir, outDir, prefixes) = args match {
+      case Array(out) => (None, out, Seq.empty[String])
+      case Array(sf, out) => (Some(sf), out, Seq.empty[String])
+      case Array(sf, out, p) => (Some(sf), out, p.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    def selected(name: String): Boolean = prefixes.isEmpty || prefixes.exists(name.startsWith)
+    new java.io.File(outDir).mkdirs()
+    sfDir.foreach { dir =>
+      val spark = GraftSession.build(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
+        try GraftSession.runGate(spark) { s =>
+          fn(s, dir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
+      }
+      spark.stop()
+    }
+    val oracles = SparkEntry.oracleSql.filter(o => selected(o._1))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      JsonMethods.compact(JObject(oracles.toList.map { case (k, v) => k -> JString(v) })))
+    println(s"[verify] wrote ${oracles.size} oracle entries")
   }
 }

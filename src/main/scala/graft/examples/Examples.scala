@@ -1,7 +1,7 @@
 package graft.examples
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftSession
 import org.apache.spark.sql.functions._
 import graft.sources.cdc.Cdc
 
@@ -16,11 +16,7 @@ import graft.sources.cdc.Cdc
   */
 object StreamingWindowAggExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-window-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("local[4]")
     import spark.implicits._
 
     // stage one shard of events into a log-store directory
@@ -52,11 +48,7 @@ object StreamingWindowAggExample {
   */
 object CdcMergeExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-cdc-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("local[4]")
     import spark.implicits._
 
     val changelog = Files.createTempDirectory("example-cdc").toString
@@ -93,11 +85,7 @@ object CdcMergeExample {
   */
 object SqlStreamingJobExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-sql-streaming-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("local[4]")
     import spark.implicits._
 
     val src = Files.createTempDirectory("example-sql-src").toString
@@ -131,11 +119,7 @@ object SqlStreamingJobExample {
   */
 object SearchIndexExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-search-index-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("local[4]")
     import spark.implicits._
 
     val dir = Files.createTempDirectory("example-idx").toString + "/t"
@@ -165,11 +149,7 @@ object SearchIndexExample {
   */
 object CurationPipelineExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-curation-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("local[4]")
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
 
     import graft.functions.TextFunctions

@@ -173,7 +173,6 @@ object Dedup {
     // store is bucketized, which is the documented SPJ maintenance payoff
     val seen =
       if (graft.sources.ParquetIO.listFilesStatus(storeDir).nonEmpty) {
-        graft.Tables.tuneForGates(s)
         s.read.table(s"kvcat.`$storeDir`").select(col("fp"))
       } else s.range(0).select(col("id").as("fp"))
     val kept = dropSeenDuplicates(batch, seen, textCol, idCol)
@@ -296,7 +295,6 @@ object Dedup {
       if (graft.sources.ParquetIO.listFilesStatus(indexDir).isEmpty)
         sigs.select(col("__bid")).limit(0)
       else {
-        graft.Tables.tuneForGates(s)
         val store = s.read.table(s"kvcat.`$indexDir`")
         val bandedStore = store.select(col("id"),
           posexplode(Sketches.minhashBands(col("sig"), bands)).as(Seq("band", "key")))
@@ -950,7 +948,6 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, pairs: DataFrame,
       workDir: String, numBuckets: Int = 16, aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = 20): DataFrame = {
-    graft.Tables.tuneForGates(spark) // kvcat + v2 bucketing confs
     graft.sources.ParquetIO.deletePath(workDir)
     pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))

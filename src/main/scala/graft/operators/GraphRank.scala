@@ -115,7 +115,6 @@ object GraphRank {
       s"iterations must be in [1, 16], got $iterations")
     require(dampingPct >= 1 && dampingPct <= 99,
       s"dampingPct must be in [1, 99], got $dampingPct")
-    graft.Tables.tuneForGates(spark) // kvcat + v2 bucketing confs
     val ewd = spark.read.table(s"kvcat.`$path`") // (src, dst, outdeg), bucket(src)
     val nodes = ewd.select(col("src").as("id"))
       .union(ewd.select(col("dst").as("id"))).distinct().persist(MEMORY_AND_DISK)

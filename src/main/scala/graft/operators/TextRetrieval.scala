@@ -252,7 +252,6 @@ object TextRetrieval {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, queryIdCol: String, queryTextCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    graft.Tables.tuneForGates(spark)
     val postings = spark.read.table(s"kvcat.`$dir/postings`")
     // marker absent ⇒ a maintenance op crashed mid-rebuild: derive
     // df/stats from postings (source of truth) instead of reading the

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.graftshim.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -2516,33 +2517,31 @@ object PipelineQueries {
       val u = java.util.UUID.randomUUID().toString.replace("-", "")
       val pa = s"/tmp/graft_jsynswa_$u/t"
       val ckpt = s"/tmp/graft_jsynswck_$u"
-      Tables.withMicroBatchConf(s) {
-        val q = s.readStream.format("log")
-          .option("path", s"$dir/events.parquet")
-          .option("maxOffsetsPerTrigger", "2500").load()
-          .withColumn("ts", col("ts").cast("timestamp"))
-          .withColumn("w_start",
-            unix_timestamp(window(col("ts"), "21600 seconds")("start")))
-          .writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            // ONE action per micro-batch: both sides' per-(window, key)
-            // synopsis rows built in a single grouped pass (event_type is
-            // a keep dimension — a grouped bottom-k over the
-            // type-partitioned rows IS the filtered build, row for row),
-            // replacing the isEmpty probe + two filtered writes (3 jobs →
-            // 1). coalesce(1) keeps the per-batch append at one part file.
-            SampleSynopsis.joinKeySynopsisRows(
-              df.filter(col("event_type").isin("view", "purchase")),
-              "user_id", 8, keep = Seq("w_start", "event_type"))
-              .coalesce(1)
-              .write.format("kv").option("path", pa).mode("append").save()
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val q = GraftSession.clone(s, GraftSession.MicroBatch: _*).readStream.format("log")
+        .option("path", s"$dir/events.parquet")
+        .option("maxOffsetsPerTrigger", "2500").load()
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withColumn("w_start",
+          unix_timestamp(window(col("ts"), "21600 seconds")("start")))
+        .writeStream
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          // ONE action per micro-batch: both sides' per-(window, key)
+          // synopsis rows built in a single grouped pass (event_type is
+          // a keep dimension — a grouped bottom-k over the
+          // type-partitioned rows IS the filtered build, row for row),
+          // replacing the isEmpty probe + two filtered writes (3 jobs →
+          // 1). coalesce(1) keeps the per-batch append at one part file.
+          SampleSynopsis.joinKeySynopsisRows(
+            df.filter(col("event_type").isin("view", "purchase")),
+            "user_id", 8, keep = Seq("w_start", "event_type"))
+            .coalesce(1)
+            .write.format("kv").option("path", pa).mode("append").save()
+          ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
       def rolled(t: String) = SampleSynopsis.rollupJoinSynopsis(
         s.read.format("kv").option("path", pa).load()
           .filter(col("event_type") === t)
@@ -2667,29 +2666,27 @@ object PipelineQueries {
       val u = java.util.UUID.randomUUID().toString.replace("-", "")
       val pa = s"/tmp/graft_jsynsa_$u/t"
       val ckpt = s"/tmp/graft_jsynsck_$u"
-      Tables.withMicroBatchConf(s) {
-        val q = s.readStream.format("log")
-          .option("path", s"$dir/events.parquet")
-          .option("maxOffsetsPerTrigger", "2500").load()
-          .writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            // ONE action per micro-batch (was 3: isEmpty + two filtered
-            // writes): both sides' synopsis rows in a single grouped pass
-            // with event_type as a keep dimension — the grouped bottom-k
-            // over type-partitioned rows IS the per-type filtered build,
-            // row for row. coalesce(1) = one part file per batch.
-            SampleSynopsis.joinKeySynopsisRows(
-              df.filter(col("event_type").isin("view", "purchase")),
-              "user_id", 64, keep = Seq("event_type"))
-              .coalesce(1)
-              .write.format("kv").option("path", pa).mode("append").save()
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val q = GraftSession.clone(s, GraftSession.MicroBatch: _*).readStream.format("log")
+        .option("path", s"$dir/events.parquet")
+        .option("maxOffsetsPerTrigger", "2500").load()
+        .writeStream
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          // ONE action per micro-batch (was 3: isEmpty + two filtered
+          // writes): both sides' synopsis rows in a single grouped pass
+          // with event_type as a keep dimension — the grouped bottom-k
+          // over type-partitioned rows IS the per-type filtered build,
+          // row for row. coalesce(1) = one part file per batch.
+          SampleSynopsis.joinKeySynopsisRows(
+            df.filter(col("event_type").isin("view", "purchase")),
+            "user_id", 64, keep = Seq("event_type"))
+            .coalesce(1)
+            .write.format("kv").option("path", pa).mode("append").save()
+          ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
       def rolled(t: String) = SampleSynopsis.rollupJoinSynopsis(
         s.read.format("kv").option("path", pa).load()
           .filter(col("event_type") === t).select("h", "key", "cnt"), 64)

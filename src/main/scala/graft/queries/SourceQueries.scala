@@ -258,7 +258,6 @@ object SourceQueries {
       import org.apache.spark.sql.types._
       import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
       import org.apache.spark.unsafe.types.UTF8String
-      graft.Tables.tuneForGates(s)
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val root = s"/tmp/graft_mret$safe"
       ParquetIO.deletePath(root)
@@ -349,7 +348,6 @@ object SourceQueries {
     // columns, three-valued WHERE semantics — the oracle applies the
     // same update as plain SQL. Exact double addition (engine-stable).
     "q_kv_update_sql" -> ((s, dir) => {
-      graft.Tables.tuneForGates(s)
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_updsql$safe"
       ParquetIO.deletePath(staged)
@@ -372,7 +370,6 @@ object SourceQueries {
     // Assignment arithmetic is an exact double ADDITION (bit-identical
     // across engines — no round() on halves).
     "q_kv_merge_into" -> ((s, dir) => {
-      graft.Tables.tuneForGates(s)
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_mergeinto$safe"
       ParquetIO.deletePath(staged)
@@ -461,7 +458,6 @@ object SourceQueries {
     // surface, append rows that carry it — pre-evolution rows read as
     // NULL (the sparse-attribute read path), appended rows carry values.
     "q_kv_add_column" -> ((s, dir) => {
-      graft.Tables.tuneForGates(s) // kvcat catalog
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_addcol$safe"
       ParquetIO.deletePath(staged)
@@ -489,7 +485,6 @@ object SourceQueries {
     // the catalog must withdraw the layout on widening (row-preserving
     // join, so the oracle is the plain table scan).
     "q_kv_widen_column" -> ((s, dir) => {
-      graft.Tables.tuneForGates(s) // kvcat catalog + SPJ confs
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_widen$safe"
       ParquetIO.deletePath(staged)
@@ -530,7 +525,6 @@ object SourceQueries {
     // final read filters through the renamed column — mixed physical
     // layouts, so the predicate stays residual and Spark re-applies.
     "q_kv_drop_rename_column" -> ((s, dir) => {
-      graft.Tables.tuneForGates(s) // kvcat catalog
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_evolve$safe"
       ParquetIO.deletePath(staged)
@@ -731,7 +725,6 @@ object SourceQueries {
           .write.format("kv").option("path", custT).mode("overwrite").save()
         graft.operators.KvMerge.bucketize(s, custT, 8, Seq("custkey"))
       }
-      graft.Tables.tuneForGates(s)
       s.read.table(s"kvcat.`$ordersT`")
         .join(s.read.table(s"kvcat.`$custT`"), "custkey")
         .groupBy(col("c_mktsegment"))
@@ -827,7 +820,6 @@ object SourceQueries {
     // file-granular copy-on-write rewrite. Same oracle as
     // q_cdc_merge_read: three physical apply strategies, one algebra.
     "q_cdc_merge_sql" -> ((s, dir) => {
-      graft.Tables.tuneForGates(s)
       val logDir = cdcLogDir(s, dir)
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_cdcsql$safe"
@@ -870,7 +862,6 @@ object SourceQueries {
     // into the EMPTY base (schema staged via a zero-row write), epochs
     // 2-3 update/delete; same oracle algebra as the other apply paths.
     "q_cdc_stream_merge" -> ((s, dir) => {
-      graft.Tables.tuneForGates(s)
       val logDir = cdcLogDir(s, dir)
       val u = java.util.UUID.randomUUID().toString.replace("-", "")
       val staged = s"/tmp/graft_cdcstrm_$u"

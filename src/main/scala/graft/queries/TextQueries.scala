@@ -253,11 +253,6 @@ object TextQueries {
       // (storage-partitioned join — KvBuckets; spec-pinned in
       // KvBucketedJoinSpec)
       graft.operators.KvMerge.bucketize(s, store, 8, Seq("fp"))
-      s.conf.set("spark.sql.catalog.kvcat",
-        classOf[graft.sources.kv.KvCatalog].getName)
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
       graft.operators.Dedup.dropSeenDuplicates(
           docs, s.read.table(s"kvcat.`$store`"), "text", "doc_id")
         .select(col("doc_id"), col("source"))

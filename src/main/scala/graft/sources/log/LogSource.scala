@@ -563,6 +563,21 @@ object LogTailCache {
     if (prev != null) scala.util.Try(prev.close()) // replaced duplicate
     ()
   }
+
+  /** Close every parked reader — called once a gate has executed, so no
+    * handle outlives the drain that parked it.
+    */
+  def clearAll(): Unit = {
+    val all = parked.synchronized {
+      val vs = new java.util.ArrayList[AutoCloseable](parked.values())
+      parked.clear()
+      vs
+    }
+    all.forEach(r => scala.util.Try(r.close()))
+  }
+
+  /** Parked-reader count (test hook). */
+  def parkedCount: Int = parked.synchronized(parked.size())
 }
 
 class LogReaderFactory(schema: StructType, raw: Boolean,

@@ -25,9 +25,9 @@ import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String}
   *    joins so stream-stream joins get per-side watermarks, the q40
   *    shape).
   *
-  * Registered via `SparkSessionExtensions` — builder:
-  * {{{ SparkSession.builder().withExtensions(new GraftSqlExtensions) }}}
-  * or config `spark.sql.extensions=graft.streaming.GraftSqlExtensions`.
+  * Registered via `SparkSessionExtensions`, which are builder-time:
+  * `org.apache.spark.sql.graftshim.GraftSession.build` installs them on
+  * the one session graft runs, and its clones inherit them.
   */
 class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
   import GraftSqlExtensions._
@@ -70,10 +70,10 @@ class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
 object GraftSqlExtensions {
 
   /** Register the tumbling/hopping/delay SQL functions into an existing
-    * session (for sessions not built with `withExtensions`). The `delay()`
-    * predicate-to-watermark rewrite runs during analysis only with the
-    * builder-time rule; `GraftSql.runScript` applies it explicitly, so
-    * scripts work on plain sessions either way.
+    * session that was not built with the extensions. The `delay()`
+    * predicate-to-watermark rewrite runs only with the builder-time rule,
+    * so on such a session a `delay()` predicate fails at execution, and
+    * `GraftSql.runScript` refuses the session.
     */
   def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -86,9 +86,8 @@ object GraftSqlExtensions {
       require(exprs.length == 3, "hopping(timeColumn, slide, size)")
       TimeWindow(exprs.head, intervalMicros(exprs(2)), intervalMicros(exprs(1)), 0L)
     }, "scala_udf")
-    // delay() analyzes to a marker; GraftSql.runScript applies
-    // RewriteDelayPredicate on the analyzed INSERT plan, so the full
-    // delay surface works without builder-time extensions too.
+    // delay() analyzes to a marker, which only the builder-time
+    // RewriteDelayPredicate removes.
     reg.createOrReplaceTempFunction("delay", exprs => {
       require(exprs.length == 1, "delay(timeColumn)")
       DelayMarker(exprs.head)

@@ -49,69 +49,30 @@ object StreamingInsert {
   }
 
   /** Run a reference-shaped SQL script: statements split on ';', executed
-    * in order via `spark.sql`; INSERT statements that match the streaming
-    * contract run as streaming queries. Works on any session — with
-    * [[graft.streaming.GraftSqlExtensions]] installed, plain
-    * `spark.sql("INSERT INTO ...")` takes the same rewrite path without
-    * this runner.
+    * in order via `spark.sql` on a [[GraftSession.clone]] of `spark`, so a
+    * script's `SET`s and `USE` end with the script. INSERT statements that
+    * match the streaming contract run as streaming queries: the delay()
+    * → watermark rewrite must run inside the analyzer fixed point (a
+    * watermark inserted after analysis is too late for the event-time
+    * metadata to reach already-resolved windows/joins), so `spark` must
+    * come from [[GraftSession.build]]. Errors propagate — nothing is
+    * swallowed into a silent batch fallback.
     */
-  // One extensions-enabled twin per source session (see runScript).
-  private val twins =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-
-  /** An extensions-enabled twin of the given session, on the same
-    * SparkContext, with the same runtime conf. The delay()→watermark
-    * rewrite MUST run inside the analyzer fixed point — post-analysis
-    * insertion of `EventTimeWatermark` is too late for the event-time
-    * metadata to propagate into already-resolved windows/joins — and
-    * analyzer rules are builder-time, so a plain session gets a twin via
-    * `Builder.create()` (which, unlike getOrCreate, always constructs and
-    * honors withExtensions). The twin has its own catalog: scripts are
-    * self-contained (they CREATE every table they use) and sinks are read
-    * back by path, so isolation is a feature, not a loss.
-    */
-  private def withGraftExtensions(spark: SparkSession): SparkSession =
-    twins.computeIfAbsent(spark, { s =>
-      val cs = s.asInstanceOf[ClassicSparkSession]
-      val prevDefault = SparkSession.getDefaultSession
-      val prevActive = SparkSession.getActiveSession
-      try {
-        val twin = org.apache.spark.sql.classic.SparkSession.builder()
-          .withExtensions(new graft.streaming.GraftSqlExtensions)
-          .create()
-        cs.conf.getAll.foreach { case (k, v) =>
-          try twin.conf.set(k, v) catch { case _: Exception => () } // static confs
-        }
-        twin
-      } finally {
-        prevDefault match {
-          case Some(d) => SparkSession.setDefaultSession(d)
-          case None => SparkSession.clearDefaultSession()
-        }
-        prevActive match {
-          case Some(a) => SparkSession.setActiveSession(a)
-          case None => SparkSession.clearActiveSession()
-        }
-      }
-    })
-
   def runScript(spark: SparkSession, script: String): Unit = {
-    // All statements run on the twin: the resolution rule turns delay()
-    // predicates into watermarks during analysis, and the post-hoc rule
-    // turns INSERT INTO <output.mode sink> FROM <stream> into a streaming
-    // query command, which spark.sql executes eagerly. SETs apply to the
-    // twin's conf, which is also where the INSERTs run. Errors propagate —
-    // nothing is swallowed into a silent batch fallback.
-    val s = withGraftExtensions(spark)
-    graft.streaming.GraftSqlExtensions.registerFunctions(s)
-    script.split(";").map(_.trim).filter(_.nonEmpty).foreach { stmt =>
-      val df = s.sql(stmt)
-      // commands execute eagerly inside spark.sql; force genuine queries
-      // through the cluster without materializing rows on the driver (a
-      // script-terminal SELECT can be arbitrarily big)
-      if (!df.queryExecution.analyzed.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.Command])
-        df.write.format("noop").mode("overwrite").save()
+    require(GraftSession.hasExtensions(spark),
+      "runScript needs a session built by GraftSession.build " +
+        "(graft.streaming.GraftSqlExtensions must be installed at build time)")
+    val s = GraftSession.clone(spark)
+    s.withActive {
+      script.split(";").map(_.trim).filter(_.nonEmpty).foreach { stmt =>
+        val df = s.sql(stmt)
+        // commands execute eagerly inside spark.sql; force genuine queries
+        // through the cluster without materializing rows on the driver (a
+        // script-terminal SELECT can be arbitrarily big)
+        if (!df.queryExecution.analyzed.isInstanceOf[
+            org.apache.spark.sql.catalyst.plans.logical.Command])
+          df.write.format("noop").mode("overwrite").save()
+      }
     }
   }
 

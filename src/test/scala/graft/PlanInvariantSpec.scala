@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.GraftSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
@@ -15,11 +15,9 @@ class PlanInvariantSpec extends SparkSpec {
   private val dir = sf("any")
 
   /** Physical plan with AQE off so the static tree is inspectable. */
-  private def planOf(q: String): SparkPlan = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
+  private def planOf(q: String): SparkPlan =
+    GraftSession.runGate(GraftSession.clone(spark, "spark.sql.adaptive.enabled" -> "false"))(
+      s => SparkEntry.queries(q)(s, dir).queryExecution.executedPlan)
 
   private def subtreeHasAggregate(p: SparkPlan): Boolean =
     p.collectFirst { case a: BaseAggregateExec => a }.isDefined
@@ -97,12 +95,7 @@ class PlanInvariantSpec extends SparkSpec {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    val df: DataFrame = SparkEntry.queries("q_dedup_incremental")(spark, dir)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val plan =
-      try SparkEntry.queries("q_dedup_incremental")(spark, dir)
-        .queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val plan = planOf("q_dedup_incremental")
     // every root→scan path, for each kv store scan in the plan
     def pathsToScans(p: SparkPlan, acc: List[SparkPlan]): Seq[List[SparkPlan]] = p match {
       case b: BatchScanExec if b.scan.isInstanceOf[graft.sources.kv.KvScan] =>
@@ -169,7 +162,6 @@ class PlanInvariantSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    Tables.tuneForGates(spark)
     val edges = (0L until 500L).map(i => (i % 97, (i * 7 + 1) % 97))
       .toDF("src", "dst")
     val path = java.nio.file.Files.createTempDirectory("spjpr").toString + "/edges"

@@ -228,7 +228,6 @@ class KvMergeSpec extends SparkSpec {
   test("SQL DELETE FROM flows through the catalog to the crash-safe rewrite") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.Tables.tuneForGates(spark) // registers the kvcat catalog
     val dir = java.nio.file.Files.createTempDirectory("kvsqldel").toString + "/t"
     (0L until 50L).map(i => (i, s"r$i", i % 5)).toDF("k", "v", "m")
       .write.format("kv").option("path", dir).mode("overwrite").save()
@@ -292,7 +291,6 @@ class KvMergeSpec extends SparkSpec {
 
   test("compactMarkers folds committed rlo transactions: zero markers, identical contents") {
     import graft.sources.ParquetIO
-    graft.Tables.tuneForGates(spark)
     val dir = java.nio.file.Files.createTempDirectory("kvcm").toString + "/t"
     (0 until 4).foreach { i =>
       (0L until 50L).map(k => (i * 100L + k, 1.0)).toDF("k", "v").coalesce(1)

@@ -12,7 +12,6 @@ class KvAlterSpec extends SparkSpec {
   import spark.implicits._
 
   private def stage(): String = {
-    graft.Tables.tuneForGates(spark)
     val dir = java.nio.file.Files.createTempDirectory("kvalter").toString + "/t"
     Seq((1L, "a"), (2L, "b")).toDF("k", "v")
       .write.format("kv").option("path", dir).mode("overwrite").save()
@@ -59,7 +58,6 @@ class KvAlterSpec extends SparkSpec {
   }
 
   test("ALTER COLUMN widening is metadata-only; narrow storage upcasts on read") {
-    graft.Tables.tuneForGates(spark)
     val dir = java.nio.file.Files.createTempDirectory("kvwiden").toString + "/t"
     Seq((1, 1.5f), (2, 2.5f)).toDF("k", "p")
       .write.format("kv").option("path", dir).mode("overwrite").save()
@@ -126,7 +124,6 @@ class KvAlterSpec extends SparkSpec {
   }
 
   test("widening drops a Bloom sidecar built in the old hash domain") {
-    graft.Tables.tuneForGates(spark)
     val dir = java.nio.file.Files.createTempDirectory("kvwbloom").toString + "/t"
     (0 until 4).foreach { i =>
       Seq.tabulate(25)(j => (i * 100 + j, s"r$i-$j")).toDF("k", "v").coalesce(1)
@@ -155,7 +152,6 @@ class KvAlterSpec extends SparkSpec {
     // long/double before comparing (KvIndex.zonesFromStats reads INT32
     // stats as long, FLOAT as double). Pin both so a future change to
     // either normalization trips this instead of shipping.
-    graft.Tables.tuneForGates(spark)
     val dir = java.nio.file.Files.createTempDirectory("kvwsafe").toString + "/t"
     Seq.tabulate(200)(i => (i * 7 % 1000, s"v$i")).toDF("k", "v")
       .write.format("kv").option("path", dir).mode("overwrite").save()

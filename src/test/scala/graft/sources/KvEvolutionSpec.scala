@@ -13,7 +13,6 @@ class KvEvolutionSpec extends SparkSpec {
   import spark.implicits._
 
   private def stage(): String = {
-    graft.Tables.tuneForGates(spark)
     val dir = java.nio.file.Files.createTempDirectory("kvevo").toString + "/t"
     Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "v", "x")
       .write.format("kv").option("path", dir).mode("overwrite").save()

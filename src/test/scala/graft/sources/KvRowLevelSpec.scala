@@ -10,7 +10,6 @@ class KvRowLevelSpec extends SparkSpec {
   import spark.implicits._
 
   private def stage(): String = {
-    graft.Tables.tuneForGates(spark)
     val dir = java.nio.file.Files.createTempDirectory("kvrlo").toString + "/t"
     Seq((1L, 10.0, "a"), (2L, 20.0, "b"), (3L, 30.0, "a"), (4L, 40.0, "c"))
       .toDF("k", "v", "tag")
@@ -60,7 +59,6 @@ class KvRowLevelSpec extends SparkSpec {
     * [i·100, i·100+49]) — the layout where group filtering is provable.
     */
   private def stageFiles(): (String, Map[String, Set[Long]]) = {
-    graft.Tables.tuneForGates(spark)
     val dir = java.nio.file.Files.createTempDirectory("kvrlog").toString + "/t"
     (0 until 4).foreach { i =>
       (0L until 50L).map(k => (i * 100L + k, 1.0, s"f$i")).toDF("k", "v", "tag")

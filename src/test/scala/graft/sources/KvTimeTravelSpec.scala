@@ -104,7 +104,6 @@ class KvTimeTravelSpec extends SparkSpec {
 
   test("row-level ops fold history: snapshots below the rlo watermark fail loudly") {
     val dir = stage()
-    graft.Tables.tuneForGates(spark)
     // a row-level UPDATE rewrites (and deletes) bytes from epoch files —
     // its marker records watermark 2 (the highest committed epoch)
     spark.sql(s"UPDATE kvcat.`$dir` SET v = 'rewritten' WHERE k = 11")

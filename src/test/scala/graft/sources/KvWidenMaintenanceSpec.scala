@@ -31,7 +31,6 @@ class KvWidenMaintenanceSpec extends SparkSpec {
     * wide-typed append — the mixed-physical shape every case reads.
     */
   private def stageMixed(): String = {
-    graft.Tables.tuneForGates(spark)
     val dir = java.nio.file.Files.createTempDirectory("kvwmix").toString + "/t"
     (0 until 4).foreach { i =>
       (0 until 50).filter(_ % 4 == i)
@@ -115,7 +114,6 @@ class KvWidenMaintenanceSpec extends SparkSpec {
   }
 
   test("rebuildIndexes restores Bloom file pruning after widening tombstones it") {
-    graft.Tables.tuneForGates(spark)
     val dir = java.nio.file.Files.createTempDirectory("kvwrebuild").toString + "/t"
     (0 until 8).foreach { i =>
       (0 until 800).filter(_ % 8 == i).map(k => (k, s"v$k")).toDF("k", "v")

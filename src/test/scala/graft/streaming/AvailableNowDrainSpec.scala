@@ -17,8 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    boundary, where global watermark = min over both sides of
   *    (side max event time - side delay).
   *
-  * Also proves `GraftSql.runScript` runs delay()/watermark scripts on a
-  * session built WITHOUT withExtensions (the Verify gate path).
+  * Also proves `GraftSql.runScript` runs delay()/watermark scripts on the
+  * session `GraftSession.build` makes (the Verify gate path).
   */
 class AvailableNowDrainSpec extends AnyFunSuite {
 

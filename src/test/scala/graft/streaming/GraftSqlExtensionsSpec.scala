@@ -5,32 +5,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** U4: TUMBLING / HOPPING / delay SQL spellings. Needs its own session
-  * (extensions are builder-time), so this suite doesn't share SparkSpec's.
+/** U4: TUMBLING / HOPPING / delay SQL spellings, on a clone of the
+  * shared session (which `GraftSession.build` made with the extensions).
   */
 class GraftSqlExtensionsSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    // getOrCreate() would return the shared test session (ignoring
-    // withExtensions) — clear the default/active slots, build a session
-    // with extensions, then restore them for the other suites.
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftSqlExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    prevDefault.foreach(SparkSession.setDefaultSession)
-    prevActive.foreach(SparkSession.setActiveSession)
-    s
-  }
+  private lazy val spark: SparkSession =
+    org.apache.spark.sql.graftshim.GraftSession.clone(graft.SparkSpec.session)
 
   private def eventsDf = {
     import spark.implicits._

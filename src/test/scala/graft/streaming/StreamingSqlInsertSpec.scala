@@ -9,28 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * OPTIONS(..., output.mode), SET query name/checkpoint, INSERT INTO
   * launching a Structured Streaming query — the reference corpus's
   * pure-SQL job shape (`emr-baseline-testing/queries/q3.sql:12-21`).
-  * Needs its own session (extensions are builder-time).
+  * Runs on a clone of the shared session, so its SETs stay in this suite.
   */
 class StreamingSqlInsertSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-sqlins-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftSqlExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    prevDefault.foreach(SparkSession.setDefaultSession)
-    prevActive.foreach(SparkSession.setActiveSession)
-    s
-  }
+  private lazy val spark: SparkSession =
+    org.apache.spark.sql.graftshim.GraftSession.clone(graft.SparkSpec.session)
 
   /** author a log shard directory with (id long, k string, v double). */
   private def writeShard(dir: String, name: String, rows: Seq[(Long, String, Double)]): Unit = {
@@ -99,7 +83,8 @@ class StreamingSqlInsertSpec extends AnyFunSuite {
   }
 
   test("runScript executes a reference-shaped .sql file end-to-end on a plain session") {
-    // the gate path: no extensions needed — the runner intercepts INSERTs
+    // the gate path: a fresh session over the same context — it keeps the
+    // builder-time extensions, and the script runs on its own clone
     val plain = spark.newSession()
     val src = Files.createTempDirectory("sqlins3-src").toString
     val sink = Files.createTempDirectory("sqlins3-sink").toString + "/t"

@@ -3,8 +3,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.graftshim.GraftSession
 import org.json4s.{JObject, JString}
 import org.json4s.jackson.JsonMethods
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** Correctness dump: each SparkEntry.queries result → parquet,
+  * plus oracle_sql.json, for the DuckDB compare in scripts/check_oracle.py.
   *
   *  - `Verify <sfDir> <outDir>`: every gate;
   *  - `Verify <sfDir> <outDir> <prefix,prefix,...>`: only the gates (and

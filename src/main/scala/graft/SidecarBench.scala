@@ -42,9 +42,7 @@ object SidecarBench {
       else sys.props("java.io.tmpdir") + "/graft_sidecar_bench"
     ParquetIO.deletePath(base)
     val rowsPerFile = 1000L
-    val bitsPerKey = 10
-    val numHashes = math.max(1, math.round(bitsPerKey * 0.693).toInt)
-    val numBits = ((rowsPerFile * bitsPerKey + 63) / 64 * 64).toInt
+    val conf = KvBloom.Conf(Seq("k"), bitsPerKey = 10)
     val rnd = new java.util.Random(42)
 
     Seq(1000, 10000).foreach { n =>
@@ -52,21 +50,15 @@ object SidecarBench {
       new Path(dir).getFileSystem(ParquetIO.hadoopConf).mkdirs(new Path(dir))
       val numShards = KvSidecar.numShardsFor(n)
       // synthesize per-file entries exactly as KvBloom.build writes them
-      val bitsB64 = {
-        // one shared filter body is fine — planning cost is parse+decode,
-        // not bit content; keep it deterministic
-        val bytes = new Array[Byte](numBits / 8)
-        rnd.nextBytes(bytes)
-        java.util.Base64.getEncoder.encodeToString(bytes)
-      }
-      def entryJson: String =
-        s"""{"cols":{"k":{"bits":"$bitsB64","numBits":$numBits,"numHashes":$numHashes}}}"""
+      // one shared filter body is fine — planning cost is parse+decode,
+      // not bit content; keep it deterministic
+      val bytes = new Array[Byte](conf.width(rowsPerFile) / 8)
+      rnd.nextBytes(bytes)
+      val entryJson = conf.entry(rowsPerFile)(_ => bytes)
       val files = (0 until n).map { i =>
         (f"part-$i%05d-bench.parquet", 1000L + i, 1700000000000L + i)
       }
-      val meta: JValue = JObject("numShards" -> JInt(numShards),
-        "columns" -> JArray(List(JString("k"))), "numHashes" -> JInt(numHashes))
-      KvSidecar.publish(dir, KvBloom.SidecarName, meta) { tmp =>
+      KvSidecar.publish(dir, KvBloom.SidecarName, conf.meta(numShards)) { tmp =>
         val fs = tmp.getFileSystem(ParquetIO.hadoopConf)
         KvSidecar.stageEntries(fs, tmp, numShards,
           files.iterator.map { case (f, len, mt) => (f, len, mt, entryJson) })

@@ -262,25 +262,14 @@ object KvMerge {
   private def rebuildFromMetas(spark: SparkSession, path: String,
       bloomMeta: Option[org.json4s.JValue],
       zoneMeta: Option[org.json4s.JValue]): Seq[String] = {
-    import org.json4s._
     val rebuilt = scala.collection.mutable.ArrayBuffer.empty[String]
-    def cols(meta: JValue): Seq[String] = (meta \ "columns") match {
-      case JArray(cs) => cs.collect { case JString(c) => c }
-      case _ => Nil
-    }
-    bloomMeta.foreach { meta =>
-      val cs = cols(meta)
-      if (cs.nonEmpty) {
-        val bpk = (meta \ "bitsPerKey") match {
-          case JInt(b) => b.toInt
-          case _ => 10 // pre-tombstone metas recorded no bitsPerKey
-        }
-        graft.sources.kv.KvBloom.build(spark, path, cs, bpk)
-        rebuilt += graft.sources.kv.KvBloom.SidecarName
-      }
+    // pre-tombstone metas recorded no bitsPerKey: Conf.of defaults it
+    bloomMeta.flatMap(graft.sources.kv.KvBloom.Conf.of).foreach { conf =>
+      graft.sources.kv.KvBloom.build(spark, path, conf.cols, conf.bitsPerKey)
+      rebuilt += graft.sources.kv.KvBloom.SidecarName
     }
     zoneMeta.foreach { meta =>
-      val cs = cols(meta)
+      val cs = graft.sources.kv.KvSidecar.columnsOf(meta)
       if (cs.nonEmpty) {
         graft.sources.kv.KvIndex.build(path, cs)
         rebuilt += graft.sources.kv.KvIndex.SidecarName

@@ -424,9 +424,11 @@ object SourceQueries {
         .orderBy(col("o_orderkey"))
     }),
 
-    // Incremental Bloom maintenance: build covers wave 1, KvBloom.append
-    // hashes ONLY wave 2's rows (the maintenance.files allowlist scan —
-    // KvBloomSpec pins shard reuse and pruning). Point lookups straddle
+    // Incremental Bloom maintenance: build covers wave 1; wave 2's kv
+    // write lands in the live sidecar at its own commit, so
+    // KvBloom.append finds it covered (append hashes files from other
+    // writers through the maintenance.files allowlist scan — KvBloomSpec
+    // and KvWriterSidecarSpec pin both paths). Point lookups straddle
     // both waves through the merged sidecar; a merge hole loses rows
     // against the oracle.
     "q_kv_bloom_append" -> ((s, dir) => {
@@ -664,10 +666,11 @@ object SourceQueries {
     }),
 
     // Incremental zone-map maintenance: build on the first wave of
-    // files, append a second wave, KvIndex.append folds ONLY the new
-    // files in (footer I/O O(new); KvIndexSpec pins the shard reuse and
-    // coverage). The gate queries ACROSS both waves through the merged
-    // index — any hole in the merge loses rows against the oracle.
+    // files; the second wave's kv write folds ONLY its new files in at
+    // commit, so KvIndex.append finds them covered (footer I/O O(new);
+    // KvIndexSpec pins append's shard reuse and coverage for files from
+    // other writers). The gate queries ACROSS both waves through the
+    // merged index — any hole in the merge loses rows against the oracle.
     "q_kv_index_append" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_idxapp$safe"
@@ -1020,12 +1023,13 @@ object SourceQueries {
     }),
 
     // Streaming ingest with incremental index maintenance — the
-    // composition this round's sidecar increments exist for: each
-    // micro-batch appends to the kv table and folds ONLY its new files
-    // into the Bloom + zone-map sidecars (build on first batch, append
-    // after), so point-lookup pruning never goes stale and maintenance
-    // cost tracks batch size, not table size. The gate's final read
-    // crosses every batch through the maintained sidecars.
+    // composition the sidecar increments exist for: each micro-batch
+    // appends to the kv table, and once the first batch has built the
+    // Bloom + zone-map sidecars every later batch's kv write folds ONLY
+    // its new files into them at commit (the append calls then find
+    // them covered), so point-lookup pruning never goes stale and
+    // maintenance cost tracks batch size, not table size. The gate's
+    // final read crosses every batch through the maintained sidecars.
     "q_kv_stream_index" -> ((s, dir) => {
       val u = java.util.UUID.randomUUID().toString.replace("-", "")
       val sink = s"/tmp/graft_stridx_$u/t"

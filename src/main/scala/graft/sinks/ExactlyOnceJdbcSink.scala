@@ -148,32 +148,33 @@ object ExactlyOnceJdbcSink {
 
       if (twoPhase) {
         val ddl = ddlColumns(schema)
+        // an empty partition stages nothing: no temp table to create,
+        // fill, move or drop (recovery above already dropped any stale one)
         df.foreachPartition { (rows: Iterator[Row]) =>
-          val pid = TaskContext.getPartitionId()
-          val tmp = s"TMP_${table.toUpperCase}_${batchId}_$pid"
-          val c = connect(url)
-          try {
-            // task retry: rebuild this partition's temp table from scratch
-            if (tableExists(c, tmp))
-              c.createStatement().executeUpdate(s"DROP TABLE $tmp")
-            c.createStatement().executeUpdate(s"CREATE TABLE $tmp ($ddl)")
-            insertRows(c, tmp, schema, rows, None)
-          } finally c.close()
+          if (rows.hasNext) {
+            val tmp = s"TMP_${table.toUpperCase}_${batchId}_${TaskContext.getPartitionId()}"
+            val c = connect(url)
+            try {
+              // task retry: rebuild this partition's temp table from scratch
+              if (tableExists(c, tmp))
+                c.createStatement().executeUpdate(s"DROP TABLE $tmp")
+              c.createStatement().executeUpdate(s"CREATE TABLE $tmp ($ddl)")
+              insertRows(c, tmp, schema, rows, None)
+            } finally c.close()
+          }
         }
         // single transaction: move staged rows + flip the log entry
+        val staged = listTempTables(driver, table, batchId)
         driver.setAutoCommit(false)
         try {
-          listTempTables(driver, table, batchId).foreach { t =>
-            driver.createStatement().executeUpdate(
-              s"INSERT INTO $table SELECT * FROM $t")
-          }
+          staged.foreach(t => driver.createStatement().executeUpdate(
+            s"INSERT INTO $table SELECT * FROM $t"))
           setStatus(driver, table, batchId, "COMMITTED")
           driver.commit()
         } catch {
           case e: Throwable => driver.rollback(); throw e
         } finally driver.setAutoCommit(true)
-        listTempTables(driver, table, batchId)
-          .foreach(t => driver.createStatement().executeUpdate(s"DROP TABLE $t"))
+        staged.foreach(t => driver.createStatement().executeUpdate(s"DROP TABLE $t"))
       } else {
         df.foreachPartition { (rows: Iterator[Row]) =>
           val c = connect(url)

@@ -1,9 +1,12 @@
 package graft.sources.kv
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{broadcast, col, first, xxhash64}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.functions.{broadcast, col, first, lit, xxhash64}
 import org.apache.spark.sql.sources._
+import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.functions.BloomFilterSketch
@@ -39,13 +42,18 @@ import graft.sources.ParquetIO
   * `XxHash64Function` — then [[BloomFilterSketch]]'s splitmix double
   * hashing for probe positions. One deterministic chain, no per-row UDF.
   *
-  * Build: ONE distributed pass — `groupBy(_file)` with the
-  * variable-width aggregate sizes every file's filter from ITS OWN
-  * footer row count (a skewed table no longer costs numFiles × the
-  * largest file's width), and shard files are written by EXECUTORS
-  * (repartition on shard id), so the driver never materializes the
-  * bitsets. At cluster scale this runs per table-partition in the same
-  * maintenance window as compaction/bucketize.
+  * Maintenance: the kv writer keeps a LIVE sidecar current itself — its
+  * tasks hash every written row ([[FileHasher]]) and the job or epoch
+  * commit publishes the new files' entries, the way the reference's
+  * search index is kept current by the store as rows land. [[append]]
+  * serves the files written outside it (other writers, or a write whose
+  * hash domain differs from the table's), [[build]] the rest: ONE
+  * distributed pass — `groupBy(_file)` with the variable-width
+  * aggregate sizes every file's filter from ITS OWN footer row count (a
+  * skewed table no longer costs numFiles × the largest file's width),
+  * and shard files are written by EXECUTORS (repartition on shard id),
+  * so the driver never materializes the bitsets. All three write the
+  * same entry for a file ([[Conf.entry]]).
   */
 object KvBloom {
 
@@ -56,11 +64,60 @@ object KvBloom {
       BloomFilterSketch.probeHit(bits, hash, numBits, numHashes)
   }
 
-  /** Per-file width: rows × bitsPerKey rounded up to a multiple of 64,
-    * floor 64 (empty/tiny files get the minimum filter).
+  /** What a bloom sidecar indexes, as its meta records it — the one
+    * definition of the per-file width, the meta and the entry that
+    * [[build]], [[append]] and the kv writer publish.
     */
-  private def widthFor(rows: Long, bitsPerKey: Int): Long =
-    math.max(64L, (rows * bitsPerKey + 63) / 64 * 64)
+  case class Conf(cols: Seq[String], bitsPerKey: Int, numHashes: Int) {
+    /** Per-file width: rows × bitsPerKey rounded up to a multiple of 64,
+      * floor 64 (empty/tiny files get the minimum filter).
+      */
+    def width(rows: Long): Int = {
+      val nb = math.max(64L, (rows * bitsPerKey + 63) / 64 * 64)
+      require(nb <= Int.MaxValue,
+        s"bloom width $nb exceeds Int range — lower bitsPerKey or split files")
+      nb.toInt
+    }
+
+    def meta(numShards: Int): JValue =
+      JObject("numShards" -> JInt(numShards),
+        "columns" -> JArray(cols.map(JString(_)).toList),
+        "numHashes" -> JInt(numHashes),
+        // recorded so a maintenance rebuild (KvMerge.rebuildIndexes)
+        // can re-run this build with the same parameters
+        "bitsPerKey" -> JInt(bitsPerKey))
+
+    /** One file's entry: column i's packed filter is `bits(i)` at
+      * `width(rows)`; an empty array is the all-zero filter (a file with
+      * no rows contains nothing — every lookup prunes it).
+      */
+    def entry(rows: Long)(bits: Int => Array[Byte]): String = {
+      val nb = width(rows)
+      entryJson(cols.indices.map { i =>
+        val b = bits(i)
+        cols(i) -> ColBloom(if (b.isEmpty) new Array[Byte](nb / 8) else b, nb, numHashes)
+      }.toMap)
+    }
+  }
+
+  object Conf {
+    def apply(cols: Seq[String], bitsPerKey: Int): Conf =
+      Conf(cols, bitsPerKey, math.max(1, math.round(bitsPerKey * 0.693).toInt))
+
+    /** The conf a meta records, None when it records no columns. Legacy
+      * (pre-round-9) metas lack bitsPerKey/numHashes: build's defaults.
+      */
+    def of(meta: JValue): Option[Conf] = {
+      def intOr(field: String, dflt: => Int): Int = (meta \ field) match {
+        case JInt(v) => v.toInt
+        case _ => dflt
+      }
+      val cols = KvSidecar.columnsOf(meta)
+      val bpk = intOr("bitsPerKey", 10)
+      if (cols.isEmpty) None
+      else Some(Conf(cols, bpk, intOr("numHashes", Conf(cols, bpk).numHashes)))
+    }
+  }
 
   /** Build (or rebuild) per-file Bloom filters for `cols` in ONE
     * distributed pass (see object scaladoc). `bitsPerKey` ≈ 10 gives
@@ -70,98 +127,60 @@ object KvBloom {
       bitsPerKey: Int = 10): Unit = {
     require(cols.nonEmpty, "bloom build needs at least one column")
     require(bitsPerKey >= 1 && bitsPerKey <= 64, s"bitsPerKey out of range: $bitsPerKey")
-    val numHashes = math.max(1, math.round(bitsPerKey * 0.693).toInt)
+    val conf = Conf(cols, bitsPerKey)
     val files = ParquetIO.listFilesStatus(tablePath)
     val numShards = KvSidecar.numShardsFor(files.length)
-    val meta: JValue =
-      JObject("numShards" -> JInt(numShards),
-        "columns" -> JArray(cols.map(JString(_)).toList),
-        "numHashes" -> JInt(numHashes),
-        // recorded so a maintenance rebuild (KvMerge.rebuildIndexes)
-        // can re-run this build with the same parameters
-        "bitsPerKey" -> JInt(bitsPerKey))
-    if (files.isEmpty) {
-      KvSidecar.publish(tablePath, SidecarName, meta)(_ => ())
-      return
-    }
-    // driver-side per-file widths from cached footers (no data pages)
-    val widths = files.map { case (f, len, mtime) =>
-      val rows = ParquetIO.footer(f, len, mtime).rowCount
-      val nb = widthFor(rows, bitsPerKey)
-      require(nb <= Int.MaxValue,
-        s"bloom width $nb exceeds Int range — lower bitsPerKey or split files")
-      (f.toString, len, mtime, nb)
-    }
     import spark.implicits._
-    val widthDf = widths.toDF("__file", "__len", "__mtime", "__nb")
-    val df = spark.read.format("kv").option("path", tablePath).load()
-    val aggs = cols.map { c =>
-      BloomFilterSketch.bloomAggVar(xxhash64(col(c)), col("__nb"), numHashes).as(c)
-    } ++ Seq(first(col("__len")).as("__len"), first(col("__mtime")).as("__mtime"),
-      first(col("__nb")).as("__nb"))
-    val colsArr = cols.toArray
-    // persisted: the covered-set collect and the shard-writing
-    // foreachPartition are TWO actions over this plan — caching keeps
-    // the build one distributed scan and pins both actions to the same
-    // snapshot of the listing (a file appended between two uncached
-    // jobs could otherwise land both a real and an all-zero entry)
-    val grouped = df.select(col("_file") +: cols.map(col): _*)
-      .join(broadcast(widthDf), col("_file") === col("__file"))
-      .groupBy(col("_file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // (shard, jsonl line) per covered file; files absent from the
-    // grouped output hold zero rows — all-zero minimal filter (they
-    // contain nothing: prune everything)
-    val groupedLines = grouped.map { r =>
-      val fileName = new Path(r.getString(0)).getName
-      val entry = entryJson(colsArr.zipWithIndex.map { case (c, i) =>
-        c -> ColBloom(r.getAs[Array[Byte]](i + 1),
-          r.getAs[Long](colsArr.length + 3).toInt, numHashes)
-      }.toMap)
-      (KvSidecar.shardOf(fileName, numShards),
-        KvSidecar.entryLine(fileName, r.getAs[Long](colsArr.length + 1),
-          r.getAs[Long](colsArr.length + 2), entry))
-    }
-    try {
-    val covered = grouped.select(col("_file")).as[String].collect().toSet
-    val emptyLines = spark.createDataset(widths.filterNot(w => covered.contains(w._1))
-      .map { case (f, len, mtime, nb) =>
-        val fileName = new Path(f).getName
-        val entry = entryJson(
-          cols.map(_ -> ColBloom(new Array[Byte](nb.toInt / 8), nb.toInt, numHashes)).toMap)
-        (KvSidecar.shardOf(fileName, numShards),
-          KvSidecar.entryLine(fileName, len, mtime, entry))
-      })
-    val lines = groupedLines.union(emptyLines)
-    KvSidecar.publish(tablePath, SidecarName, meta) { tmp =>
+    KvSidecar.publish(tablePath, SidecarName, conf.meta(numShards)) { tmp =>
       val tmpStr = tmp.toString
-      // all lines of one shard land in one partition (hash repartition
+      // all entries of one shard land in one partition (hash repartition
       // on the shard id); each task writes the shard files it owns
-      lines.repartition(math.min(numShards, 64), col("_1"))
-        .foreachPartition { (it: Iterator[(Int, String)]) =>
-          val fs = new Path(tmpStr).getFileSystem(ParquetIO.hadoopConf)
-          val writers = scala.collection.mutable.Map.empty[Int, java.io.BufferedWriter]
-          try {
-            it.foreach { case (k, line) =>
-              val w = writers.getOrElseUpdate(k, new java.io.BufferedWriter(
-                new java.io.OutputStreamWriter(
-                  fs.create(new Path(tmpStr, KvSidecar.shardFileName(k)), true),
-                  java.nio.charset.StandardCharsets.UTF_8)))
-              w.write(line); w.write("\n")
-            }
-          } finally writers.values.foreach(w => scala.util.Try(w.close()))
+      if (files.nonEmpty) hashFiles(spark, tablePath, conf, files, allowlist = false)
+        .map(e => (KvSidecar.shardOf(e._1, numShards), e))
+        .repartition(math.min(numShards, 64), col("_1"))
+        .foreachPartition { (it: Iterator[(Int, KvSidecar.Entry)]) =>
+          val dir = new Path(tmpStr)
+          KvSidecar.stageEntries(dir.getFileSystem(ParquetIO.hadoopConf), dir, numShards,
+            it.map(_._2))
         }
     }
-    } finally { grouped.unpersist(); () }
   }
 
-  /** Incremental maintenance — the `KvIndex.append` discipline for the
-    * Bloom tier: hash ONLY the uncovered files' rows. The distributed
-    * pass scans the delta through the normal kv read plane (the
-    * `maintenance.files` allowlist restricts planning to those files —
-    * same coercions, same hashing chain as [[build]]), untouched shards
-    * are byte-copied, and only shards receiving entries re-serialize.
+  /** The distributed pass behind [[build]] and [[append]]: every file's
+    * entry, hashed through the normal kv read plane (`allowlist`: only
+    * `files` are planned, via `maintenance.files` — same coercions, same
+    * hashing chain). Each file also joins one unhashed pad row, so a file
+    * holding zero rows still reaches the grouped output (all-zero entry).
+    */
+  private def hashFiles(spark: SparkSession, tablePath: String, conf: Conf,
+      files: Seq[(Path, Long, Long)], allowlist: Boolean): Dataset[KvSidecar.Entry] = {
+    import spark.implicits._
+    val sized = files.map { case (f, len, mtime) =>
+      val rows = ParquetIO.footer(f, len, mtime).rowCount
+      (f.toString, len, mtime, rows, conf.width(rows).toLong)
+    }.toDF("__file", "__len", "__mtime", "__rows", "__nb")
+    val read = spark.read.format("kv").option("path", tablePath)
+    val df = (if (allowlist) read.option("maintenance.files", files.map(_._1.getName).mkString(","))
+      else read).load()
+    val hashes = conf.cols.indices.map(i => s"__h$i")
+    df.select(col("_file") +: conf.cols.zip(hashes).map { case (c, h) => xxhash64(col(c)).as(h) }: _*)
+      .union(sized.select(col("__file") +: hashes.map(h => lit(null).cast("long").as(h)): _*))
+      .join(broadcast(sized), col("_file") === col("__file"))
+      .groupBy(col("_file"))
+      .agg(first(col("__len")), first(col("__mtime")) +: first(col("__rows")) +:
+        hashes.map(h => BloomFilterSketch.bloomAggVar(col(h), col("__nb"), conf.numHashes)): _*)
+      .map { r =>
+        (new Path(r.getString(0)).getName, r.getLong(1), r.getLong(2),
+          conf.entry(r.getLong(3))(i => r.getAs[Array[Byte]](4 + i)))
+      }
+  }
+
+  /** Incremental maintenance for files the kv writer did not cover
+    * (written by other writers, or outside the table's hash domain): hash
+    * ONLY the uncovered files' rows in one distributed pass and merge
+    * their entries in ([[KvSidecar.coverUncovered]] — untouched shards
+    * are byte-copied, only shards receiving entries re-serialize). After
+    * a kv write to a live sidecar it finds nothing and runs no Spark job.
     *
     * Delta blooms are collected to the driver before the merge —
     * bounded by |new files| · rows·bitsPerKey/8 bytes, fine for the
@@ -171,78 +190,83 @@ object KvBloom {
     * owns recovery — appending into a stale hash domain would poison
     * it). Returns the number of newly covered files.
     */
-  def append(spark: SparkSession, tablePath: String): Int = {
-    val sc = KvSidecar.open(tablePath, SidecarName).getOrElse(
-      throw new IllegalStateException(
-        s"no live bloom sidecar on $tablePath — run KvBloom.build first"))
-    val cols = (sc.meta \ "columns") match {
-      case JArray(vs) => vs.collect { case JString(s) => s }
-      case _ => throw new IllegalStateException(
-        s"bloom meta on $tablePath records no columns")
-    }
-    // legacy metas (pre-round-9 builds) may lack bitsPerKey — default
-    // like KvMerge.rebuildIndexes does, instead of a MappingException
-    def intOr(field: String, dflt: Int): Int = (sc.meta \ field) match {
-      case JInt(v) => v.toInt
-      case _ => dflt
-    }
-    val bitsPerKey = intOr("bitsPerKey", 10)
-    val numHashes = intOr("numHashes",
-      math.max(1, math.round(bitsPerKey * 0.693).toInt))
-    val live = ParquetIO.listFilesStatus(tablePath)
-    val newFiles = live.filter { case (f, len, mt) =>
-      sc.entryFor(f.getName, len, mt).isEmpty }
-    if (newFiles.isEmpty) return 0
-    val widths = newFiles.map { case (f, len, mtime) =>
-      val rows = ParquetIO.footer(f, len, mtime).rowCount
-      val nb = widthFor(rows, bitsPerKey)
-      require(nb <= Int.MaxValue,
-        s"bloom width $nb exceeds Int range — lower bitsPerKey or split files")
-      (f.toString, len, mtime, nb)
-    }
-    import spark.implicits._
-    val widthDf = widths.toDF("__file", "__len", "__mtime", "__nb")
-    val df = spark.read.format("kv").option("path", tablePath)
-      .option("maintenance.files", newFiles.map(_._1.getName).mkString(","))
-      .load()
-    val aggs = cols.map { c =>
-      BloomFilterSketch.bloomAggVar(xxhash64(col(c)), col("__nb"), numHashes).as(c)
-    } ++ Seq(first(col("__len")).as("__len"), first(col("__mtime")).as("__mtime"),
-      first(col("__nb")).as("__nb"))
-    val colsArr = cols.toArray
-    val hashed = df.select(col("_file") +: cols.map(col): _*)
-      .join(broadcast(widthDf), col("_file") === col("__file"))
-      .groupBy(col("_file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val fileName = new Path(r.getString(0)).getName
-        (fileName, r.getAs[Long](colsArr.length + 1),
-          r.getAs[Long](colsArr.length + 2),
-          entryJson(colsArr.zipWithIndex.map { case (c, i) =>
-            c -> ColBloom(r.getAs[Array[Byte]](i + 1),
-              r.getAs[Long](colsArr.length + 3).toInt, numHashes)
-          }.toMap))
-      }.toSeq
-    // new files holding zero rows never reach the grouped output: they
-    // get the minimal all-zero filter (contain nothing → prune all)
-    val hashedNames = hashed.map(_._1).toSet
-    val empties = widths.filterNot(w => hashedNames.contains(new Path(w._1).getName))
-      .map { case (f, len, mtime, nb) =>
-        (new Path(f).getName, len, mtime, entryJson(
-          cols.map(_ -> ColBloom(new Array[Byte](nb.toInt / 8), nb.toInt,
-            numHashes)).toMap))
+  def append(spark: SparkSession, tablePath: String): Int =
+    KvSidecar.coverUncovered(tablePath, SidecarName) { (meta, uncovered) =>
+      val conf = Conf.of(meta).getOrElse(throw new IllegalStateException(
+        s"bloom meta on $tablePath records no columns"))
+      hashFiles(spark, tablePath, conf, uncovered, allowlist = true).collect().toSeq
+    }.getOrElse(throw new IllegalStateException(
+      s"no live bloom sidecar on $tablePath — run KvBloom.build first"))
+
+  /** The conf the kv writer hashes a write of `written` with: the live
+    * sidecar's, when every bloomed column is written with the type the
+    * table schema (`_meta/schema.json`, what the kv reader hands
+    * [[append]]) holds for it. Otherwise None — a hash over another type
+    * would never match the reader's values, so those files stay
+    * uncovered (never pruned) until [[append]] hashes them.
+    */
+  def writerConf(tablePath: String, written: StructType): Option[Conf] =
+    KvSidecar.open(tablePath, SidecarName).flatMap(sc => Conf.of(sc.meta))
+      .filter(sameDomain(_, written, KvSchemaMeta.read(tablePath).getOrElse(written)))
+
+  private def sameDomain(conf: Conf, written: StructType, table: StructType): Boolean =
+    conf.cols.forall(c => written.find(_.name == c).exists(w =>
+      table.find(_.name == c).exists(_.dataType == w.dataType)))
+
+  /** Commit side of a kv write: publish the entries its tasks hashed with
+    * `hashed` for the committed files the sidecar does not cover yet —
+    * only while the sidecar is still live with that same conf and the
+    * table schema just recorded still gives the written types.
+    */
+  private[kv] def coverWritten(tablePath: String, written: StructType, hashed: Conf,
+      entries: Seq[KvSidecar.Entry]): Unit =
+    if (KvSchemaMeta.read(tablePath).exists(sameDomain(hashed, written, _)))
+      KvSidecar.coverUncovered(tablePath, SidecarName) { (meta, uncovered) =>
+        val open = uncovered.map { case (f, len, mtime) => (f.getName, len, mtime) }.toSet
+        if (!Conf.of(meta).contains(hashed)) Nil
+        else entries.filter { case (f, len, mtime, _) => open((f, len, mtime)) }
       }
-    val newEntries = hashed ++ empties
-    val numShards = KvSidecar.numShardsFor(live.length)
-    val meta: JValue = JObject("numShards" -> JInt(numShards),
-      "columns" -> JArray(cols.map(JString(_)).toList),
-      "numHashes" -> JInt(numHashes), "bitsPerKey" -> JInt(bitsPerKey))
-    KvSidecar.publish(tablePath, SidecarName, meta) { tmp =>
-      KvSidecar.mergeEntries(sc, tmp.getFileSystem(ParquetIO.hadoopConf),
-        tmp, numShards, live, newEntries)
+
+  /** Task-side hashing for the kv writer: `xxhash64` (seed 42 — a null
+    * hashes to 42, as the built-in gives) of every bloomed column of
+    * every written row, buffered at 8 B per row per column for the open
+    * file, since its width needs the final row count.
+    */
+  final class FileHasher(conf: Conf, schema: StructType) {
+    private val ords = conf.cols.map(schema.fieldIndex).toArray
+    private val types = ords.map(schema(_).dataType)
+    private var hashes = Array.fill(ords.length)(new Array[Long](64))
+    private var rows = 0
+
+    def add(row: InternalRow): Unit = {
+      if (rows == hashes(0).length) hashes = hashes.map(java.util.Arrays.copyOf(_, rows * 2))
+      var i = 0
+      while (i < ords.length) {
+        val v = if (row.isNullAt(ords(i))) null else row.get(ords(i), types(i))
+        hashes(i)(rows) = XxHash64Function.hash(v, types(i), 42L)
+        i += 1
+      }
+      rows += 1
     }
-    newFiles.length
+
+    /** The entry of `file`, just closed (len and mtime stated now); the
+      * buffers then start over for the next file.
+      */
+    def close(file: Path): KvSidecar.Entry = {
+      val nb = conf.width(rows)
+      val e = conf.entry(rows) { i =>
+        val words = new Array[Long](nb / 64)
+        var r = 0
+        while (r < rows) {
+          BloomFilterSketch.setBits(words, hashes(i)(r), nb, conf.numHashes); r += 1 }
+        val out = java.nio.ByteBuffer.allocate(nb / 8)
+        words.foreach(out.putLong)
+        out.array()
+      }
+      rows = 0
+      val st = file.getFileSystem(ParquetIO.hadoopConf).getFileStatus(file)
+      (file.getName, st.getLen, st.getModificationTime, e)
+    }
   }
 
   private def entryJson(byCol: Map[String, ColBloom]): String = {
@@ -285,7 +309,7 @@ object KvBloom {
     * value. None for types the build side doesn't hash (no pruning).
     */
   def valueHash(v: Any): Option[Long] = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64Function}
+    import org.apache.spark.sql.catalyst.expressions.Literal
     v match {
       case null => None
       case _: Long | _: Int | _: Short | _: Byte | _: Double | _: Float |

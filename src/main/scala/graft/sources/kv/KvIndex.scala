@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.sources._
+import org.json4s.{JArray, JInt, JObject, JString}
 import graft.sources.ParquetIO
 
 /** Secondary "search index" for kv tables — the reference's search-index
@@ -66,27 +67,25 @@ object KvIndex {
     val files = ParquetIO.listFilesStatus(tablePath)
     val entries = entriesFor(files, cols)
     val numShards = KvSidecar.numShardsFor(files.length)
-    KvSidecar.publish(tablePath, SidecarName, metaJson(numShards, cols)) { tmp =>
+    val meta = JObject("numShards" -> JInt(numShards), "columns" -> JArray(cols.map(JString(_)).toList))
+    KvSidecar.publish(tablePath, SidecarName, meta) { tmp =>
       KvSidecar.stageEntries(tmp.getFileSystem(ParquetIO.hadoopConf), tmp,
         numShards, entries.iterator)
     }
   }
 
-  private def metaJson(numShards: Int, cols: Seq[String]): org.json4s.JValue =
-    org.json4s.JObject(
-      "numShards" -> org.json4s.JInt(numShards),
-      "columns" -> org.json4s.JArray(cols.map(org.json4s.JString(_)).toList))
-
-  /** Incremental maintenance: index only the files the existing sidecar
-    * does not cover (new appends, or rewritten bytes under a reused
-    * name) and merge them in — footer I/O is O(new files), untouched
-    * shards are BYTE-COPIED, and only shards receiving new entries are
-    * re-serialized. When the live file count moves the shard-count
-    * budget ([[KvSidecar.numShardsFor]]), falls back to re-sharding
-    * every still-valid entry (no footer re-reads — entries re-serialize
-    * from the old shards). Entries for deleted files are dropped on the
-    * re-shard path and are harmless meanwhile (signature-validated,
-    * never served).
+  /** Incremental maintenance for files the kv writer did not cover
+    * (written by other writers): index only the files the existing
+    * sidecar does not cover (new appends, or rewritten bytes under a
+    * reused name) and merge them in through [[KvSidecar.coverUncovered]]
+    * — footer I/O is O(new files), untouched shards are BYTE-COPIED, and
+    * only shards receiving new entries are re-serialized. When the live
+    * file count moves the shard-count budget
+    * ([[KvSidecar.numShardsFor]]), every still-valid entry is re-sharded
+    * (no footer re-reads — entries re-serialize from the old shards).
+    * Entries for deleted files are dropped on the re-shard path and are
+    * harmless meanwhile (signature-validated, never served). After a kv
+    * write to a live index it finds nothing to do.
     *
     * Returns the number of newly indexed files. Requires an existing,
     * non-tombstoned index — the recorded columns are the contract; a
@@ -94,32 +93,30 @@ object KvIndex {
     * tombstone keeps config but refuses service, so append refuses
     * too instead of mixing hash/type domains).
     */
-  def append(tablePath: String): Int = {
-    val sc = KvSidecar.open(tablePath, SidecarName).getOrElse(
-      throw new IllegalStateException(
-        s"no live zone-map index on $tablePath — run KvIndex.build first"))
-    val cols = indexedColumns(tablePath).toSeq.sorted
-    require(cols.nonEmpty, s"zone-map meta on $tablePath records no columns")
-    val live = ParquetIO.listFilesStatus(tablePath)
-    val newFiles = live.filter { case (f, len, mt) =>
-      sc.entryFor(f.getName, len, mt).isEmpty }
-    if (newFiles.isEmpty) return 0
-    val newEntries = entriesFor(newFiles, cols)
-    val numShards = KvSidecar.numShardsFor(live.length)
-    KvSidecar.publish(tablePath, SidecarName, metaJson(numShards, cols)) { tmp =>
-      KvSidecar.mergeEntries(sc, tmp.getFileSystem(ParquetIO.hadoopConf),
-        tmp, numShards, live, newEntries)
+  def append(tablePath: String): Int =
+    KvSidecar.coverUncovered(tablePath, SidecarName) { (meta, uncovered) =>
+      val cols = KvSidecar.columnsOf(meta)
+      require(cols.nonEmpty, s"zone-map meta on $tablePath records no columns")
+      entriesFor(uncovered, cols)
+    }.getOrElse(throw new IllegalStateException(
+      s"no live zone-map index on $tablePath — run KvIndex.build first"))
+
+  /** Commit side of a kv write: the committed files (`written`, by name)
+    * that a live index does not cover yet join it, from the same cached
+    * footers the planner reads next.
+    */
+  private[kv] def coverWritten(tablePath: String, written: Set[String]): Unit =
+    KvSidecar.coverUncovered(tablePath, SidecarName) { (meta, uncovered) =>
+      entriesFor(uncovered.filter(f => written(f._1.getName)), KvSidecar.columnsOf(meta))
     }
-    newFiles.length
-  }
 
   /** Footer-only zone extraction for `files` — the shared walk behind
-    * [[build]] (all files) and [[append]] (new files only). Reads the
-    * signature-cached [[ParquetIO.footer]], so a file the planner has
-    * already seen costs no second open.
+    * [[build]] (all files), [[append]] and the kv writer's commit (new
+    * files only). Reads the signature-cached [[ParquetIO.footer]], so a
+    * file the planner has already seen costs no second open.
     */
   private def entriesFor(files: Seq[(Path, Long, Long)], cols: Seq[String])
-      : Seq[(String, Long, Long, String)] = {
+      : Seq[KvSidecar.Entry] = {
     import scala.jdk.CollectionConverters._
     def widen(v: Any): Option[Any] = v match {
       case i: java.lang.Integer => Some(i.longValue())
@@ -162,13 +159,8 @@ object KvIndex {
     * meta.json read, no shard touched.
     */
   def indexedColumns(tablePath: String): Set[String] =
-    KvSidecar.readMeta(tablePath, SidecarName).map { m =>
-      (m \ "columns") match {
-        case org.json4s.JArray(vs) =>
-          vs.collect { case org.json4s.JString(s) => s }.toSet
-        case _ => Set.empty[String]
-      }
-    }.getOrElse(Set.empty)
+    KvSidecar.readMeta(tablePath, SidecarName)
+      .map(KvSidecar.columnsOf(_).toSet).getOrElse(Set.empty)
 
   /** Resolved read handle for one planning pass. */
   final class ZoneReader(shards: KvSidecar.SidecarShards) {

@@ -60,6 +60,15 @@ object KvSidecar {
 
   def shardFileName(k: Int): String = s"shard-$k.jsonl"
 
+  /** One file's entry: (fileName, len, mtime, consumer entry JSON). */
+  type Entry = (String, Long, Long, String)
+
+  /** The columns a sidecar meta records (empty when it records none). */
+  def columnsOf(meta: JValue): Seq[String] = (meta \ "columns") match {
+    case JArray(vs) => vs.collect { case JString(s) => s }
+    case _ => Nil
+  }
+
   /** One shard line. `entryJson` is the consumer's compact JSON for the
     * file (written verbatim under `"e"`).
     */
@@ -258,13 +267,7 @@ object KvSidecar {
   def tombstone(tablePath: String, name: String): Unit = {
     readMeta(tablePath, name) match {
       case None => drop(tablePath, name)
-      case Some(meta) =>
-        val stale = meta match {
-          case JObject(fields) =>
-            JObject(fields.filterNot(_._1 == "stale") :+ ("stale" -> JBool(true)))
-          case other => other
-        }
-        publish(tablePath, name, stale)(_ => ())
+      case Some(meta) => publish(tablePath, name, meta.merge(JObject("stale" -> JBool(true))))(_ => ())
     }
   }
 
@@ -282,18 +285,42 @@ object KvSidecar {
     ()
   }
 
+  /** Cover the live files an open sidecar has no entry for — the one
+    * incremental sequence behind `KvIndex.append`, `KvBloom.append` and
+    * the kv writer's job/epoch commit: open the sidecar, list the live
+    * files, hand the uncovered ones and the sidecar's meta to
+    * `entriesFor`, and publish what it returns (entries for all, some or
+    * none of them) through [[mergeEntries]] under the same meta at the
+    * shard count the listing needs. Returns the number of entries
+    * published, or None when the sidecar is absent or tombstoned.
+    */
+  def coverUncovered(tablePath: String, name: String)(
+      entriesFor: (JValue, Seq[(Path, Long, Long)]) => Seq[Entry]): Option[Int] =
+    open(tablePath, name).map { sc =>
+      val live = ParquetIO.listFilesStatus(tablePath)
+      val uncovered = live.filter { case (f, len, mt) => sc.entryFor(f.getName, len, mt).isEmpty }
+      val entries = if (uncovered.isEmpty) Nil else entriesFor(sc.meta, uncovered)
+      if (entries.nonEmpty) {
+        val numShards = numShardsFor(live.length)
+        publish(tablePath, name, sc.meta.merge(JObject("numShards" -> JInt(numShards)))) { tmp =>
+          mergeEntries(sc, tmp.getFileSystem(ParquetIO.hadoopConf), tmp, numShards, live, entries)
+        }
+      }
+      entries.length
+    }
+
   /** Merge `newEntries` into an open sidecar during a publish stage —
-    * the incremental-maintenance write path shared by `KvIndex.append`
-    * and `KvBloom.append` (one implementation, two tiers): with an
-    * unchanged shard count, untouched shards are byte-copied and only
-    * shards receiving entries re-serialize (same-name entries
+    * the write step of [[coverUncovered]], so of both tiers' `append`
+    * and of the kv writer's commit (one implementation, three callers):
+    * with an unchanged shard count, untouched shards are byte-copied and
+    * only shards receiving entries re-serialize (same-name entries
     * replaced); a changed shard budget re-shards every entry still
     * valid for the `live` listing plus the new ones (no consumer-side
     * rebuild — entries re-serialize from the old shards).
     */
   def mergeEntries(sc: SidecarShards, fs: FileSystem, tmpDir: Path,
       numShards: Int, live: Seq[(Path, Long, Long)],
-      newEntries: Seq[(String, Long, Long, String)]): Unit = {
+      newEntries: Seq[Entry]): Unit = {
     if (numShards == sc.numShards) {
       val bySh = newEntries.groupBy(e => shardOf(e._1, numShards))
       (0 until numShards).foreach { k =>
@@ -304,7 +331,7 @@ object KvSidecar {
             val kept = sc.shardEntries(k).collect {
               case (f, (len, mt, e)) if !replaced.contains(f) => (f, len, mt, e)
             }
-            stageShard(fs, tmpDir, k, (kept ++ add).iterator)
+            stageEntries(fs, tmpDir, numShards, (kept ++ add).iterator)
         }
       }
     } else {
@@ -314,26 +341,12 @@ object KvSidecar {
     }
   }
 
-  /** Write ONE shard file from fully-resolved entries — the merge path
-    * of incremental maintenance (the caller owns shard assignment).
-    */
-  def stageShard(fs: FileSystem, tmpDir: Path, k: Int,
-      entries: Iterator[(String, Long, Long, String)]): Unit = {
-    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      fs.create(new Path(tmpDir, shardFileName(k)), true),
-      java.nio.charset.StandardCharsets.UTF_8))
-    try entries.foreach { case (f, len, mtime, e) =>
-      w.write(entryLine(f, len, mtime, e)); w.write("\n")
-    } finally w.close()
-  }
-
-  /** Driver-side staging helper: write `entries` (fileName, len, mtime,
-    * entryJson) into shard files under `tmpDir` — used by builders whose
-    * per-entry payload is footer-derived (zone maps). Distributed
-    * builders ([[KvBloom]]) write shard files from executors instead.
+  /** Write `entries` into their shard files under `tmpDir` — on the
+    * driver for footer-derived zone maps and merges, in each executor
+    * task for [[KvBloom.build]] (whose tasks own whole shards).
     */
   def stageEntries(fs: FileSystem, tmpDir: Path, numShards: Int,
-      entries: Iterator[(String, Long, Long, String)]): Unit = {
+      entries: Iterator[Entry]): Unit = {
     val writers = scala.collection.mutable.Map.empty[Int, java.io.BufferedWriter]
     try {
       entries.foreach { case (f, len, mtime, e) =>

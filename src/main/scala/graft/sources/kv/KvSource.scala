@@ -828,7 +828,30 @@ class KvWriteBuilder(path: String, inputSchema: StructType, primaryKeys: Seq[Str
   }
 }
 
-case class KvCommitMessage(files: Seq[String]) extends WriterCommitMessage
+/** One task's files; `bloom`: the entries its writer hashed for them
+  * into a live bloom sidecar, with the conf it hashed with.
+  */
+case class KvCommitMessage(files: Seq[String],
+    bloom: Option[(KvBloom.Conf, Seq[KvSidecar.Entry])] = None) extends WriterCommitMessage
+
+object KvCommitMessage {
+  /** The job or epoch commit's sidecar upkeep: the committed files join a
+    * live zone map (footer-only) and a live bloom sidecar (the tasks'
+    * entries), so `append` finds them covered and lookups prune them
+    * right away. No Spark job runs here; a failed publish fails the
+    * commit, and Spark's abort then deletes the files.
+    */
+  def publishSidecars(path: String, schema: StructType,
+      messages: Array[WriterCommitMessage]): Unit = {
+    val written = messages.collect { case m: KvCommitMessage => m }
+    KvIndex.coverWritten(path, written.flatMap(_.files).map(new Path(_).getName).toSet)
+    val hashed = written.flatMap(_.bloom)
+    hashed.map(_._1).distinct match {
+      case Array(conf) => KvBloom.coverWritten(path, schema, conf, hashed.flatMap(_._2).toSeq)
+      case _ => ()
+    }
+  }
+}
 
 class KvBatchWrite(path: String, schema: StructType, truncateFirst: Boolean,
     conv: Option[InternalRow => InternalRow] = None,
@@ -837,42 +860,53 @@ class KvBatchWrite(path: String, schema: StructType, truncateFirst: Boolean,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     if (truncateFirst) ParquetIO.deletePath(path)
     new org.apache.hadoop.fs.Path(path).getFileSystem(ParquetIO.hadoopConf).mkdirs(new Path(path))
-    new KvWriterFactory(path, schema, conv, wopts.batchSize)
+    // read after the truncate, whose delete takes `_index` with the data
+    new KvWriterFactory(path, schema, conv, wopts.batchSize, KvBloom.writerConf(path, schema))
   }
   // record the persisted-schema sidecar (union with prior writes) so
   // catalog-less readers see every attribute ever written
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
     KvSchemaMeta.record(path, schema)
+    KvCommitMessage.publishSidecars(path, schema, messages)
+  }
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case KvCommitMessage(files) => files.foreach(ParquetIO.deletePath) }
+    messages.collect { case m: KvCommitMessage => m.files.foreach(ParquetIO.deletePath) }
 }
 
 class KvWriterFactory(path: String, schema: StructType,
     conv: Option[InternalRow => InternalRow] = None,
-    batchSize: Long = 0L) extends DataWriterFactory {
+    batchSize: Long = 0L, bloom: Option[KvBloom.Conf] = None) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new KvDataWriter(
       seq => s"$path/part-%05d-%d%s.parquet".format(partitionId, taskId,
         if (seq == 0) "" else s"-s$seq"),
-      schema, conv, batchSize)
+      schema, conv, batchSize, bloom)
 }
 
 /** Writes one task's rows. `batchSize` > 0 bounds buffering: every
   * `batchSize` rows the current part file is closed (a file-append
   * flush) and a `-sN`-suffixed successor opened — task memory stays
   * bounded however large the partition. 0 = unbounded (bulk-import
-  * path, one file per task).
+  * path, one file per task). With `bloom` (a live sidecar's conf) every
+  * written row is hashed too, and each closed file's entry rides in the
+  * commit message.
   */
 class KvDataWriter(fileForSeq: Int => String, schema: StructType,
     conv: Option[InternalRow => InternalRow] = None,
-    batchSize: Long = 0L) extends DataWriter[InternalRow] {
+    batchSize: Long = 0L, bloom: Option[KvBloom.Conf] = None) extends DataWriter[InternalRow] {
   private val messageType = ParquetIO.toParquetSchema(schema)
   private val files = scala.collection.mutable.ArrayBuffer(fileForSeq(0))
   private var writer = ParquetIO.openWriter(new Path(files.head), schema)
   private var rowsInFile = 0L
+  private val hasher = bloom.map(new KvBloom.FileHasher(_, schema))
+  private val entries = scala.collection.mutable.ArrayBuffer.empty[KvSidecar.Entry]
+  private def closeFile(): Unit = {
+    writer.close()
+    hasher.foreach(h => entries += h.close(new Path(files.last)))
+  }
   override def write(record: InternalRow): Unit = {
     if (batchSize > 0 && rowsInFile >= batchSize) {
-      writer.close()
+      closeFile()
       val next = fileForSeq(files.length)
       files += next
       writer = ParquetIO.openWriter(new Path(next), schema)
@@ -880,9 +914,13 @@ class KvDataWriter(fileForSeq: Int => String, schema: StructType,
     }
     val row = conv.map(_(record)).getOrElse(record)
     writer.write(ParquetIO.rowToGroup(row, schema, messageType))
+    hasher.foreach(_.add(row))
     rowsInFile += 1L
   }
-  override def commit(): WriterCommitMessage = { writer.close(); KvCommitMessage(files.toSeq) }
+  override def commit(): WriterCommitMessage = {
+    closeFile()
+    KvCommitMessage(files.toSeq, bloom.map(_ -> entries.toSeq))
+  }
   override def abort(): Unit = { writer.close(); files.foreach(ParquetIO.deletePath) }
   override def close(): Unit = ()
 }
@@ -898,7 +936,7 @@ class KvStreamingWrite(path: String, schema: StructType,
     conv: Option[InternalRow => InternalRow] = None,
     wopts: KvWriterOptions = KvWriterOptions("bulk", 0L)) extends StreamingWrite {
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    KvStreamingWriterFactory(path, schema, conv, wopts.batchSize)
+    KvStreamingWriterFactory(path, schema, conv, wopts.batchSize, KvBloom.writerConf(path, schema))
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     KvSchemaMeta.record(path, schema)
     val markers = new Path(path, "_commits")
@@ -916,14 +954,16 @@ class KvStreamingWrite(path: String, schema: StructType,
         }
         .foreach(f => fs.delete(f, false))
     }
+    // after the marker: only from here does the listing show the epoch's files
+    KvCommitMessage.publishSidecars(path, schema, messages)
   }
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case KvCommitMessage(files) => files.foreach(ParquetIO.deletePath) }
+    messages.collect { case m: KvCommitMessage => m.files.foreach(ParquetIO.deletePath) }
 }
 
 case class KvStreamingWriterFactory(path: String, schema: StructType,
     conv: Option[InternalRow => InternalRow] = None,
-    batchSize: Long = 0L)
+    batchSize: Long = 0L, bloom: Option[KvBloom.Conf] = None)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] = {
     new Path(path).getFileSystem(ParquetIO.hadoopConf).mkdirs(new Path(path))
@@ -932,6 +972,6 @@ case class KvStreamingWriterFactory(path: String, schema: StructType,
     new KvDataWriter(
       seq => s"$path/epoch-%d-part-%05d%s.parquet".format(epochId, partitionId,
         if (seq == 0) "" else s"-s$seq"),
-      schema, conv, batchSize)
+      schema, conv, batchSize, bloom)
   }
 }

@@ -54,6 +54,46 @@ class ExactlyOnceJdbcSinkSpec extends SparkSpec {
     assert(ids == Seq(10L, 11L), s"stale staged row must not leak: $ids")
   }
 
+  test("empty partitions stage nothing; a replay after a crash between staging and commit lands one copy") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val url = newDb()
+    val schema = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
+    // 3 rows over 4 slices: slice 0 holds none
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(1L, "a"), Row(2L, "b"), Row(3L, "c")), 4), schema)
+    assert(df.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq == Seq(0, 1, 1, 1))
+    // the crash: the batch is PENDING and every non-empty partition has
+    // staged its rows, but nothing was moved; partition 0's stale temp
+    // table is one an empty partition never rewrites
+    val c = DriverManager.getConnection(url)
+    c.createStatement().executeUpdate(
+      "CREATE TABLE GRAFT_SINK_LOG (sink_table VARCHAR(128) NOT NULL, " +
+        "batch_id BIGINT NOT NULL, status VARCHAR(16) NOT NULL, " +
+        "PRIMARY KEY (sink_table, batch_id))")
+    c.createStatement().executeUpdate("INSERT INTO GRAFT_SINK_LOG VALUES ('T6', 0, 'PENDING')")
+    c.createStatement().executeUpdate("CREATE TABLE T6 (id BIGINT, name VARCHAR(32672))")
+    c.createStatement().executeUpdate("CREATE TABLE TMP_T6_0_0 (id BIGINT, name VARCHAR(32672))")
+    c.createStatement().executeUpdate("INSERT INTO TMP_T6_0_0 VALUES (999, 'stale')")
+    Seq((1, 1L, "a"), (2, 2L, "b"), (3, 3L, "c")).foreach { case (p, id, name) =>
+      c.createStatement().executeUpdate(s"CREATE TABLE TMP_T6_0_$p (id BIGINT, name VARCHAR(32672))")
+      c.createStatement().executeUpdate(s"INSERT INTO TMP_T6_0_$p VALUES ($id, '$name')")
+    }
+    c.close()
+    assert(ExactlyOnceJdbcSink.addBatch(url, "T6", 0L, df))
+    assert(queryLongs(url, "SELECT id FROM T6 ORDER BY id") == Seq(1L, 2L, 3L))
+    val temps = "SELECT count(*) FROM SYS.SYSTABLES WHERE TABLENAME LIKE 'TMP_T6_%'"
+    assert(queryLongs(url, temps) == Seq(0L), "every temp table is dropped")
+    assert(!ExactlyOnceJdbcSink.addBatch(url, "T6", 0L, df), "a committed batch is skipped")
+    assert(queryLongs(url, "SELECT count(*) FROM T6") == Seq(3L))
+    // a batch of empty partitions only flips the log
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row].repartition(2), schema)
+    assert(ExactlyOnceJdbcSink.addBatch(url, "T6", 1L, empty))
+    assert(!ExactlyOnceJdbcSink.addBatch(url, "T6", 1L, empty))
+    assert(queryLongs(url, "SELECT count(*) FROM T6") == Seq(3L))
+    assert(queryLongs(url, temps) == Seq(0L))
+  }
+
   test("direct mode recovery deletes partially-written rows by batch id") {
     val url = newDb()
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")

@@ -33,12 +33,28 @@ class FooterReadsSpec extends SparkSpec {
       .filter(col("k") === 350L)
 
     val n = 3
+    // kv-written files: the commit reads each new footer once for the zone
+    // map (the Bloom entries come from the writer), shared with the planner
     val before = ParquetIO.footerReads.get()
     (2 until 2 + n).foreach(i => appendFile(dir, (i * 100L until (i + 1) * 100L)))
-    assert(KvBloom.append(spark, dir) == n)
-    assert(KvIndex.append(dir) == n)
+    assert(KvBloom.append(spark, dir) == 0)
+    assert(KvIndex.append(dir) == 0)
     assert(plannedFiles(lookup()).size == 1, "the lookup prunes to its owning file")
     assert(ParquetIO.footerReads.get() - before == n,
+      "each kv-written file's footer is read once, shared by the commit and the planner")
+
+    // files from another writer: read once each, shared by bloom, zone map and planner
+    val beforeRaw = ParquetIO.footerReads.get()
+    (5 until 5 + n).foreach { i =>
+      RawParquet.write(dir, s"ext-$i.parquet",
+        (i * 100L until (i + 1) * 100L).map(k => (k, s"v$k")).toDF("k", "v"))
+    }
+    assert(KvBloom.append(spark, dir) == n)
+    assert(KvIndex.append(dir) == n)
+    def rawLookup() = spark.read.format("kv").option("path", dir).load()
+      .filter(col("k") === 650L)
+    assert(plannedFiles(rawLookup()).size == 1, "the lookup prunes to its owning file")
+    assert(ParquetIO.footerReads.get() - beforeRaw == n,
       "each new file's footer is read once, shared by bloom, zone map and planner")
 
     val planned = ParquetIO.footerReads.get()

@@ -74,9 +74,9 @@ class KvBloomSpec extends SparkSpec {
 
   test("files not covered by the sidecar are never pruned; corrupt sidecar degrades safely") {
     val dir = stage()
-    // a later append is NOT in the sidecar — lookups must still see it
-    Seq((9999L, "late")).toDF("k", "v").coalesce(1)
-      .write.format("kv").option("path", dir).mode("append").save()
+    // a later file from another writer is NOT in the sidecar — lookups
+    // must still see it
+    RawParquet.write(dir, "ext-late.parquet", Seq((9999L, "late")).toDF("k", "v"))
     val late = spark.read.format("kv").option("path", dir).load()
       .filter(col("k") === 9999L)
     assert(late.count() == 1, "uncovered file must never be pruned")
@@ -167,20 +167,30 @@ class KvBloomSpec extends SparkSpec {
 
   test("append hashes only the new files and extends point-lookup pruning to them") {
     val dir = stage() // 8 covered files, keys 0..799
-    (0 until 2).foreach { i =>
-      (800L + i * 100 until 900L + i * 100).map(k => (k, s"v$k")).toDF("k", "v")
-        .coalesce(1)
-        .write.format("kv").option("path", dir).mode("append").save()
-    }
+    def wave(i: Int) = (800L + i * 100 until 900L + i * 100).map(k => (k, s"v$k")).toDF("k", "v")
     def read() = spark.read.format("kv").option("path", dir).load()
-    val reader0 = graft.sources.kv.KvBloom.reader(dir).get
-    val newNames = ParquetIO.listFilesStatus(dir).collect {
-      case (f, len, mt) if reader0.bloomsFor(f.getName, len, mt).isEmpty =>
-        f.toString
+    def uncovered(): Seq[String] = {
+      graft.sources.kv.KvSidecar.clearCaches()
+      val reader = graft.sources.kv.KvBloom.reader(dir).get
+      ParquetIO.listFilesStatus(dir).collect {
+        case (f, len, mt) if reader.bloomsFor(f.getName, len, mt).isEmpty => f.toString
+      }
     }
+    // a kv write into the live sidecar covers its own file at commit:
+    // append finds nothing, and a lookup prunes at once
+    wave(0).coalesce(1).write.format("kv").option("path", dir).mode("append").save()
+    assert(uncovered().isEmpty, "the kv writer covered its file")
+    assert(graft.sources.kv.KvBloom.append(spark, dir) == 0)
+    val kvHit = read().filter(col("k") === 850L)
+    assert(plannedFiles(kvHit).size <= 2, s"owning file + FP only: ${plannedFiles(kvHit)}")
+    assert(kvHit.select("v").as[String].collect().toSeq == Seq("v850"))
+
+    // files another writer puts into the table dir stay uncovered
+    (1 to 2).foreach(i => RawParquet.write(dir, s"ext-$i.parquet", wave(i)))
+    val newNames = uncovered()
     // uncovered: BOTH new files survive every lookup's pruning (a bloom
     // false positive may add an old file — never subtract a new one)
-    val pre = plannedFiles(read().filter(col("k") === 850L))
+    val pre = plannedFiles(read().filter(col("k") === 950L))
     assert(newNames.length == 2 && newNames.forall(pre.contains),
       s"uncovered files must plan: new=$newNames planned=$pre")
 
@@ -188,9 +198,9 @@ class KvBloomSpec extends SparkSpec {
     assert(graft.sources.kv.KvBloom.append(spark, dir) == 0)
     graft.sources.kv.KvSidecar.clearCaches()
 
-    // new coverage: the second wave's non-owning file now PRUNES for a
-    // wave-2 key (only FP-rate old files may ride along); value exact
-    val hit = read().filter(col("k") === 850L)
+    // new coverage: the other writer's non-owning file now PRUNES for a
+    // key of its sibling (only FP-rate old files may ride along); exact
+    val hit = read().filter(col("k") === 950L)
     val post = plannedFiles(hit)
     assert(post.count(newNames.contains) == 1,
       s"exactly the owning new file plans: $post")
@@ -198,14 +208,14 @@ class KvBloomSpec extends SparkSpec {
     // delta is exactly the pruned non-owning new file
     assert(post.size == pre.size - 1,
       s"pruning must drop the non-owning new file: pre=$pre post=$post")
-    assert(hit.select("v").as[String].collect().toSeq == Seq("v850"))
+    assert(hit.select("v").as[String].collect().toSeq == Seq("v950"))
     // absent key: every covered file may prove absence (tolerate the
     // ~1%/file false-positive rate, never a false negative)
     val absent = read().filter(col("k") === 123456L)
     assert(plannedFiles(absent).size <= 2)
     assert(absent.count() == 0)
     assert(read().filter(col("k") === 50L).count() == 1)
-    assert(read().count() == 1000)
+    assert(read().count() == 1100)
   }
 
   test("append refuses missing/tombstoned sidecars; allowlist scan reads only its files") {

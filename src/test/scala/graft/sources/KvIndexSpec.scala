@@ -85,9 +85,8 @@ class KvIndexSpec extends SparkSpec {
   test("index stays safe when new files arrive after the build (stale map)") {
     val dir = makeTable()
     KvIndex.build(dir, Seq("k", "cat"))
-    // append a file the index has never seen
-    Seq((9999L, "cat0", 1.0)).toDF("k", "cat", "v").coalesce(1)
-      .write.format("kv").option("path", dir).mode("append").save()
+    // another writer adds a file the index has never seen
+    RawParquet.write(dir, "ext-late.parquet", Seq((9999L, "cat0", 1.0)).toDF("k", "cat", "v"))
     val got = spark.read.format("kv").option("path", dir).load()
       .filter(col("k") === 9999L).collect()
     assert(got.length == 1, "uncovered files are never pruned and still filtered correctly")
@@ -106,26 +105,30 @@ class KvIndexSpec extends SparkSpec {
   test("append indexes only the new files and extends pruning to them") {
     val dir = makeTable() // 4 files, disjoint 1000-row key ranges
     KvIndex.build(dir, Seq("k", "cat"))
-    (4 until 6).foreach { part =>
-      (part * 1000 until (part + 1) * 1000)
-        .map(i => (i.toLong, s"cat${i % 5}", i * 1.5))
-        .toDF("k", "cat", "v").coalesce(1)
-        .write.format("kv").option("path", dir).mode("append").save()
-    }
+    def part(p: Int) = (p * 1000 until (p + 1) * 1000)
+      .map(i => (i.toLong, s"cat${i % 5}", i * 1.5)).toDF("k", "cat", "v")
     def read() = spark.read.format("kv").option("path", dir).load()
-    // pre-append the two new files are uncovered: a point probe inside
-    // an OLD file's range still plans the uncovered files (never pruned)
+    // a kv write into the live index covers its own file at commit:
+    // append finds nothing, and a range inside it prunes at once
+    part(4).coalesce(1).write.format("kv").option("path", dir).mode("append").save()
+    assert(KvIndex.append(dir) == 0, "the kv writer indexed its file")
+    assert(plannedFiles(read().filter(col("k").between(4200L, 4300L))).size == 1)
+
+    // files another writer puts into the table dir stay uncovered: a
+    // point probe inside an OLD file's range still plans them (never
+    // pruned)
+    (5 until 7).foreach(p => RawParquet.write(dir, s"ext-$p.parquet", part(p)))
     assert(plannedFiles(read().filter(col("k").between(1200L, 1300L))).size == 3)
 
     assert(KvIndex.append(dir) == 2, "exactly the two new files get indexed")
     assert(KvIndex.append(dir) == 0, "append is a no-op when coverage is complete")
     graft.sources.kv.KvSidecar.clearCaches()
 
-    // new coverage prunes: a range inside file 5 plans one file…
-    assert(plannedFiles(read().filter(col("k").between(5200L, 5300L))).size == 1)
+    // new coverage prunes: a range inside file 6 plans one file…
+    assert(plannedFiles(read().filter(col("k").between(6200L, 6300L))).size == 1)
     // …and old coverage is untouched
     assert(plannedFiles(read().filter(col("k").between(1200L, 1300L))).size == 1)
-    assert(read().filter(col("k") >= 4000L).count() == 2000)
+    assert(read().filter(col("k") >= 4000L).count() == 3000)
   }
 
   test("append re-shards when the file count outgrows the shard budget") {
@@ -137,9 +140,11 @@ class KvIndexSpec extends SparkSpec {
     KvIndex.build(dir, Seq("k"))
     assert(KvSidecar.open(dir, KvIndex.SidecarName).get.numShards == 1)
 
-    (0 until 1000).map(i => (i + 10000L, i * 1.0)).toDF("k", "v")
-      .repartition(10)
-      .write.format("kv").option("path", dir).mode("append").save()
+    // ten files from another writer take the table past 64 files
+    (0 until 10).foreach { p =>
+      RawParquet.write(dir, s"ext-$p.parquet",
+        (0 until 100).map(i => (10000L + p * 100 + i, i * 1.0)).toDF("k", "v"))
+    }
     assert(KvIndex.append(dir) == 10)
     KvSidecar.clearCaches()
     val sc = KvSidecar.open(dir, KvIndex.SidecarName).get
@@ -149,6 +154,10 @@ class KvIndexSpec extends SparkSpec {
     val live = ParquetIO.listFilesStatus(dir)
     assert(live.length == 70)
     assert(live.forall { case (f, l, m) => sc.entryFor(f.getName, l, m).isDefined })
+    // and a kv write on top is covered by its own commit
+    (0 until 100).map(i => (20000L + i, i * 1.0)).toDF("k", "v").coalesce(1)
+      .write.format("kv").option("path", dir).mode("append").save()
+    assert(KvIndex.append(dir) == 0)
   }
 
   test("append refuses a missing or tombstoned index instead of guessing config") {

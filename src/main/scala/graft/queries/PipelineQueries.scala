@@ -22,7 +22,7 @@ object PipelineQueries {
   private def stagedPngDocs(s: SparkSession, dir: String): DataFrame = {
     val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val pngDir = s"/tmp/graft_png$safe"
-    if (graft.sources.ParquetIO.listFiles(pngDir).isEmpty) {
+    Tables.stageOnce(pngDir) {
       Multimodal.withPngPayload(
         Tables.load(s, dir, "documents").select(col("doc_id")), "doc_id")
         .write.format("kv").option("path", pngDir).mode("overwrite").save()
@@ -45,7 +45,7 @@ object PipelineQueries {
   private def stagedWavDocs(s: SparkSession, dir: String): DataFrame = {
     val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val wavDir = s"/tmp/graft_wav$safe"
-    if (graft.sources.ParquetIO.listFiles(wavDir).isEmpty) {
+    Tables.stageOnce(wavDir) {
       Multimodal.withWavPayload(
         Tables.load(s, dir, "documents").select(col("doc_id")), "doc_id")
         .write.format("kv").option("path", wavDir).mode("overwrite").save()
@@ -146,7 +146,7 @@ object PipelineQueries {
     "q_multimodal_video" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val gfvDir = s"/tmp/graft_gfv$safe"
-      if (graft.sources.ParquetIO.listFiles(gfvDir).isEmpty) {
+      Tables.stageOnce(gfvDir) {
         Multimodal.withGfvPayload(
           Tables.load(s, dir, "documents").select(col("doc_id")), "doc_id")
           .write.format("kv").option("path", gfvDir).mode("overwrite").save()
@@ -2104,7 +2104,7 @@ object PipelineQueries {
     "q_multimodal_video_avi" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val aviDir = s"/tmp/graft_avi$safe"
-      if (graft.sources.ParquetIO.listFiles(aviDir).isEmpty) {
+      Tables.stageOnce(aviDir) {
         Multimodal.withAviPayload(
           Tables.load(s, dir, "documents").select(col("doc_id")), "doc_id")
           .write.format("kv").option("path", aviDir).mode("overwrite").save()

@@ -93,7 +93,7 @@ object SourceQueries {
     "q_kv_wide_types" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_widetypes3$safe"
-      if (ParquetIO.listFiles(staged).isEmpty) {
+      graft.Tables.stageOnce(staged) {
         graft.Tables.load(s, dir, "lineitem")
           .select(col("l_orderkey"),
             col("l_extendedprice").cast("decimal(28,4)").as("price_wide"),
@@ -190,7 +190,7 @@ object SourceQueries {
     "q_kv_infer" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_infer$safe"
-      if (ParquetIO.listFiles(staged).isEmpty) {
+      graft.Tables.stageOnce(staged) {
         val o = graft.Tables.load(s, dir, "orders")
         o.where(col("o_orderkey") % 3 === 0)
           .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
@@ -330,7 +330,7 @@ object SourceQueries {
     "q_kv_file_audit" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_filecol$safe"
-      if (ParquetIO.listFiles(staged).isEmpty) {
+      graft.Tables.stageOnce(staged) {
         graft.Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
           .repartition(8)
@@ -406,11 +406,7 @@ object SourceQueries {
     "q_kv_bloom_prune" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_bloom$safe"
-      // restage when the table OR its sharded sidecar is missing (a
-      // staged dir carrying only a legacy monolithic sidecar rebuilds)
-      if (ParquetIO.listFiles(staged).isEmpty ||
-          graft.sources.kv.KvBloom.reader(staged).isEmpty) {
-        ParquetIO.deletePath(staged)
+      graft.Tables.stageOnce(staged) {
         graft.Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
           .repartition(8)
@@ -434,9 +430,7 @@ object SourceQueries {
     "q_kv_bloom_append" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_bloomapp$safe"
-      val marker = new java.io.File(staged, "_GATE_STAGED")
-      if (!marker.exists()) {
-        ParquetIO.deletePath(staged)
+      graft.Tables.stageOnce(staged) {
         val cust = graft.Tables.load(s, dir, "customer")
           .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
         cust.filter(col("c_custkey") % 2 === 0).repartition(4)
@@ -444,7 +438,6 @@ object SourceQueries {
         graft.sources.kv.KvBloom.build(s, staged, Seq("c_custkey"))
         cust.filter(col("c_custkey") % 2 === 1).repartition(2)
           .write.format("kv").option("path", staged).mode("append").save()
-        marker.createNewFile()
       }
       graft.sources.kv.KvBloom.append(s, staged)
       s.read.format("kv").option("path", staged).load()
@@ -613,7 +606,7 @@ object SourceQueries {
     "q_kv_compact" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_compact$safe"
-      if (ParquetIO.listFiles(staged).isEmpty) {
+      graft.Tables.stageOnce(staged) {
         graft.Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
           .repartition(8)
@@ -638,19 +631,12 @@ object SourceQueries {
     "q_kv_zorder" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_zorder$safe"
-      // marker-gated staging: a run dying mid-stage restages from
-      // scratch instead of zorder-rewriting a partial slice forever.
-      // The marker sits BESIDE the table — the rewrite's whole-dir swap
-      // below would delete an in-table marker every invocation.
-      val marker = new java.io.File(staged + ".staged")
-      if (!marker.exists()) {
-        ParquetIO.deletePath(staged)
+      graft.Tables.stageOnce(staged) {
         graft.Tables.load(s, dir, "lineitem")
           .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"),
             col("l_extendedprice"))
           .repartition(8)
           .write.format("kv").option("path", staged).mode("overwrite").save()
-        marker.createNewFile()
       }
       graft.operators.KvMerge.rewrite(s, staged, numFiles = 8,
         zorderBy = Seq("l_partkey", "l_suppkey"))
@@ -674,12 +660,7 @@ object SourceQueries {
     "q_kv_index_append" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_idxapp$safe"
-      // marker-gated staging (the q_kv_bucketed_join discipline): a run
-      // dying mid-stage restages from scratch instead of stranding the
-      // gate on a half-written pair of waves
-      val marker = new java.io.File(staged, "_GATE_STAGED")
-      if (!marker.exists()) {
-        ParquetIO.deletePath(staged)
+      graft.Tables.stageOnce(staged) {
         val ord = graft.Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         ord.filter(col("o_orderkey") % 2 === 0).repartition(4)
@@ -687,7 +668,6 @@ object SourceQueries {
         graft.sources.kv.KvIndex.build(staged, Seq("o_orderkey"))
         ord.filter(col("o_orderkey") % 2 === 1).repartition(2)
           .write.format("kv").option("path", staged).mode("append").save()
-        marker.createNewFile()
       }
       graft.sources.kv.KvIndex.append(staged)
       s.read.format("kv").option("path", staged).load()
@@ -708,21 +688,15 @@ object SourceQueries {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val ordersT = s"/tmp/graft_spjorders$safe"
       val custT = s"/tmp/graft_spjcust$safe"
-      // each table gated on ITS OWN completion marker (written after the
-      // bucketize): a run that dies between the two tables' staging can't
-      // strand the gate on a half-staged pair — the unmarked table
-      // restages from scratch on the next run
-      def stage(path: String)(build: => Unit): Unit = {
-        val marker = new java.io.File(path, "_GATE_STAGED")
-        if (!marker.exists()) { build; marker.createNewFile(); () }
-      }
-      stage(ordersT) {
+      // each table staged on its own marker (after the bucketize): a run
+      // that dies between the two can't strand a half-staged pair
+      graft.Tables.stageOnce(ordersT) {
         graft.Tables.load(s, dir, "orders")
           .select(col("o_custkey").as("custkey"), col("o_totalprice"))
           .write.format("kv").option("path", ordersT).mode("overwrite").save()
         graft.operators.KvMerge.bucketize(s, ordersT, 8, Seq("custkey"))
       }
-      stage(custT) {
+      graft.Tables.stageOnce(custT) {
         graft.Tables.load(s, dir, "customer")
           .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
           .write.format("kv").option("path", custT).mode("overwrite").save()
@@ -1069,7 +1043,7 @@ object SourceQueries {
     "q_warehouse_rw" -> ((s, dir) => {
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_wh$safe"
-      if (!new java.io.File(staged).exists()) {
+      graft.Tables.stageOnce(staged) {
         val orders = graft.Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
         graft.sources.Warehouse.saveTable(orders, staged,
@@ -1099,7 +1073,7 @@ object SourceQueries {
           | {"name":"o_orderkey","type":"long"},
           | {"name":"o_orderstatus","type":["null","string"],"default":null},
           | {"name":"o_totalprice","type":"double"}]}""".stripMargin
-      if (ParquetIO.listFiles(tableDir).isEmpty) {
+      graft.Tables.stageOnce(tableDir) {
         val fs = new org.apache.hadoop.fs.Path(registry)
           .getFileSystem(ParquetIO.hadoopConf)
         fs.mkdirs(new org.apache.hadoop.fs.Path(registry))
@@ -1113,7 +1087,6 @@ object SourceQueries {
         val binSchema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("value",
             org.apache.spark.sql.types.BinaryType)))
-        val mt = ParquetIO.toParquetSchema(binSchema)
         fs.mkdirs(new org.apache.hadoop.fs.Path(tableDir))
         val w = ParquetIO.openWriter(
           new org.apache.hadoop.fs.Path(tableDir, "shard-0.parquet"), binSchema)
@@ -1131,7 +1104,7 @@ object SourceQueries {
             enc.flush()
             val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
             row.update(0, out.toByteArray)
-            w.write(ParquetIO.rowToGroup(row, binSchema, mt))
+            w.write(row)
           }
         w.close()
       }

@@ -272,7 +272,7 @@ object TextQueries {
       // the oracle needs no batch-boundary model)
       val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val staged = s"/tmp/graft_ingeststage$safe"
-      if (ParquetIO.listFiles(staged).isEmpty) {
+      Tables.stageOnce(staged) {
         val docs = Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("text"), col("source"))
         docs.unionByName(

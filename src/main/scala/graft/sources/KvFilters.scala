@@ -73,7 +73,7 @@ object KvFilters {
 
     // ---- timestamp predicates: exact per-operator bound conversion ----
     //
-    // Read side (ParquetIO.timestampToMicros): MILLIS → stored*1000 (exact
+    // Read side (ParquetIO.readFile): MILLIS → stored*1000 (exact
     // widening), MICROS → identity, NANOS → stored/1000 (truncation toward
     // zero). Spark evaluates the user predicate against that micros value,
     // so a pushed record-level predicate must accept EXACTLY the storage

@@ -1,34 +1,37 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.json4s.{JArray, JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** Low-level parquet plumbing shared by the kv / log / cdc sources:
-  * file listing, footer metadata, Group↔InternalRow conversion, and a
-  * projected + filtered record iterator.
+  * file listing, footer metadata, and the one parquet codec — Spark's
+  * own: `ParquetWriteSupport` writes every file, and Spark's row
+  * converter decodes the projected + filtered record iterator.
   *
   * Scope covers the reference's wide-column data model (primitives,
   * string/binary, timestamp/date — `TableStoreFilter.scala:123-146`)
   * plus its ODPS nested-type fidelity (`OdpsUtils.scala:398-457`): wide
-  * decimals, ARRAY/MAP of primitives, one struct level. Uses only public
-  * parquet-hadoop APIs.
+  * decimals, ARRAY/MAP/struct at any depth. Uses only public
+  * parquet-hadoop and Spark parquet-support APIs.
   */
 object ParquetIO {
 
@@ -164,14 +167,10 @@ object ParquetIO {
     fs.mkdirs(commits)
     val marker = new Path(commits, s"rlo-$txid")
     val tmp = new Path(commits, s".rlo-$txid.tmp")
-    val body: org.json4s.JValue = org.json4s.JObject(
-      "removed" -> org.json4s.JArray(removed.map(org.json4s.JString(_)).toList),
-      "epoch" -> org.json4s.JInt(epoch))
+    val body = compact(render(JObject(
+      "removed" -> JArray(removed.map(JString(_)).toList), "epoch" -> JInt(epoch))))
     val out = fs.create(tmp, true)
-    try out.write(org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(body)
-    ).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    try out.write(body.getBytes(UTF_8)) finally out.close()
     require(fs.rename(tmp, marker), s"rlo marker commit failed for $marker")
   }
 
@@ -204,30 +203,24 @@ object ParquetIO {
     * array-bodied markers (pre-watermark builds) read as epoch -1 —
     * they never block a snapshot, the old behavior.
     */
-  private[graft] def rloInfoCached(fs: org.apache.hadoop.fs.FileSystem,
-      marker: Path): (Set[String], Long) =
+  private[graft] def rloInfoCached(fs: FileSystem, marker: Path): (Set[String], Long) =
     rloMarkerCache.computeIfAbsent(marker.toString, _ =>
       scala.util.Try {
-        val in = fs.open(marker)
-        val body = try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-        org.json4s.jackson.JsonMethods.parse(body) match {
-          case org.json4s.JArray(vs) =>
-            (vs.collect { case org.json4s.JString(s) => s }.toSet, -1L)
-          case o: org.json4s.JObject =>
-            val removed = (o \ "removed") match {
-              case org.json4s.JArray(vs) =>
-                vs.collect { case org.json4s.JString(s) => s }.toSet
-              case _ => Set.empty[String]
-            }
-            val epoch = (o \ "epoch") match {
-              case org.json4s.JInt(e) => e.toLong
-              case _ => -1L
-            }
-            (removed, epoch)
+        def names(v: JValue) = v.children.collect { case JString(s) => s }.toSet
+        parse(readString(fs, marker)) match {
+          case a: JArray => (names(a), -1L)
+          case o: JObject => (names(o \ "removed"), o \ "epoch" match {
+            case JInt(e) => e.toLong
+            case _ => -1L
+          })
           case _ => (Set.empty[String], -1L)
         }
       }.getOrElse((Set.empty[String], -1L)))
+
+  private def readString(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
 
   // ---- rlo history floor (marker compaction) ---------------------------
 
@@ -247,9 +240,7 @@ object ParquetIO {
     fs.mkdirs(p.getParent)
     val tmp = new Path(p.getParent, s".${p.getName}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(s"""{"floorEpoch":$merged}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    try out.write(s"""{"floorEpoch":$merged}""".getBytes(UTF_8)) finally out.close()
     if (fs.exists(p)) fs.delete(p, false)
     if (!fs.rename(tmp, p)) fs.delete(tmp, false)
     ()
@@ -261,14 +252,9 @@ object ParquetIO {
       val p = rloFloorFile(tablePath)
       val fs = p.getFileSystem(hadoopConf)
       if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val body = try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-        org.json4s.jackson.JsonMethods.parse(body) \ "floorEpoch" match {
-          case org.json4s.JInt(e) => Some(e.toLong)
-          case _ => None
-        }
+      else parse(readString(fs, p)) \ "floorEpoch" match {
+        case JInt(e) => Some(e.toLong)
+        case _ => None
       }
     }.toOption.flatten
 
@@ -395,273 +381,49 @@ object ParquetIO {
     })
   }
 
-  /** Spark StructType → parquet MessageType. Nested types recurse
-    * arbitrarily (array-of-struct, struct-of-struct, map-of-struct …) —
-    * the reference's ODPS converter fidelity
-    * (OdpsUtils.sparkData2OdpsData:398-457).
+  /** Data-reading opens so far, JVM-wide: one per [[readFile]] and one
+    * per chunk the columnar plane (`KvVectorized.reader`) opens. Each
+    * reads the file's footer again, apart from [[footerReads]].
     */
-  def toParquetSchema(schema: StructType, name: String = "graft_schema"): MessageType = {
-    val builder = Types.buildMessage()
-    schema.fields.foreach(f =>
-      builder.addField(fieldType(f.dataType, f.name, Type.Repetition.OPTIONAL, f.name)))
-    builder.named(name)
+  val dataOpens = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Hadoop conf for Spark's parquet read support, shared by the row
+    * converter ([[readFile]]) and the vectorized reader: the requested
+    * Spark schema plus the keys Spark's parquet-to-Spark schema converter
+    * reads without a default.
+    */
+  private[graft] def sparkReadConf(requested: StructType): Configuration = {
+    val conf = hadoopConf
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, false)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, true)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, false)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, true)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, true)
+    conf
   }
 
-  /** Parquet type for one field at any nesting depth — primitives,
-    * timestamps/dates/decimals, and recursive LIST/MAP/struct groups.
+  /** Columns Spark's row converter cannot decode as declared, read as
+    * stored (LongType) and converted after: INT64 as double, and INT64
+    * timestamps in a unit other than MILLIS/MICROS (NANOS → micros,
+    * unannotated → micros as is). INT32 as long or double, FLOAT as
+    * double and MILLIS timestamps the converter widens itself — the
+    * reference's row-conversion coercions
+    * (`TableStoreRelation.scala:181-258`).
     */
-  private def fieldType(dt: DataType, name: String, rep: Type.Repetition,
-      owner: String): Type = dt match {
-    case LongType => Types.primitive(PrimitiveTypeName.INT64, rep).named(name)
-    case IntegerType => Types.primitive(PrimitiveTypeName.INT32, rep).named(name)
-    case DoubleType => Types.primitive(PrimitiveTypeName.DOUBLE, rep).named(name)
-    case FloatType => Types.primitive(PrimitiveTypeName.FLOAT, rep).named(name)
-    case BooleanType => Types.primitive(PrimitiveTypeName.BOOLEAN, rep).named(name)
-    case StringType => Types.primitive(PrimitiveTypeName.BINARY, rep)
-      .as(LogicalTypeAnnotation.stringType()).named(name)
-    case BinaryType => Types.primitive(PrimitiveTypeName.BINARY, rep).named(name)
-    case TimestampType => Types.primitive(PrimitiveTypeName.INT64, rep)
-      .as(LogicalTypeAnnotation.timestampType(true, TimeUnit.MICROS)).named(name)
-    case TimestampNTZType => Types.primitive(PrimitiveTypeName.INT64, rep)
-      .as(LogicalTypeAnnotation.timestampType(false, TimeUnit.MICROS)).named(name)
-    case DateType => Types.primitive(PrimitiveTypeName.INT32, rep)
-      .as(LogicalTypeAnnotation.dateType()).named(name)
-    case d: DecimalType if d.precision <= 18 =>
-      // INT64-backed decimal (unscaled long) — the reference's decimal
-      // discipline requires explicit precision/scale (DatahubData
-      // .scala:97-100)
-      Types.primitive(PrimitiveTypeName.INT64, rep)
-        .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision)).named(name)
-    case d: DecimalType =>
-      // wide decimal (p > 18): FIXED_LEN_BYTE_ARRAY big-endian
-      // two's-complement unscaled value — parquet's standard encoding,
-      // the reference's full-precision ODPS decimal fidelity
-      Types.primitive(PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY, rep)
-        .length(minBytesForPrecision(d.precision))
-        .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision)).named(name)
-    case ArrayType(et, _) =>
-      // standard parquet 3-level LIST; element type recurses
-      Types.buildGroup(rep)
-        .as(LogicalTypeAnnotation.listType())
-        .addField(Types.repeatedGroup()
-          .addField(fieldType(et, "element", Type.Repetition.OPTIONAL, owner))
-          .named("list"))
-        .named(name)
-    case MapType(kt, vt, _) =>
-      // standard parquet MAP: repeated key_value(required key, optional
-      // value); both sides recurse
-      Types.buildGroup(rep)
-        .as(LogicalTypeAnnotation.mapType())
-        .addField(Types.repeatedGroup()
-          .addField(fieldType(kt, "key", Type.Repetition.REQUIRED, owner))
-          .addField(fieldType(vt, "value", Type.Repetition.OPTIONAL, owner))
-          .named("key_value"))
-        .named(name)
-    case st: StructType =>
-      val b = Types.buildGroup(rep)
-      st.fields.foreach(sf =>
-        b.addField(fieldType(sf.dataType, sf.name, Type.Repetition.OPTIONAL, owner)))
-      b.named(name)
-    case other => throw new IllegalArgumentException(
-      s"unsupported kv/log type $other in column $owner")
-  }
-
-  /** Smallest byte length whose signed two's-complement range covers
-    * 10^precision - 1 (parquet's FIXED_LEN_BYTE_ARRAY decimal sizing).
-    */
-  def minBytesForPrecision(precision: Int): Int = {
-    var n = 1
-    while (math.pow(2.0, 8 * n - 1) < math.pow(10.0, precision)) n += 1
-    n
-  }
-
-  /** Projection of the file schema to `columns` (file field types win,
-    * so storage units for timestamps are preserved). Columns absent from
-    * the file are skipped — the wide-column sparse-attribute model: a row
-    * without the attribute reads as NULL (reference Tablestore rows carry
-    * only the columns they have, `TableStoreRelation.scala:290-361`).
-    */
-  def projectSchema(file: MessageType, columns: Seq[String]): MessageType = {
-    val fields = columns.filter(file.containsField)
-      .map(c => file.getType(file.getFieldIndex(c)))
-    new MessageType(file.getName, fields: _*)
-  }
-
-  /** Read field `idx` of `g` (first repetition) as a Catalyst value of
-    * `dt` — recursive over LIST/MAP/struct, with the same storage-type
-    * widening and timestamp-unit handling as the top level (the group
-    * carries its own parquet type, so nested metadata is available).
-    */
-  private def readValue(g: Group, idx: Int, dt: DataType): Any = dt match {
-    case LongType =>
-      g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT32 => g.getInteger(idx, 0).toLong
-        case _ => g.getLong(idx, 0)
+  private def storedAsLong(t: Type, dt: DataType): Option[Long => Any] =
+    if (!t.isPrimitive ||
+        t.asPrimitiveType().getPrimitiveTypeName != PrimitiveTypeName.INT64) None
+    else dt match {
+      case DoubleType => Some(_.toDouble)
+      case TimestampType | TimestampNTZType => t.getLogicalTypeAnnotation match {
+        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+            if ts.getUnit != TimeUnit.NANOS => None
+        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => Some(_ / 1000L)
+        case _ => Some(v => v)
       }
-    case IntegerType => g.getInteger(idx, 0)
-    case DoubleType =>
-      g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-        case PrimitiveTypeName.FLOAT => g.getFloat(idx, 0).toDouble
-        case PrimitiveTypeName.INT32 => g.getInteger(idx, 0).toDouble
-        case PrimitiveTypeName.INT64 => g.getLong(idx, 0).toDouble
-        case _ => g.getDouble(idx, 0)
-      }
-    case FloatType => g.getFloat(idx, 0)
-    case BooleanType => g.getBoolean(idx, 0)
-    case StringType => UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
-    case BinaryType => g.getBinary(idx, 0).getBytes
-    case TimestampType | TimestampNTZType =>
-      val unit = g.getType.getType(idx).asPrimitiveType().getLogicalTypeAnnotation match {
-        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => ts.getUnit
-        case _ => TimeUnit.MICROS
-      }
-      timestampToMicros(g.getLong(idx, 0), unit)
-    case DateType => g.getInteger(idx, 0)
-    case d: DecimalType =>
-      g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT32 => org.apache.spark.sql.types.Decimal
-          .createUnsafe(g.getInteger(idx, 0).toLong, d.precision, d.scale)
-        case PrimitiveTypeName.INT64 => org.apache.spark.sql.types.Decimal
-          .createUnsafe(g.getLong(idx, 0), d.precision, d.scale)
-        case _ =>
-          val unscaled = new java.math.BigInteger(g.getBinary(idx, 0).getBytes)
-          org.apache.spark.sql.types.Decimal(
-            scala.math.BigDecimal(scala.math.BigInt(unscaled), d.scale),
-            d.precision, d.scale)
-      }
-    case ArrayType(et, _) => readList(g.getGroup(idx, 0), et)
-    case MapType(kt, vt, _) => readMap(g.getGroup(idx, 0), kt, vt)
-    case st: StructType => readStruct(g.getGroup(idx, 0), st)
-    case other => throw new IllegalArgumentException(
-      s"unsupported element/field type $other")
-  }
-
-  /** 3-level LIST group → GenericArrayData (elements recurse). */
-  private def readList(outer: Group, et: DataType): Any = {
-    val n = outer.getFieldRepetitionCount(0)
-    val values = new Array[Any](n)
-    var j = 0
-    while (j < n) {
-      val el = outer.getGroup(0, j)
-      values(j) =
-        if (el.getFieldRepetitionCount(0) == 0) null else readValue(el, 0, et)
-      j += 1
+      case _ => None
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(values)
-  }
-
-  /** MAP group → ArrayBasedMapData (keys/values recurse). */
-  private def readMap(outer: Group, kt: DataType, vt: DataType): Any = {
-    val n = outer.getFieldRepetitionCount(0)
-    val keys = new Array[Any](n)
-    val vals = new Array[Any](n)
-    var j = 0
-    while (j < n) {
-      val kv = outer.getGroup(0, j)
-      keys(j) = readValue(kv, 0, kt)
-      vals(j) = if (kv.getFieldRepetitionCount(1) == 0) null else readValue(kv, 1, vt)
-      j += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayBasedMapData(keys, vals)
-  }
-
-  /** struct group → InternalRow (fields recurse). */
-  private def readStruct(sg: Group, st: StructType): InternalRow = {
-    val nested = new GenericInternalRow(st.length)
-    var j = 0
-    while (j < st.length) {
-      if (sg.getFieldRepetitionCount(j) == 0) nested.setNullAt(j)
-      else nested.update(j, readValue(sg, j, st(j).dataType))
-      j += 1
-    }
-    nested
-  }
-
-  /** Timestamp storage unit multiplier → micros. */
-  private def timestampToMicros(value: Long, unit: TimeUnit): Long = unit match {
-    case TimeUnit.MILLIS => value * 1000L
-    case TimeUnit.MICROS => value
-    case TimeUnit.NANOS => value / 1000L
-  }
-
-  /** Convert one parquet Group to an InternalRow laid out as `schema`
-    * (names matched positionally against the projection).
-    */
-  def groupToRow(g: Group, projection: MessageType, schema: StructType): InternalRow = {
-    val row = new GenericInternalRow(schema.length)
-    var i = 0
-    while (i < schema.length) {
-      val field = schema(i)
-      if (!projection.containsField(field.name)) {
-        row.setNullAt(i) // sparse attribute: column absent from this file
-        i += 1
-      } else {
-      val pqIdx = projection.getFieldIndex(field.name)
-      if (g.getFieldRepetitionCount(pqIdx) == 0) {
-        row.setNullAt(i)
-      } else {
-        val rawType = projection.getType(pqIdx)
-        // LIST columns are group-typed; everything else is primitive
-        val pqName =
-          if (rawType.isPrimitive) rawType.asPrimitiveType().getPrimitiveTypeName else null
-        field.dataType match {
-          // widening coercions (declared type wider than storage) mirror
-          // the reference's row-conversion long/int/float handling
-          // (TableStoreRelation.scala:181-258)
-          case d: DecimalType if pqName == PrimitiveTypeName.INT32 =>
-            row.update(i, org.apache.spark.sql.types.Decimal
-              .createUnsafe(g.getInteger(pqIdx, 0).toLong, d.precision, d.scale))
-          case d: DecimalType if pqName == PrimitiveTypeName.INT64 =>
-            row.update(i, org.apache.spark.sql.types.Decimal
-              .createUnsafe(g.getLong(pqIdx, 0), d.precision, d.scale))
-          case d: DecimalType if pqName == PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY ||
-              pqName == PrimitiveTypeName.BINARY =>
-            // big-endian two's-complement unscaled value (wide decimal)
-            val unscaled = new java.math.BigInteger(g.getBinary(pqIdx, 0).getBytes)
-            row.update(i, org.apache.spark.sql.types.Decimal(
-              scala.math.BigDecimal(scala.math.BigInt(unscaled), d.scale),
-              d.precision, d.scale))
-          case d: DecimalType => throw new IllegalArgumentException(
-            s"decimal storage $pqName unsupported for precision ${d.precision}")
-          case LongType if pqName == PrimitiveTypeName.INT32 =>
-            row.setLong(i, g.getInteger(pqIdx, 0).toLong)
-          case LongType => row.setLong(i, g.getLong(pqIdx, 0))
-          case IntegerType => row.setInt(i, g.getInteger(pqIdx, 0))
-          case DoubleType if pqName == PrimitiveTypeName.FLOAT =>
-            row.setDouble(i, g.getFloat(pqIdx, 0).toDouble)
-          case DoubleType if pqName == PrimitiveTypeName.INT32 =>
-            row.setDouble(i, g.getInteger(pqIdx, 0).toDouble)
-          case DoubleType if pqName == PrimitiveTypeName.INT64 =>
-            row.setDouble(i, g.getLong(pqIdx, 0).toDouble)
-          case DoubleType => row.setDouble(i, g.getDouble(pqIdx, 0))
-          case FloatType => row.setFloat(i, g.getFloat(pqIdx, 0))
-          case BooleanType => row.setBoolean(i, g.getBoolean(pqIdx, 0))
-          case StringType =>
-            row.update(i, UTF8String.fromBytes(g.getBinary(pqIdx, 0).getBytes))
-          case BinaryType => row.update(i, g.getBinary(pqIdx, 0).getBytes)
-          case TimestampType | TimestampNTZType =>
-            val unit = rawType.asPrimitiveType().getLogicalTypeAnnotation match {
-              case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => ts.getUnit
-              case _ => TimeUnit.MICROS
-            }
-            row.setLong(i, timestampToMicros(g.getLong(pqIdx, 0), unit))
-          case DateType => row.setInt(i, g.getInteger(pqIdx, 0))
-          case ArrayType(et, _) =>
-            // 3-level LIST: outer group → repeated "list" group → element
-            row.update(i, readList(g.getGroup(pqIdx, 0), et))
-          case MapType(kt, vt, _) =>
-            // MAP: outer group → repeated "key_value" → (key, value)
-            row.update(i, readMap(g.getGroup(pqIdx, 0), kt, vt))
-          case st: StructType =>
-            row.update(i, readStruct(g.getGroup(pqIdx, 0), st))
-          case other => throw new IllegalArgumentException(s"unsupported type $other")
-        }
-      }
-      i += 1
-      }
-    }
-    row
-  }
 
   /** Iterate records of one file: column-pruned to `schema`'s names,
     * optionally restricted to a byte range of row groups (split), with an
@@ -681,6 +443,7 @@ object ParquetIO {
       skipRowGroups: Int = 0,
       aliases: Map[String, String] = Map.empty)
       : Iterator[InternalRow] with AutoCloseable = {
+    dataOpens.incrementAndGet()
     val optsB = readOptions()
     range.foreach { case (s, e) => optsB.withRange(s, e) }
     filter.foreach(f => optsB.withRecordFilter(FilterCompat.get(f)))
@@ -697,171 +460,138 @@ object ParquetIO {
         else aliases.get(f.name).filter(fileType.containsField)
           .map(p => f.copy(name = p)).getOrElse(f)
       })
-    val projection = projectSchema(fileType, effSchema.fieldNames.toSeq)
+    // Projection of the file schema (file field types win, so storage
+    // units are preserved). Columns absent from the file are skipped and
+    // read as NULL — the wide-column sparse-attribute model (reference
+    // Tablestore rows carry only the columns they have,
+    // `TableStoreRelation.scala:290-361`).
+    val projection = new MessageType(fileType.getName,
+      effSchema.fieldNames.filter(fileType.containsField)
+        .map(c => fileType.getType(fileType.getFieldIndex(c))): _*)
     reader.setRequestedSchema(projection)
     var toSkip = skipRowGroups
     while (toSkip > 0) { reader.skipNextRowGroup(); toSkip -= 1 }
     val compatFilter = filter.map(FilterCompat.get).getOrElse(FilterCompat.NOOP)
+    // Spark's own row converter decodes; absent columns stay null
+    val widen = effSchema.fields.map(f =>
+      if (!projection.containsField(f.name)) None
+      else storedAsLong(projection.getType(projection.getFieldIndex(f.name)), f.dataType))
+    val requested = StructType(effSchema.fields.zip(widen).map { case (f, w) =>
+      if (w.isDefined) f.copy(dataType = LongType) else f })
+    val conf = sparkReadConf(requested)
+    val support = new ParquetReadSupport(None, false,
+      RebaseSpec(LegacyBehaviorPolicy.CORRECTED), RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
+    // init records the requested Spark schema; the parquet projection
+    // handed to prepareForRead stays the exact-name one above
+    support.init(new InitContext(conf,
+      java.util.Collections.emptyMap[String, java.util.Set[String]](), fileType))
+    val materializer = support.prepareForRead(conf,
+      java.util.Collections.emptyMap[String, String](), fileType,
+      new ReadSupport.ReadContext(projection))
+    val columnIO = new ColumnIOFactory().getColumnIO(projection)
+    val fixUp: InternalRow => InternalRow =
+      if (widen.forall(_.isEmpty)) identity
+      else {
+        val out = new GenericInternalRow(requested.length)
+        val types = requested.fields.map(_.dataType)
+        r => {
+          types.indices.foreach(i => out.update(i,
+            if (r.isNullAt(i)) null else widen(i).fold(r.get(i, types(i)))(_(r.getLong(i)))))
+          out
+        }
+      }
 
+    // The converter reuses one row for every record: fetch in hasNext,
+    // so next() never overwrites the row it returns.
     new Iterator[InternalRow] with AutoCloseable {
-      private var pages = reader.readNextFilteredRowGroup()
-      private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
+      private var records: org.apache.parquet.io.RecordReader[InternalRow] = _
       private var remaining = 0L
       private var nextRow: InternalRow = _
-      private def advanceRowGroup(): Unit = {
-        if (pages != null) {
-          val colIO = new ColumnIOFactory().getColumnIO(projection)
-          recordReader = colIO.getRecordReader(pages, new GroupRecordConverter(projection), compatFilter)
-          remaining = pages.getRowCount
-        }
-      }
-      advanceRowGroup()
-      private def fetch(): Unit = {
-        nextRow = null
-        while (nextRow == null && pages != null) {
+      private var exhausted = false
+      override def hasNext: Boolean = {
+        while (nextRow == null && !exhausted) {
           if (remaining == 0) {
-            pages = reader.readNextFilteredRowGroup()
-            advanceRowGroup()
+            val pages = reader.readNextFilteredRowGroup()
+            if (pages == null) exhausted = true
+            else {
+              records = columnIO.getRecordReader(pages, materializer, compatFilter)
+              remaining = pages.getRowCount
+            }
           } else {
-            val g = recordReader.read()
+            val r = records.read()
             remaining -= 1
             // filtered-out records materialize as null
-            if (g != null && !recordReader.shouldSkipCurrentRecord)
-              nextRow = groupToRow(g, projection, effSchema)
+            if (r != null && !records.shouldSkipCurrentRecord) nextRow = fixUp(r)
           }
         }
+        nextRow != null
       }
-      fetch()
-      override def hasNext: Boolean = nextRow != null
       override def next(): InternalRow = {
-        val r = nextRow; fetch(); r
+        if (!hasNext) throw new NoSuchElementException("end of parquet file")
+        val r = nextRow
+        nextRow = null
+        r
       }
       override def close(): Unit = reader.close()
     }
   }
 
-  /** Writer for one part file. `rowGroupBytes` bounds row-group size
-    * (default parquet block size; specs shrink it to force multi-group
-    * files for seek/split coverage).
+  /** Writer for one part file: Spark's own `ParquetWriteSupport`, so the
+    * file is what `spark.read.parquet` and the vectorized reader expect
+    * (every column optional, non-legacy LIST/MAP, micros timestamps,
+    * INT32/INT64/fixed-length decimals by precision). SNAPPY; OVERWRITE
+    * mode, so a replayed streaming epoch rewrites its files in place.
+    * `rowGroupBytes` bounds row-group size (specs shrink it to force
+    * multi-group files for seek/split coverage).
     */
   def openWriter(file: Path, schema: StructType,
-      rowGroupBytes: Long = ParquetWriter.DEFAULT_BLOCK_SIZE.toLong): ParquetWriter[Group] =
-    ExampleParquetWriter.builder(file)
-      .withConf(hadoopConf)
-      .withType(toParquetSchema(schema))
+      rowGroupBytes: Long = ParquetWriter.DEFAULT_BLOCK_SIZE.toLong): ParquetWriter[InternalRow] = {
+    schema.fields.foreach(f => checkWritable(f.dataType, f.name))
+    val conf = hadoopConf
+    ParquetWriteSupport.setSchema(nullable(schema).asInstanceOf[StructType], conf)
+    conf.setBoolean(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, false)
+    conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS.toString)
+    conf.setBoolean(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, false)
+    conf.setBoolean(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, false)
+    new RowWriterBuilder(file)
+      .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withRowGroupSize(rowGroupBytes)
       .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
       .build()
-
-  /** InternalRow (laid out as schema) → Group for writing. */
-  def rowToGroup(row: InternalRow, schema: StructType, messageType: MessageType): Group = {
-    val g = new SimpleGroup(messageType)
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) {
-        val name = schema(i).name
-        schema(i).dataType match {
-          case LongType => g.add(name, row.getLong(i))
-          case IntegerType => g.add(name, row.getInt(i))
-          case DoubleType => g.add(name, row.getDouble(i))
-          case FloatType => g.add(name, row.getFloat(i))
-          case BooleanType => g.add(name, row.getBoolean(i))
-          case StringType => g.add(name, row.getUTF8String(i).toString)
-          case BinaryType => g.add(name,
-            org.apache.parquet.io.api.Binary.fromConstantByteArray(row.getBinary(i)))
-          case TimestampType | TimestampNTZType => g.add(name, row.getLong(i)) // micros
-          case d: DecimalType if d.precision <= 18 =>
-            g.add(name, row.getDecimal(i, d.precision, d.scale).toUnscaledLong)
-          case d: DecimalType =>
-            g.add(name, org.apache.parquet.io.api.Binary.fromConstantByteArray(
-              fixedDecimalBytes(row.getDecimal(i, d.precision, d.scale), d)))
-          case DateType => g.add(name, row.getInt(i))
-          case at: ArrayType => writeList(g.addGroup(name), at.elementType, row.getArray(i))
-          case mt: MapType => writeMap(g.addGroup(name), mt.keyType, mt.valueType, row.getMap(i))
-          case st: StructType => writeStruct(g.addGroup(name), st, row.getStruct(i, st.length))
-          case other => throw new IllegalArgumentException(s"unsupported type $other")
-        }
-      }
-      i += 1
-    }
-    g
   }
 
-  /** Write one Catalyst value into a container group at field `idx` —
-    * recursive over LIST/MAP/struct, same encodings as the top level.
+  private class RowWriterBuilder(file: Path)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
+    override def self(): RowWriterBuilder = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
+  }
+
+  /** Refuse, naming the column, a type the kv/log readers would not read
+    * back as itself (`KvSource.toStructType`): byte, short, intervals,
+    * variant, ….
     */
-  private def writeValue(g: Group, idx: Int, dt: DataType, v: Any): Unit = dt match {
-    case LongType => g.add(idx, v.asInstanceOf[Long])
-    case IntegerType => g.add(idx, v.asInstanceOf[Int])
-    case DoubleType => g.add(idx, v.asInstanceOf[Double])
-    case FloatType => g.add(idx, v.asInstanceOf[Float])
-    case BooleanType => g.add(idx, v.asInstanceOf[Boolean])
-    case StringType => g.add(idx, v.toString) // UTF8String
-    case BinaryType => g.add(idx,
-      org.apache.parquet.io.api.Binary.fromConstantByteArray(v.asInstanceOf[Array[Byte]]))
-    case TimestampType | TimestampNTZType => g.add(idx, v.asInstanceOf[Long]) // micros
-    case DateType => g.add(idx, v.asInstanceOf[Int])
-    case d: DecimalType if d.precision <= 18 =>
-      g.add(idx, v.asInstanceOf[org.apache.spark.sql.types.Decimal].toUnscaledLong)
-    case d: DecimalType =>
-      g.add(idx, org.apache.parquet.io.api.Binary.fromConstantByteArray(
-        fixedDecimalBytes(v.asInstanceOf[org.apache.spark.sql.types.Decimal], d)))
-    case ArrayType(et, _) =>
-      writeList(g.addGroup(idx), et,
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    case MapType(kt, vt, _) =>
-      writeMap(g.addGroup(idx), kt, vt,
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData])
-    case st: StructType =>
-      writeStruct(g.addGroup(idx), st, v.asInstanceOf[InternalRow])
+  private def checkWritable(dt: DataType, column: String): Unit = dt match {
+    case LongType | IntegerType | DoubleType | FloatType | BooleanType | StringType |
+        BinaryType | TimestampType | TimestampNTZType | DateType | _: DecimalType =>
+    case ArrayType(et, _) => checkWritable(et, column)
+    case MapType(kt, vt, _) => checkWritable(kt, column); checkWritable(vt, column)
+    case st: StructType => st.fields.foreach(f => checkWritable(f.dataType, column))
     case other => throw new IllegalArgumentException(
-      s"unsupported element/field type $other")
+      s"unsupported kv/log type $other in column $column")
   }
 
-  private def writeList(outer: Group, et: DataType,
-      arr: org.apache.spark.sql.catalyst.util.ArrayData): Unit = {
-    var j = 0
-    while (j < arr.numElements()) {
-      val el = outer.addGroup(0)
-      if (!arr.isNullAt(j)) writeValue(el, 0, et, arr.get(j, et))
-      j += 1
-    }
-  }
-
-  private def writeMap(outer: Group, kt: DataType, vt: DataType,
-      m: org.apache.spark.sql.catalyst.util.MapData): Unit = {
-    var j = 0
-    while (j < m.numElements()) {
-      val kv = outer.addGroup(0)
-      writeValue(kv, 0, kt, m.keyArray().get(j, kt))
-      if (!m.valueArray().isNullAt(j))
-        writeValue(kv, 1, vt, m.valueArray().get(j, vt))
-      j += 1
-    }
-  }
-
-  private def writeStruct(sg: Group, st: StructType, nested: InternalRow): Unit = {
-    var j = 0
-    while (j < st.length) {
-      if (!nested.isNullAt(j))
-        writeValue(sg, j, st(j).dataType, nested.get(j, st(j).dataType))
-      j += 1
-    }
-  }
-
-  /** Sign-extended big-endian two's complement at the fixed length for a
-    * wide (p > 18) decimal.
+  /** Every field, element and value nullable: the files keep one
+    * (optional) layout whatever the writing plan's nullability.
     */
-  private def fixedDecimalBytes(dec: org.apache.spark.sql.types.Decimal,
-      d: DecimalType): Array[Byte] = {
-    val unscaled = dec.toJavaBigDecimal.unscaledValue()
-    val raw = unscaled.toByteArray
-    val n = minBytesForPrecision(d.precision)
-    val out = new Array[Byte](n)
-    if (unscaled.signum() < 0) java.util.Arrays.fill(out, 0, n - raw.length, -1: Byte)
-    System.arraycopy(raw, 0, out, n - raw.length, raw.length)
-    out
+  private def nullable(dt: DataType): DataType = dt match {
+    case ArrayType(et, _) => ArrayType(nullable(et), containsNull = true)
+    case MapType(kt, vt, _) => MapType(nullable(kt), nullable(vt), valueContainsNull = true)
+    case st: StructType =>
+      StructType(st.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case other => other
   }
 
   def deletePath(path: String): Unit = {

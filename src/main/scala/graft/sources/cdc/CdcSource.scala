@@ -199,8 +199,7 @@ class CdcReaderFactory(schema: StructType) extends PartitionReaderFactory {
           current = it.next()
           // synthesize the change sequence unless the file carries one
           if (seqIdx >= 0 && current.isNullAt(seqIdx)) {
-            current.asInstanceOf[org.apache.spark.sql.catalyst.expressions.GenericInternalRow]
-              .setLong(seqIdx, (p.fileSeq << 32) | rowInFile)
+            current.setLong(seqIdx, (p.fileSeq << 32) | rowInFile)
           }
           rowInFile += 1
           true

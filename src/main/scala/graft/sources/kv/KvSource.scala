@@ -131,7 +131,7 @@ object KvSource {
         case other => throw new IllegalArgumentException(s"unsupported parquet type $other")
       }
     // recursive: array-of-struct, struct-of-struct, map-of-struct … all
-    // mirror ParquetIO.fieldType's writer-side recursion
+    // mirror the writer's (Spark's ParquetWriteSupport) recursion
     def dataType(f: org.apache.parquet.schema.Type): org.apache.spark.sql.types.DataType =
       if (f.isPrimitive) primitive(f.asPrimitiveType())
       else f.getLogicalTypeAnnotation match {
@@ -894,7 +894,6 @@ class KvWriterFactory(path: String, schema: StructType,
 class KvDataWriter(fileForSeq: Int => String, schema: StructType,
     conv: Option[InternalRow => InternalRow] = None,
     batchSize: Long = 0L, bloom: Option[KvBloom.Conf] = None) extends DataWriter[InternalRow] {
-  private val messageType = ParquetIO.toParquetSchema(schema)
   private val files = scala.collection.mutable.ArrayBuffer(fileForSeq(0))
   private var writer = ParquetIO.openWriter(new Path(files.head), schema)
   private var rowsInFile = 0L
@@ -913,7 +912,7 @@ class KvDataWriter(fileForSeq: Int => String, schema: StructType,
       rowsInFile = 0L
     }
     val row = conv.map(_(record)).getOrElse(record)
-    writer.write(ParquetIO.rowToGroup(row, schema, messageType))
+    writer.write(row)
     hasher.foreach(_.add(row))
     rowsInFile += 1L
   }

@@ -24,11 +24,12 @@ import graft.sources.ParquetIO
   * in charge of WHAT is read.
   *
   * Scope discipline: the vectorized path takes over only when every
-  * requested column is stored exactly as its declared Spark type (the
-  * native mapping `ParquetIO.toParquetSchema` writes). The row reader's
-  * widening coercions — long over INT32, double over FLOAT/INT32/INT64,
-  * nanosecond→micros timestamps (`TableStoreRelation.scala:181-258`
-  * semantics) — keep the Group-record path; `vectorized.read=false`
+  * requested column is stored exactly as its declared Spark type (what
+  * the kv writer, Spark's `ParquetWriteSupport`, writes). The row
+  * reader's widening coercions — long over INT32, double over
+  * FLOAT/INT32/INT64, nanosecond→micros timestamps
+  * (`TableStoreRelation.scala:181-258` semantics) — keep the row path
+  * (`ParquetIO.readFile`, Spark's row converter); `vectorized.read=false`
   * forces it. Filters stay row-group-level here (stats skip); record
   * level re-apply is Spark's, since the scan reports every filter as
   * residual.
@@ -124,15 +125,10 @@ object KvVectorized {
       private def openNext(): Boolean = {
         if (!it.hasNext) return false
         val c = it.next()
-        val conf = ParquetIO.hadoopConf
+        ParquetIO.dataOpens.incrementAndGet()
+        val conf = ParquetIO.sparkReadConf(schema)
         conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
           classOf[ParquetReadSupport].getName)
-        conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
-        conf.setBoolean("spark.sql.parquet.binaryAsString", false)
-        conf.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
-        conf.setBoolean("spark.sql.caseSensitive", false)
-        conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
-        conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
         // stats-level row-group skip only; column-index (page) filtering
         // off for deterministic batch shapes, record-level is Spark's
         predicate.foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))

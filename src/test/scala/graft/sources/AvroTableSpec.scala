@@ -41,7 +41,6 @@ class AvroTableSpec extends SparkSpec {
   /** One shard of avro payloads in a binary `value` column. */
   private def writeShard(dir: String, name: String, ids: Range): Unit = {
     val binSchema = StructType(Seq(StructField("value", BinaryType)))
-    val mt = ParquetIO.toParquetSchema(binSchema)
     val fs = new Path(dir).getFileSystem(ParquetIO.hadoopConf)
     fs.mkdirs(new Path(dir))
     val w = ParquetIO.openWriter(new Path(dir, name), binSchema)
@@ -49,7 +48,7 @@ class AvroTableSpec extends SparkSpec {
       val row = new GenericInternalRow(1)
       row.update(0, encode(i.toLong,
         if (i % 5 == 0) None else Some(s"n$i"), i * 1.25))
-      w.write(ParquetIO.rowToGroup(row, binSchema, mt))
+      w.write(row)
     }
     w.close()
   }

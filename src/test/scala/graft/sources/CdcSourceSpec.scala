@@ -136,22 +136,17 @@ class CdcSourceSpec extends SparkSpec {
   test("large changelog files split by row group; change sequence is split-invariant") {
     val dir = Files.createTempDirectory("cdcsplit").toString
     // author one changelog file with many small row groups
-    val mt = ParquetIO.toParquetSchema(StructType(Seq(
+    val schema = StructType(Seq(
       StructField("__record_type__", StringType),
       StructField("__record_timestamp__", LongType),
       StructField("pk", LongType), StructField("v", DoubleType),
-      StructField("__column_type_v", StringType))))
+      StructField("__column_type_v", StringType)))
     val f = new org.apache.hadoop.fs.Path(dir, "chg-000000.parquet")
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(f)
-      .withConf(ParquetIO.hadoopConf).withType(mt)
-      .withRowGroupSize(16 * 1024L).withPageSize(4 * 1024)
-      .withMinRowCountForPageSizeCheck(10).withMaxRowCountForPageSizeCheck(50)
-      .build()
+    val w = ParquetIO.openWriter(f, schema, rowGroupBytes = 16 * 1024L)
+    val put = org.apache.spark.unsafe.types.UTF8String.fromString("PUT")
     (0 until 20000).foreach { i =>
-      val g = new org.apache.parquet.example.data.simple.SimpleGroup(mt)
-      g.add("__record_type__", "PUT"); g.add("__record_timestamp__", i.toLong)
-      g.add("pk", (i % 500).toLong); g.add("v", i.toDouble); g.add("__column_type_v", "PUT")
-      w.write(g)
+      w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](put, i.toLong, (i % 500).toLong, i.toDouble, put)))
     }
     w.close()
     assert(ParquetIO.footer(f).groups.length > 1, "fixture must span several row groups")

@@ -28,13 +28,12 @@ class CompressedSplitSpec extends SparkSpec {
   private lazy val file: Path = {
     val dir = Files.createTempDirectory("compsplit").toString
     val f = new Path(dir, "part-00000.parquet")
-    val mt = ParquetIO.toParquetSchema(schema)
     val w = ParquetIO.openWriter(f, schema, rowGroupBytes = 64 * 1024L)
     (0 until 4000).foreach { i =>
       val row = new GenericInternalRow(2)
       row.setLong(0, i.toLong)
       row.update(1, UTF8String.fromString("z" * 512))
-      w.write(ParquetIO.rowToGroup(row, schema, mt))
+      w.write(row)
     }
     w.close()
     f

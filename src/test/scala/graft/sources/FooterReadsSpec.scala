@@ -15,14 +15,17 @@ class FooterReadsSpec extends SparkSpec {
     keys.map(k => (k, s"v$k")).toDF("k", "v").coalesce(1)
       .write.format("kv").option("path", dir).mode("append").save()
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Set[String] = {
+  private def plannedChunks(df: org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val scan = df.queryExecution.sparkPlan.collectFirst {
       case b: BatchScanExec if b.scan.isInstanceOf[KvScan] => b.scan.asInstanceOf[KvScan]
     }.get
-    scan.toBatch.planInputPartitions()
-      .flatMap(_.asInstanceOf[KvInputPartition].chunks.map(_.file)).toSet
+    scan.toBatch.planInputPartitions().toSeq
+      .flatMap(_.asInstanceOf[KvInputPartition].chunks)
   }
+
+  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Set[String] =
+    plannedChunks(df).map(_.file).toSet
 
   test("N appended files cost N footer reads across sidecar append and planning; re-plans cost 0") {
     val dir = java.nio.file.Files.createTempDirectory("kvfooters").toString + "/t"
@@ -58,8 +61,11 @@ class FooterReadsSpec extends SparkSpec {
       "each new file's footer is read once, shared by bloom, zone map and planner")
 
     val planned = ParquetIO.footerReads.get()
-    plannedFiles(lookup())
+    val chunks = plannedChunks(lookup().select("v"))
+    val opens = ParquetIO.dataOpens.get()
     assert(lookup().select("v").as[String].collect().toSeq == Seq("v350"))
     assert(ParquetIO.footerReads.get() == planned, "re-planning must not re-read a footer")
+    assert(chunks.nonEmpty && ParquetIO.dataOpens.get() - opens == chunks.size,
+      s"a planned lookup opens each chunk it reads once (${chunks.size} chunks)")
   }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.sources._
   */
 class KvFiltersPropertySpec extends AnyFunSuite {
 
-  private val schema = ParquetIO.toParquetSchema(
+  private val schema = RawParquet.messageType(
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("a", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("b", org.apache.spark.sql.types.DoubleType),

@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * parquet filter runs before Spark's residual re-apply, so a pushed
   * predicate that drops a row Spark's read-side conversion would keep is a
   * silent wrong answer (rows cannot be resurrected). Read conversions
-  * (ParquetIO.timestampToMicros): MILLIS → ×1000 exact widening, NANOS →
+  * (ParquetIO.readFile): MILLIS → ×1000 exact widening, NANOS →
   * truncating ÷1000. These tests enumerate boundary storage values around
   * each literal and assert the filtered read returns exactly the rows
   * whose *read image* satisfies the Spark filter.

@@ -7,8 +7,9 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Randomized round-trip property for the recursive nested-type plane
-  * (ParquetIO.toParquetSchema/readValue/writeValue +
-  * KvSource.toStructType): random schemas to depth 3 over every
+  * (the kv writer's Spark `ParquetWriteSupport`, the row path's Spark
+  * row converter, and KvSource.toStructType): random schemas to depth 3
+  * over every
   * supported leaf type, random rows with nulls at every level — read
   * back through the kv source, values and inferred schema must match
   * exactly.
@@ -18,7 +19,7 @@ class KvNestedPropertySpec extends SparkSpec {
   private val leaves: Vector[DataType] = Vector(
     LongType, IntegerType, DoubleType, FloatType, BooleanType,
     StringType, BinaryType, DateType, TimestampType,
-    DecimalType(10, 2), DecimalType(28, 6))
+    DecimalType(5, 2), DecimalType(10, 2), DecimalType(28, 6))
 
   private def randType(rnd: Random, depth: Int): DataType =
     if (depth <= 0) leaves(rnd.nextInt(leaves.length))

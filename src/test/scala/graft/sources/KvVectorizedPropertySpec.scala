@@ -8,7 +8,8 @@ import graft.SparkSpec
 
 /** Randomized row-path/columnar-path equivalence: any flat schema of
   * supported types, with nulls sprinkled everywhere, must read back
-  * identically through the Group row reader and the vectorized plane.
+  * identically through the row path (Spark's row converter) and the
+  * vectorized plane.
   * Catches decode divergences (timestamp units, decimal scales, binary
   * copies) that a fixed fixture might miss.
   */
@@ -17,7 +18,7 @@ class KvVectorizedPropertySpec extends SparkSpec {
   private val types: Vector[DataType] = Vector(
     LongType, IntegerType, DoubleType, FloatType, BooleanType,
     StringType, BinaryType, TimestampType, DateType,
-    DecimalType(10, 2), DecimalType(28, 4))
+    DecimalType(5, 2), DecimalType(10, 2), DecimalType(28, 4))
 
   private def randomValue(dt: DataType, rnd: Random): Any = dt match {
     case LongType => rnd.nextLong()
@@ -31,8 +32,8 @@ class KvVectorizedPropertySpec extends SparkSpec {
       new java.sql.Timestamp(math.abs(rnd.nextLong()) % 4102444800000L)
     case DateType => new java.sql.Date(math.abs(rnd.nextLong()) % 4102444800000L)
     case d: DecimalType =>
-      new java.math.BigDecimal(java.math.BigInteger.valueOf(rnd.nextInt(1000000)),
-        d.scale)
+      new java.math.BigDecimal(java.math.BigInteger.valueOf(
+        rnd.nextInt(math.pow(10, math.min(d.precision, 6)).toInt)), d.scale)
     case other => throw new IllegalArgumentException(other.toString)
   }
 

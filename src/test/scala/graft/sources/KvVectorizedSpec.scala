@@ -98,7 +98,7 @@ class KvVectorizedSpec extends SparkSpec {
   }
 
   test("eligibility matcher rejects nanos and mismatched decimals") {
-    val micros = ParquetIO.toParquetSchema(StructType(Seq(
+    val micros = RawParquet.messageType(StructType(Seq(
       StructField("ts", TimestampType), StructField("d", DecimalType(10, 2)))))
     assert(KvVectorized.eligible(micros, StructType(Seq(
       StructField("ts", TimestampType), StructField("d", DecimalType(10, 2))))))

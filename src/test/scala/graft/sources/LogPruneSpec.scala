@@ -79,14 +79,13 @@ class LogPruneSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("body", org.apache.spark.sql.types.StringType)))
-    val mt = ParquetIO.toParquetSchema(schema)
     val file = new org.apache.hadoop.fs.Path(dir, "shard-a.parquet")
     val w = ParquetIO.openWriter(file, schema, rowGroupBytes = 4096L)
     (0 until 1000).foreach { i =>
       val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
       row.setLong(0, i.toLong)
       row.update(1, org.apache.spark.unsafe.types.UTF8String.fromString(s"b-$i-" + ("x" * 64)))
-      w.write(ParquetIO.rowToGroup(row, schema, mt))
+      w.write(row)
     }
     w.close()
     assert(ParquetIO.footer(file).groups.length >= 4) // sorted ids → tight group stats

@@ -23,13 +23,12 @@ class LogSeekSpec extends SparkSpec {
   private lazy val shardFile: Path = {
     val dir = Files.createTempDirectory("logseek").toString
     val file = new Path(dir, "shard-a.parquet")
-    val mt = ParquetIO.toParquetSchema(schema)
     val w = ParquetIO.openWriter(file, schema, rowGroupBytes = 4096L)
     (0 until 1000).foreach { i =>
       val row = new GenericInternalRow(2)
       row.setLong(0, i.toLong)
       row.update(1, UTF8String.fromString(s"body-$i-" + ("x" * 64)))
-      w.write(ParquetIO.rowToGroup(row, schema, mt))
+      w.write(row)
     }
     w.close()
     file

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JInt, JObject}
 import graft.sources.ParquetIO
+import graft.sources.kv.{KvBloom, KvIndex, KvSidecar}
 
 /** Per-row op-type merge into a kv table — the reference's Kudu
   * `merge(data, opTypeColumn)` writer (SURVEY.md §2 W7,
@@ -20,6 +22,10 @@ import graft.sources.ParquetIO
   * Implementation is a shuffle-on-key anti/semi-join rewrite (no
   * driver-side loop); the result replaces the table via write-to-temp,
   * backup-aside, rename — the batch analogue of a storage-engine merge.
+  * Like the store's own search index, the Bloom and zone-map sidecars
+  * come through every rewrite current: the rewrite's write tasks
+  * produce the new files' entries ([[writeAndSwap]]), so no rebuild
+  * follows a merge.
   * On a real cluster this is the copy-on-write table pattern; a
   * merge-on-read variant would keep the delta as a changelog and fold at
   * scan time (see graft.sources.cdc.Cdc.applyChanges).
@@ -238,44 +244,25 @@ object KvMerge {
   }
 
   /** Rebuild the table's pruning sidecars from their RECORDED
-    * configurations — the maintenance hook that keeps the pruning tier
-    * warm after an event that invalidated or outdated it (ALTER COLUMN
-    * widening tombstones the Bloom sidecar — stale hash domain;
-    * [[compactMarkers]]/appends leave sidecars covering only the old
-    * file set). Each sidecar's meta carries what was indexed: the Bloom
-    * sidecar re-runs [[graft.sources.kv.KvBloom.build]] with its
-    * recorded columns and bitsPerKey (live OR tombstoned meta — the
-    * tombstone exists exactly so this op knows what to rebuild), the
-    * zone map re-runs [[graft.sources.kv.KvIndex.build]] from footers.
-    * Returns the rebuilt sidecar names. Single-writer like every
-    * maintenance op.
+    * configurations — the maintenance hook for an event that invalidated
+    * or outdated them (ALTER COLUMN widening tombstones the Bloom sidecar
+    * — stale hash domain; files put in by other writers stay uncovered).
+    * Each sidecar's meta carries what was indexed: the Bloom sidecar
+    * re-runs [[graft.sources.kv.KvBloom.build]] with its recorded columns
+    * and bitsPerKey (live OR tombstoned meta — the tombstone exists
+    * exactly so this op knows what to rebuild, and [[writeAndSwap]]
+    * carries it through every rewrite), the zone map re-runs
+    * [[graft.sources.kv.KvIndex.build]]. A live, current sidecar costs
+    * one listing (the builds reuse its entries). Returns the names of
+    * the sidecars built. Single-writer like every maintenance op.
     */
-  def rebuildIndexes(spark: SparkSession, path: String): Seq[String] =
-    rebuildFromMetas(spark, path,
-      graft.sources.kv.KvSidecar.readMeta(path, graft.sources.kv.KvBloom.SidecarName),
-      graft.sources.kv.KvSidecar.readMeta(path, graft.sources.kv.KvIndex.SidecarName))
-
-  /** Re-run the Bloom/zone-map builds from CAPTURED meta documents —
-    * the [[rewrite]] refresh path captures them BEFORE its whole-dir
-    * swap deletes the old `_index` along with the old files.
-    */
-  private def rebuildFromMetas(spark: SparkSession, path: String,
-      bloomMeta: Option[org.json4s.JValue],
-      zoneMeta: Option[org.json4s.JValue]): Seq[String] = {
-    val rebuilt = scala.collection.mutable.ArrayBuffer.empty[String]
+  def rebuildIndexes(spark: SparkSession, path: String): Seq[String] = {
     // pre-tombstone metas recorded no bitsPerKey: Conf.of defaults it
-    bloomMeta.flatMap(graft.sources.kv.KvBloom.Conf.of).foreach { conf =>
-      graft.sources.kv.KvBloom.build(spark, path, conf.cols, conf.bitsPerKey)
-      rebuilt += graft.sources.kv.KvBloom.SidecarName
-    }
-    zoneMeta.foreach { meta =>
-      val cs = graft.sources.kv.KvSidecar.columnsOf(meta)
-      if (cs.nonEmpty) {
-        graft.sources.kv.KvIndex.build(path, cs)
-        rebuilt += graft.sources.kv.KvIndex.SidecarName
-      }
-    }
-    rebuilt.toSeq
+    val bloom = KvSidecar.readMeta(path, KvBloom.SidecarName).flatMap(KvBloom.Conf.of).map { c =>
+      KvBloom.build(spark, path, c.cols, c.bitsPerKey); KvBloom.SidecarName }
+    val zone = KvSidecar.readMeta(path, KvIndex.SidecarName).map(KvSidecar.columnsOf)
+      .filter(_.nonEmpty).map { cs => KvIndex.build(path, cs); KvIndex.SidecarName }
+    bloom.toSeq ++ zone
   }
 
   /** Heal a crash between backup-aside and rename-into-place: the backup
@@ -313,6 +300,17 @@ object KvMerge {
     * [[recoverSwap]] on the next maintenance run (or by any reader
     * preferring backup when live is missing).
     *
+    * SIDECAR CARRY: before the write, each Bloom/zone-map meta is
+    * published into the tmp dir as an empty sidecar, live stays live and
+    * a tombstone stays tombstoned. The kv writer then keeps the live ones
+    * current as for any write — its tasks hash the rows under the tmp
+    * table's own schema and the commit publishes every new file's entries
+    * — and the rename moves `_index` with the files it covers (name, len
+    * and mtime unchanged), so lookups prune right after the swap and a
+    * following `build` finds nothing to do. A bloomed column the result
+    * lacks or retypes leaves the files uncovered (never pruned) until a
+    * build covers them.
+    *
     * CONCURRENT-WRITER DETECTION: these ops are single-writer by
     * contract, but a violated contract must not silently lose data — a
     * file appended between the op's initial read and the swap would
@@ -328,6 +326,10 @@ object KvMerge {
     val backup = new Path(s"$path.merge-old")
     val tmp = new Path(s"$path.merge-tmp")
     ParquetIO.deletePath(tmp.toString)
+    Seq(KvBloom.SidecarName, KvIndex.SidecarName).foreach { n =>
+      KvSidecar.readMeta(path, n).foreach(meta =>
+        KvSidecar.publish(tmp.toString, n, meta.merge(JObject("numShards" -> JInt(1))))(_ => ()))
+    }
     result.write.format("kv").option("path", tmp.toString).mode("append").save()
     testBeforeSwap()
     expect.foreach { fp =>
@@ -403,22 +405,16 @@ object KvMerge {
     *
     * At 100 TB this runs table-partition-by-partition; `repartitionByRange`
     * samples the sort key for balanced output files (Spark's range
-    * partitioner), so no single reducer owns the table.
+    * partitioner), so no single reducer owns the table. The pruning
+    * sidecars stay warm for the new layout ([[writeAndSwap]]'s carry).
     */
   def rewrite(spark: SparkSession, path: String, numFiles: Int,
       clusterBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil,
-      zorderBits: Int = 6, refreshIndexes: Boolean = false): Unit = {
+      zorderBits: Int = 6): Unit = {
     require(numFiles >= 1, "numFiles must be >= 1")
     require(clusterBy.isEmpty || zorderBy.isEmpty,
       "rewrite: clusterBy and zorderBy are mutually exclusive layouts")
     recoverSwap(path)
-    // sidecar configs must be captured BEFORE the swap: the whole-dir
-    // rename drops the old _index along with the old files
-    val (bloomMeta, zoneMeta) =
-      if (!refreshIndexes) (None, None)
-      else (
-        graft.sources.kv.KvSidecar.readMeta(path, graft.sources.kv.KvBloom.SidecarName),
-        graft.sources.kv.KvSidecar.readMeta(path, graft.sources.kv.KvIndex.SidecarName))
     val fp = fingerprint(path)
     val table = spark.read.format("kv").option("path", path).load()
     val shaped =
@@ -445,12 +441,6 @@ object KvMerge {
     graft.sources.kv.KvClustering.record(path, clusterBy)
     // any prior bucket layout is gone after a range rewrite
     graft.sources.kv.KvBuckets.record(path, Nil, Nil, 0, Map.empty)
-    // a rewrite replaces every file, so sidecar coverage is gone (the
-    // swap deletes the old _index — safe, but pruning silently stops).
-    // Opt-in refresh re-runs the PRE-SWAP recorded Bloom/zone-map
-    // builds in the same maintenance window — pruning stays warm for
-    // the layout the rewrite just created, no separate rebuild step.
-    if (refreshIndexes) { rebuildFromMetas(spark, path, bloomMeta, zoneMeta); () }
   }
 
   /** Predicate DELETE — the retention / GDPR surface of the table

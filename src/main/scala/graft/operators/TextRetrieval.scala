@@ -155,8 +155,8 @@ object TextRetrieval {
     // with hash-bucketized files the min/max zones span the whole term
     // domain — the Bloom sidecar is what turns that runtime filter into
     // whole-FILE pruning, so a k-term query reads ≤k buckets' files.
-    // (Appends are uncovered-and-unpruned until the next maintenance
-    // bucketize+build — the KvBloom staleness contract.)
+    // (Later kv appends join it at their write commit, and a maintenance
+    // bucketize carries it through the swap — KvMerge.writeAndSwap.)
     graft.sources.kv.KvBloom.build(s, s"$dir/postings", Seq("term"))
     writeStatsMarker(dir)
   }

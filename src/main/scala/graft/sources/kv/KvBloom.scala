@@ -45,10 +45,12 @@ import graft.sources.ParquetIO
   * Maintenance: the kv writer keeps a LIVE sidecar current itself — its
   * tasks hash every written row ([[FileHasher]]) and the job or epoch
   * commit publishes the new files' entries, the way the reference's
-  * search index is kept current by the store as rows land. [[append]]
-  * serves the files written outside it (other writers, or a write whose
-  * hash domain differs from the table's), [[build]] the rest: ONE
-  * distributed pass — `groupBy(_file)` with the variable-width
+  * search index is kept current by the store as rows land; a `KvMerge`
+  * rewrite carries the sidecar into the directory it writes, so its
+  * tasks do the same. [[append]] serves the files written outside it
+  * (other writers, or a write whose hash domain differs from the
+  * table's); [[build]] reuses a current sidecar's entries and otherwise
+  * runs ONE distributed pass — `groupBy(_file)` with the variable-width
   * aggregate sizes every file's filter from ITS OWN footer row count (a
   * skewed table no longer costs numFiles × the largest file's width),
   * and shard files are written by EXECUTORS (repartition on shard id),
@@ -119,15 +121,22 @@ object KvBloom {
     }
   }
 
-  /** Build (or rebuild) per-file Bloom filters for `cols` in ONE
-    * distributed pass (see object scaladoc). `bitsPerKey` ≈ 10 gives
-    * ~1% false positives with 7 probes.
+  /** Build (or rebuild) per-file Bloom filters for `cols`. `bitsPerKey`
+    * ≈ 10 gives ~1% false positives with 7 probes. A live sidecar that
+    * records this same [[Conf]] is reused ([[KvSidecar.rebuildCurrent]]):
+    * only files without a valid entry are hashed, entries of gone files
+    * are dropped, and a current sidecar costs one listing and no Spark
+    * job — the state a kv write or a `KvMerge` rewrite leaves. Otherwise
+    * (absent, tombstoned, another conf) every file is hashed in ONE
+    * distributed pass (see object scaladoc).
     */
   def build(spark: SparkSession, tablePath: String, cols: Seq[String],
       bitsPerKey: Int = 10): Unit = {
     require(cols.nonEmpty, "bloom build needs at least one column")
     require(bitsPerKey >= 1 && bitsPerKey <= 64, s"bitsPerKey out of range: $bitsPerKey")
     val conf = Conf(cols, bitsPerKey)
+    if (KvSidecar.rebuildCurrent(tablePath, SidecarName, Conf.of(_).contains(conf))(
+        hashFiles(spark, tablePath, conf, _, allowlist = true).collect().toSeq)) return
     val files = ParquetIO.listFilesStatus(tablePath)
     val numShards = KvSidecar.numShardsFor(files.length)
     import spark.implicits._
@@ -191,7 +200,8 @@ object KvBloom {
     * it). Returns the number of newly covered files.
     */
   def append(spark: SparkSession, tablePath: String): Int =
-    KvSidecar.coverUncovered(tablePath, SidecarName) { (meta, uncovered) =>
+    KvSidecar.coverUncovered(tablePath, SidecarName, ParquetIO.listFilesStatus(tablePath)) {
+        (meta, uncovered) =>
       val conf = Conf.of(meta).getOrElse(throw new IllegalStateException(
         s"bloom meta on $tablePath records no columns"))
       hashFiles(spark, tablePath, conf, uncovered, allowlist = true).collect().toSeq
@@ -219,9 +229,9 @@ object KvBloom {
     * table schema just recorded still gives the written types.
     */
   private[kv] def coverWritten(tablePath: String, written: StructType, hashed: Conf,
-      entries: Seq[KvSidecar.Entry]): Unit =
+      entries: Seq[KvSidecar.Entry], live: => Seq[(Path, Long, Long)]): Unit =
     if (KvSchemaMeta.read(tablePath).exists(sameDomain(hashed, written, _)))
-      KvSidecar.coverUncovered(tablePath, SidecarName) { (meta, uncovered) =>
+      KvSidecar.coverUncovered(tablePath, SidecarName, live) { (meta, uncovered) =>
         val open = uncovered.map { case (f, len, mtime) => (f.getName, len, mtime) }.toSet
         if (!Conf.of(meta).contains(hashed)) Nil
         else entries.filter { case (f, len, mtime, _) => open((f, len, mtime)) }

@@ -61,9 +61,14 @@ object KvIndex {
   /** Build (or rebuild) the zone-map index for `cols` from parquet
     * footers only — persisted in the sharded [[KvSidecar]] layout
     * (`_index/zonemap/`), per-file entries validated by (len, mtime) at
-    * probe time (the [[KvBloom]] staleness discipline).
+    * probe time (the [[KvBloom]] staleness discipline). A live index on
+    * the same column list is reused ([[KvSidecar.rebuildCurrent]]): only
+    * uncovered files' footers are read, entries of gone files are
+    * dropped, and a current index publishes nothing.
     */
   def build(tablePath: String, cols: Seq[String]): Unit = {
+    if (KvSidecar.rebuildCurrent(tablePath, SidecarName, KvSidecar.columnsOf(_) == cols)(
+        entriesFor(_, cols))) return
     val files = ParquetIO.listFilesStatus(tablePath)
     val entries = entriesFor(files, cols)
     val numShards = KvSidecar.numShardsFor(files.length)
@@ -94,7 +99,8 @@ object KvIndex {
     * too instead of mixing hash/type domains).
     */
   def append(tablePath: String): Int =
-    KvSidecar.coverUncovered(tablePath, SidecarName) { (meta, uncovered) =>
+    KvSidecar.coverUncovered(tablePath, SidecarName, ParquetIO.listFilesStatus(tablePath)) {
+        (meta, uncovered) =>
       val cols = KvSidecar.columnsOf(meta)
       require(cols.nonEmpty, s"zone-map meta on $tablePath records no columns")
       entriesFor(uncovered, cols)
@@ -105,8 +111,9 @@ object KvIndex {
     * that a live index does not cover yet join it, from the same cached
     * footers the planner reads next.
     */
-  private[kv] def coverWritten(tablePath: String, written: Set[String]): Unit =
-    KvSidecar.coverUncovered(tablePath, SidecarName) { (meta, uncovered) =>
+  private[kv] def coverWritten(tablePath: String, written: Set[String],
+      live: => Seq[(Path, Long, Long)]): Unit =
+    KvSidecar.coverUncovered(tablePath, SidecarName, live) { (meta, uncovered) =>
       entriesFor(uncovered.filter(f => written(f._1.getName)), KvSidecar.columnsOf(meta))
     }
 

@@ -261,67 +261,78 @@ object KvSidecar {
     * [[open]] refuses to serve it while a maintenance rebuild
     * ([[graft.operators.KvMerge.rebuildIndexes]]) can still read WHAT
     * was indexed (columns, parameters) and re-run the build after the
-    * event that invalidated it (schema evolution). A stale meta is
-    * exactly as safe as an absent one — no pruning happens off it.
+    * event that invalidated it (schema evolution); `KvMerge` rewrites
+    * carry it as it is. A stale meta is exactly as safe as an absent one
+    * — no pruning happens off it, and a sidecar without a meta is absent
+    * to every reader already.
     */
-  def tombstone(tablePath: String, name: String): Unit = {
-    readMeta(tablePath, name) match {
-      case None => drop(tablePath, name)
-      case Some(meta) => publish(tablePath, name, meta.merge(JObject("stale" -> JBool(true))))(_ => ())
-    }
-  }
-
-  /** Delete a sidecar (and any legacy monolithic blob) — the
-    * invalidation path when an index's contents can no longer be
-    * trusted (e.g. a column-type widening changes the Bloom hash
-    * domain). Absence is always safe: readers degrade to "no index".
-    */
-  def drop(tablePath: String, name: String): Unit = {
-    val dir = dirOf(tablePath, name)
-    val fs = dir.getFileSystem(ParquetIO.hadoopConf)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    val legacy = new Path(dir.getParent, s"$name.json")
-    if (fs.exists(legacy)) fs.delete(legacy, false)
-    ()
-  }
+  def tombstone(tablePath: String, name: String): Unit =
+    readMeta(tablePath, name).foreach(meta =>
+      publish(tablePath, name, meta.merge(JObject("stale" -> JBool(true))))(_ => ()))
 
   /** Cover the live files an open sidecar has no entry for — the one
-    * incremental sequence behind `KvIndex.append`, `KvBloom.append` and
-    * the kv writer's job/epoch commit: open the sidecar, list the live
-    * files, hand the uncovered ones and the sidecar's meta to
-    * `entriesFor`, and publish what it returns (entries for all, some or
-    * none of them) through [[mergeEntries]] under the same meta at the
-    * shard count the listing needs. Returns the number of entries
-    * published, or None when the sidecar is absent or tombstoned.
+    * incremental sequence behind `KvIndex.append`, `KvBloom.append`, the
+    * kv writer's job/epoch commit and [[rebuildCurrent]]: open the
+    * sidecar, take the live listing (`live`, evaluated only when the
+    * sidecar is open, so one commit lists once for both sidecars), hand
+    * the uncovered files and the sidecar's meta to `entriesFor`, and
+    * publish what it returns (entries for all, some or none of them)
+    * through [[mergeEntries]] under the same meta at the shard count the
+    * listing needs. With `dropGone`, entries no live file validates are
+    * dropped too. Returns the number of entries published, or None when
+    * the sidecar is absent or tombstoned.
     */
-  def coverUncovered(tablePath: String, name: String)(
+  def coverUncovered(tablePath: String, name: String, live: => Seq[(Path, Long, Long)],
+      dropGone: Boolean = false)(
       entriesFor: (JValue, Seq[(Path, Long, Long)]) => Seq[Entry]): Option[Int] =
     open(tablePath, name).map { sc =>
-      val live = ParquetIO.listFilesStatus(tablePath)
-      val uncovered = live.filter { case (f, len, mt) => sc.entryFor(f.getName, len, mt).isEmpty }
+      val listed = live
+      val uncovered = listed.filter { case (f, len, mt) => sc.entryFor(f.getName, len, mt).isEmpty }
       val entries = if (uncovered.isEmpty) Nil else entriesFor(sc.meta, uncovered)
-      if (entries.nonEmpty) {
-        val numShards = numShardsFor(live.length)
+      val gone = dropGone &&
+        (0 until sc.numShards).map(sc.shardEntries(_).size).sum > listed.length - uncovered.length
+      if (entries.nonEmpty || gone) {
+        val numShards = numShardsFor(listed.length)
         publish(tablePath, name, sc.meta.merge(JObject("numShards" -> JInt(numShards)))) { tmp =>
-          mergeEntries(sc, tmp.getFileSystem(ParquetIO.hadoopConf), tmp, numShards, live, entries)
+          mergeEntries(sc, tmp.getFileSystem(ParquetIO.hadoopConf), tmp, numShards, listed,
+            entries, reshard = gone)
         }
       }
       entries.length
     }
 
+  /** The reuse half of `KvBloom.build` and `KvIndex.build`: when the
+    * sidecar is live, its meta records the requested configuration
+    * (`current`) and at least one of its entries still matches a live
+    * file's (len, mtime) — the check under which the planner prunes with
+    * that entry — hash only the uncovered files and drop the entries of
+    * files that are gone. A current sidecar publishes nothing, and
+    * `entriesFor` is not called. Returns false, touching nothing, in
+    * every other case: the caller's full build then does the same work
+    * at scale.
+    */
+  def rebuildCurrent(tablePath: String, name: String, current: JValue => Boolean)(
+      entriesFor: Seq[(Path, Long, Long)] => Seq[Entry]): Boolean =
+    open(tablePath, name).filter(sc => current(sc.meta)).exists { sc =>
+      val live = ParquetIO.listFilesStatus(tablePath)
+      val reusable = live.exists { case (f, len, mt) => sc.entryFor(f.getName, len, mt).isDefined }
+      if (reusable) coverUncovered(tablePath, name, live, dropGone = true)((_, u) => entriesFor(u))
+      reusable
+    }
+
   /** Merge `newEntries` into an open sidecar during a publish stage —
     * the write step of [[coverUncovered]], so of both tiers' `append`
-    * and of the kv writer's commit (one implementation, three callers):
+    * and `build` and of the kv writer's commit:
     * with an unchanged shard count, untouched shards are byte-copied and
     * only shards receiving entries re-serialize (same-name entries
-    * replaced); a changed shard budget re-shards every entry still
-    * valid for the `live` listing plus the new ones (no consumer-side
-    * rebuild — entries re-serialize from the old shards).
+    * replaced); a changed shard budget, or `reshard`, re-shards every
+    * entry still valid for the `live` listing plus the new ones (no
+    * consumer-side rebuild — entries re-serialize from the old shards).
     */
   def mergeEntries(sc: SidecarShards, fs: FileSystem, tmpDir: Path,
       numShards: Int, live: Seq[(Path, Long, Long)],
-      newEntries: Seq[Entry]): Unit = {
-    if (numShards == sc.numShards) {
+      newEntries: Seq[Entry], reshard: Boolean): Unit = {
+    if (numShards == sc.numShards && !reshard) {
       val bySh = newEntries.groupBy(e => shardOf(e._1, numShards))
       (0 until numShards).foreach { k =>
         bySh.get(k) match {

@@ -838,16 +838,18 @@ object KvCommitMessage {
   /** The job or epoch commit's sidecar upkeep: the committed files join a
     * live zone map (footer-only) and a live bloom sidecar (the tasks'
     * entries), so `append` finds them covered and lookups prune them
-    * right away. No Spark job runs here; a failed publish fails the
-    * commit, and Spark's abort then deletes the files.
+    * right away. One listing of the table serves both sidecars, and no
+    * Spark job runs here; a failed publish fails the commit, and Spark's
+    * abort then deletes the files.
     */
   def publishSidecars(path: String, schema: StructType,
       messages: Array[WriterCommitMessage]): Unit = {
     val written = messages.collect { case m: KvCommitMessage => m }
-    KvIndex.coverWritten(path, written.flatMap(_.files).map(new Path(_).getName).toSet)
+    lazy val live = ParquetIO.listFilesStatus(path)
+    KvIndex.coverWritten(path, written.flatMap(_.files).map(new Path(_).getName).toSet, live)
     val hashed = written.flatMap(_.bloom)
     hashed.map(_._1).distinct match {
-      case Array(conf) => KvBloom.coverWritten(path, schema, conf, hashed.flatMap(_._2).toSeq)
+      case Array(conf) => KvBloom.coverWritten(path, schema, conf, hashed.flatMap(_._2).toSeq, live)
       case _ => ()
     }
   }

@@ -107,7 +107,7 @@ class AnnIndexMaintenanceSpec extends SparkSpec {
     assert(again.map(_.toString).toSeq == after.map(_.toString).toSeq)
   }
 
-  test("IVF cells table keeps Bloom pruning warm through rewrite(refreshIndexes)") {
+  test("IVF cells table keeps Bloom pruning warm through a rewrite") {
     val idx = java.nio.file.Files.createTempDirectory("annmx2").toString + "/i"
     SimilaritySearch.buildIvfIndex(corpus, "embedding", "vec_id", idx,
       nCells = 2, maxTrainPerCell = 64)
@@ -116,15 +116,14 @@ class AnnIndexMaintenanceSpec extends SparkSpec {
       q, "embedding", "vec_id", idx, k = 3, nProbe = 2)
     val baseline = rows(search())
     // point-lookup Bloom sidecar on the node id (the "fetch vector by
-    // id" maintenance path), then a refreshing rewrite: the sidecar is
-    // rebuilt for the new files and search is unchanged
+    // id" maintenance path), then a rewrite: the sidecar comes through
+    // the swap covering the new files and search is unchanged
     graft.sources.kv.KvBloom.build(spark, s"$idx/cells", Seq("nid"))
-    KvMerge.rewrite(spark, s"$idx/cells", numFiles = 2,
-      refreshIndexes = true)
+    KvMerge.rewrite(spark, s"$idx/cells", numFiles = 2)
     assert(rows(search()) == baseline)
     assert(graft.sources.kv.KvSidecar
       .readMeta(s"$idx/cells", graft.sources.kv.KvBloom.SidecarName).isDefined,
-      "refreshIndexes must re-record the Bloom sidecar")
+      "the rewrite must keep the Bloom sidecar")
   }
 
   test("cell-clustered cells table prunes probe scans by footer stats") {

@@ -63,14 +63,7 @@ class KvWriterSidecarSpec extends SparkSpec {
       .flatMap(_.asInstanceOf[KvInputPartition].chunks.map(_.file)).toSet
   }
 
-  /** Live file name → its entry in sidecar `name` (None: uncovered). */
-  private def entries(dir: String, name: String): Map[String, Option[String]] = {
-    KvSidecar.clearCaches()
-    val sc = KvSidecar.open(dir, name)
-    ParquetIO.listFilesStatus(dir).map { case (f, len, mt) =>
-      f.getName -> sc.flatMap(_.entryFor(f.getName, len, mt))
-    }.toMap
-  }
+  private def entries(dir: String, name: String) = FreshSidecars.entries(dir, name)
 
   /** Every live file is covered, and its entries equal a fresh build's. */
   private def assertMatchesFreshBuild(dir: String): Unit = {
@@ -79,10 +72,9 @@ class KvWriterSidecarSpec extends SparkSpec {
       assert(es.values.forall(_.isDefined),
         s"$n leaves files uncovered: ${es.collect { case (f, None) => f }}")
     }
-    KvBloom.build(spark, dir, cols)
-    KvIndex.build(dir, cols)
+    val built = FreshSidecars.of(spark, dir, cols, cols)
     published.foreach { case (n, es) =>
-      val fresh = entries(dir, n)
+      val fresh = built(n)
       val differ = fresh.keys.filter(f => fresh(f) != es(f)).toSeq.sorted
       assert(differ.isEmpty, s"$n entries differ from a fresh build for $differ")
     }

@@ -140,14 +140,12 @@ class KvZorderSpec extends SparkSpec {
     assert(xs.count() == 8 * 64)
   }
 
-  test("rewrite(refreshIndexes) keeps the pruning tier warm across the swap") {
+  test("rewrite keeps the pruning tier warm across the swap") {
     val dir = stage()
     KvIndex.build(dir, Seq("x", "y"))
-    // the rewrite replaces every file — WITHOUT the refresh the old
-    // sidecar is signature-stale and the strips stop pruning; with it
-    // the recorded build re-runs inside the maintenance window
-    KvMerge.rewrite(spark, dir, numFiles = 16, zorderBy = Seq("x", "y"),
-      refreshIndexes = true)
+    // the rewrite replaces every file; its write publishes the new
+    // files' zone maps into the index it carries through the swap
+    KvMerge.rewrite(spark, dir, numFiles = 16, zorderBy = Seq("x", "y"))
     graft.sources.kv.KvSidecar.clearCaches()
     def read() = spark.read.format("kv").option("path", dir).load()
     assert(plannedFiles(read().filter(col("x").between(8, 15))).size <= 8)

@@ -28,15 +28,50 @@ object SimilaritySearch {
     * thread pool lets the next chain's tasks back-fill the cores the
     * current chain's straggler tail leaves idle). Results are exact
     * counts over deterministic chains, so concurrency cannot change any
-    * value; callers must materialize any frame the thunks SHARE (the
-    * persisted brute-force truth) before calling.
+    * value. Every thunk finishes before the first failure is rethrown,
+    * so a caller's `finally` never releases a frame a sibling still reads.
     */
   private def inParallel[T](thunks: Seq[() => T]): Seq[T] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val fs = thunks.map(t => Future(t()))
-    fs.map(f => Await.result(f, Duration.Inf))
+    fs.foreach(f => Await.ready(f, Duration.Inf))
+    fs.map(_.value.get.get)
+  }
+
+  /** The recall audit every ANN tier shares: measure each named chain's
+    * top-k against one `truth` top-k over the same queries. The truth's
+    * (qid, nid) is persisted and materialized BEFORE any chain runs —
+    * the chains run concurrently ([[inParallel]]) and all read it — and
+    * released afterwards, also when a chain throws. Each chain's hits
+    * are its (qid, nid) rows found in the truth (a left-semi join), and
+    * recall_milli = hits·1000 div (k·|Q|), 1000 when |Q| = 0.
+    *
+    * One row: n_queries, k, the `lead` columns, then per chain
+    * hits_<name>, recall_<name>_milli — or n_hits, recall_milli for a
+    * chain named "" (the single-chain audits).
+    */
+  private def recallAudit(truth: DataFrame, k: Int, lead: Column*)(
+      chains: (String, () => DataFrame)*): DataFrame = {
+    val exact = truth.select(col("qid"), col("nid"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val nQueries = exact.select(col("qid")).distinct().count()
+      val hits = inParallel(chains.map { case (_, chain) => () =>
+        chain().select(col("qid"), col("nid"))
+          .join(exact, Seq("qid", "nid"), "left_semi").count()
+      })
+      val perChain = chains.map(_._1).zip(hits).flatMap { case (name, h) =>
+        val milli = if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
+        val (hitsCol, milliCol) =
+          if (name.isEmpty) ("n_hits", "recall_milli")
+          else (s"hits_$name", s"recall_${name}_milli")
+        Seq(lit(h).as(hitsCol), lit(milli).as(milliCol))
+      }
+      truth.sparkSession.range(1).select(
+        Seq(lit(nQueries).as("n_queries"), lit(k).as("k")) ++ lead ++ perChain: _*)
+    } finally { exact.unpersist(); () }
   }
 
   /** Subspace `s` of each vector for PQ, sliced per-row from
@@ -89,6 +124,26 @@ object SimilaritySearch {
         .select(col("qid"), col("nid"),
           (dot(col("qe"), col("ne")) / (col("qn") * col("nn"))).as("sim")),
       k)
+  }
+
+  /** Exact L2 top-k (qid, nid) of `queries` against `corpus`, ranked by
+    * negated squared distance, then nid — the truth of the ADC chains,
+    * which approximate L2 rather than cosine.
+    */
+  private def exactL2Knn(
+      corpus: DataFrame, queries: DataFrame,
+      vecCol: String, idCol: String, k: Int): DataFrame = {
+    val pc = prep(corpus, vecCol, idCol).select(col("id"), col("e"))
+    broadcast(prep(queries, vecCol, idCol)
+        .select(col("id").as("qid"), col("e").as("qe")))
+      .join(pc, col("qid") =!= col("id"))
+      .withColumn("d2", aggregate(zip_with(col("qe"), col("e"),
+        (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))
+      .groupBy(col("qid"))
+      .agg(graft.functions.BoundedTopK.topK(
+        struct((lit(0.0) - col("d2")).as("negd"), col("id").as("nid")),
+        k).as("top"))
+      .select(col("qid"), explode(col("top.nid")).as("nid"))
   }
 
   /** Scalar-quantized (SQ8 / int8) cosine top-k — the memory-lean
@@ -406,35 +461,14 @@ object SimilaritySearch {
   def binaryAsymRecallAudit(
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, dim: Int, k: Int,
-      refine: Int = 16): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsSym, hitsAsymRaw, hitsAsym) = inParallel(Seq(
-        () => hits(binaryRefineKnn(corpus, queries, vecCol, idCol,
-          dim, k, refine)),
-        () => hits(binaryAsymShortlist(corpus, queries, vecCol,
-          idCol, dim, k)),
-        () => hits(binaryAsymKnn(corpus, queries, vecCol, idCol,
-          dim, k, refine))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsSym).as("hits_sym_refined"),
-        lit(milli(hitsSym)).as("recall_sym_refined_milli"),
-        lit(hitsAsymRaw).as("hits_asym_raw"),
-        lit(milli(hitsAsymRaw)).as("recall_asym_raw_milli"),
-        lit(hitsAsym).as("hits_asym_refined"),
-        lit(milli(hitsAsym)).as("recall_asym_refined_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      refine: Int = 16): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "sym_refined" -> (() => binaryRefineKnn(corpus, queries, vecCol, idCol,
+        dim, k, refine)),
+      "asym_raw" -> (() => binaryAsymShortlist(corpus, queries, vecCol,
+        idCol, dim, k)),
+      "asym_refined" -> (() => binaryAsymKnn(corpus, queries, vecCol, idCol,
+        dim, k, refine)))
 
   /** Binary × IVF — sign codes under coarse cells: the query routes to
     * `nProbe` cells as usual, but WITHIN the probed cells the first
@@ -544,31 +578,12 @@ object SimilaritySearch {
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4, refine: Int = 16,
-      iterations: Int = 2, maxTrainPerCell: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsSym, hitsAsym) = inParallel(Seq(
-        () => hits(binaryIvfKnn(corpus, queries, vecCol, idCol,
-          dim, k, nCells, nProbe, refine, iterations, maxTrainPerCell)),
-        () => hits(binaryAsymIvfKnn(corpus, queries, vecCol, idCol,
-          dim, k, nCells, nProbe, refine, iterations, maxTrainPerCell))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsSym).as("hits_ivf_sym"),
-        lit(milli(hitsSym)).as("recall_ivf_sym_milli"),
-        lit(hitsAsym).as("hits_ivf_asym"),
-        lit(milli(hitsAsym)).as("recall_ivf_asym_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      iterations: Int = 2, maxTrainPerCell: Int = 16384): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "ivf_sym" -> (() => binaryIvfKnn(corpus, queries, vecCol, idCol,
+        dim, k, nCells, nProbe, refine, iterations, maxTrainPerCell)),
+      "ivf_asym" -> (() => binaryAsymIvfKnn(corpus, queries, vecCol, idCol,
+        dim, k, nCells, nProbe, refine, iterations, maxTrainPerCell)))
 
   /** What scanning codes instead of floats inside probed cells costs:
     * exact-within-cell IVF vs binary-within-cell (+rescore) at the SAME
@@ -578,31 +593,12 @@ object SimilaritySearch {
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4, refine: Int = 16,
-      iterations: Int = 2, maxTrainPerCell: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsIvf, hitsBin) = inParallel(Seq(
-        () => hits(ivfKnn(corpus, queries, vecCol, idCol, k,
-          nCells, nProbe, iterations, maxTrainPerCell)),
-        () => hits(binaryIvfKnn(corpus, queries, vecCol, idCol,
-          dim, k, nCells, nProbe, refine, iterations, maxTrainPerCell))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsIvf).as("hits_ivf_exact"),
-        lit(milli(hitsIvf)).as("recall_ivf_exact_milli"),
-        lit(hitsBin).as("hits_ivf_binary"),
-        lit(milli(hitsBin)).as("recall_ivf_binary_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      iterations: Int = 2, maxTrainPerCell: Int = 16384): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "ivf_exact" -> (() => ivfKnn(corpus, queries, vecCol, idCol, k,
+        nCells, nProbe, iterations, maxTrainPerCell)),
+      "ivf_binary" -> (() => binaryIvfKnn(corpus, queries, vecCol, idCol,
+        dim, k, nCells, nProbe, refine, iterations, maxTrainPerCell)))
 
   /** The 1-bit tier's measured value: Hamming-only vs Hamming+rescore
     * at the SAME shortlist budget, both vs exact cosine brute force —
@@ -611,30 +607,11 @@ object SimilaritySearch {
   def binaryRecallAudit(
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, dim: Int, k: Int,
-      refine: Int = 16): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsBin, hitsRef) = inParallel(Seq(
-        () => hits(binaryKnn(corpus, queries, vecCol, idCol, dim, k)),
-        () => hits(binaryRefineKnn(corpus, queries, vecCol, idCol,
-          dim, k, refine))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsBin).as("hits_binary"),
-        lit(milli(hitsBin)).as("recall_binary_milli"),
-        lit(hitsRef).as("hits_refined"),
-        lit(milli(hitsRef)).as("recall_refined_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      refine: Int = 16): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "binary" -> (() => binaryKnn(corpus, queries, vecCol, idCol, dim, k)),
+      "refined" -> (() => binaryRefineKnn(corpus, queries, vecCol, idCol,
+        dim, k, refine)))
 
   /** MMR (maximal marginal relevance, Carbonell & Goldstein 1998)
     * diversified re-ranking: from each query's `poolSize` most similar
@@ -910,31 +887,12 @@ object SimilaritySearch {
   def lshMultiProbeRecallAudit(
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int,
-      numPlanes: Int = 64, bands: Int = 8, probes: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsSingle, hitsMulti) = inParallel(Seq(
-        () => hits(lshKnn(corpus, queries, vecCol, idCol, k,
-          numPlanes, bands)),
-        () => hits(lshMultiProbeKnn(corpus, queries, vecCol, idCol,
-          k, numPlanes, bands, probes))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsSingle).as("hits_single"),
-        lit(milli(hitsSingle)).as("recall_single_milli"),
-        lit(hitsMulti).as("hits_multi"),
-        lit(milli(hitsMulti)).as("recall_multi_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      numPlanes: Int = 64, bands: Int = 8, probes: Int = 4): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "single" -> (() => lshKnn(corpus, queries, vecCol, idCol, k,
+        numPlanes, bands)),
+      "multi" -> (() => lshMultiProbeKnn(corpus, queries, vecCol, idCol,
+        k, numPlanes, bands, probes)))
 
   /** Multi-probe LSH with the probe budget spent JOINTLY across bands
     * (Lv et al.'s full query-directed ordering): instead of a per-band
@@ -1018,31 +976,12 @@ object SimilaritySearch {
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int,
       numPlanes: Int = 64, bands: Int = 8, probes: Int = 6,
-      maxFlipBits: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsBand, hitsJoint) = inParallel(Seq(
-        () => hits(lshMultiProbeKnn(corpus, queries, vecCol, idCol,
-          k, numPlanes, bands, probes, maxFlipBits)),
-        () => hits(lshMultiProbeJointKnn(corpus, queries, vecCol,
-          idCol, k, numPlanes, bands, bands * (probes - 1), maxFlipBits))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsBand).as("hits_per_band"),
-        lit(milli(hitsBand)).as("recall_per_band_milli"),
-        lit(hitsJoint).as("hits_joint"),
-        lit(milli(hitsJoint)).as("recall_joint_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      maxFlipBits: Int = 2): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "per_band" -> (() => lshMultiProbeKnn(corpus, queries, vecCol, idCol,
+        k, numPlanes, bands, probes, maxFlipBits)),
+      "joint" -> (() => lshMultiProbeJointKnn(corpus, queries, vecCol,
+        idCol, k, numPlanes, bands, bands * (probes - 1), maxFlipBits)))
 
   /** Measured value of the PAIR probe sequence at EQUAL band budget:
     * single-bit multi-probe (the r12 sequence, its probe count capped
@@ -1055,31 +994,12 @@ object SimilaritySearch {
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int,
       numPlanes: Int = 64, bands: Int = 8,
-      probes1: Int = 6, probes2: Int = 12): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hits1, hits2) = inParallel(Seq(
-        () => hits(lshMultiProbeKnn(corpus, queries, vecCol, idCol, k,
-          numPlanes, bands, probes1, maxFlipBits = 1)),
-        () => hits(lshMultiProbeKnn(corpus, queries, vecCol, idCol, k,
-          numPlanes, bands, probes2, maxFlipBits = 2))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hits1).as("hits_single_bit"),
-        lit(milli(hits1)).as("recall_single_bit_milli"),
-        lit(hits2).as("hits_pair"),
-        lit(milli(hits2)).as("recall_pair_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      probes1: Int = 6, probes2: Int = 12): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "single_bit" -> (() => lshMultiProbeKnn(corpus, queries, vecCol, idCol,
+        k, numPlanes, bands, probes1, maxFlipBits = 1)),
+      "pair" -> (() => lshMultiProbeKnn(corpus, queries, vecCol, idCol,
+        k, numPlanes, bands, probes2, maxFlipBits = 2)))
 
   /** Train IVF centroids with Lloyd iterations expressed as DataFrame
     * aggregations (one shuffle of `nCells`·dim rows per iteration — never
@@ -2087,46 +2007,22 @@ object SimilaritySearch {
       oversamples: Seq[Int],
       nCells: Int = 16, nProbe: Int = 4, iterations: Int = 2,
       maxTrainPerCell: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = filteredKnn(corpus, queries, vecCol, idCol, attrCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      def row(strategy: String, ann: DataFrame): DataFrame = {
-        val h = ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-        spark.range(1).select(
-          lit(strategy).as("strategy"), lit(nQueries).as("n_queries"),
-          lit(k).as("k"), lit(h).as("n_hits"), lit(milli(h)).as("recall_milli"))
-      }
-      val rows = inParallel(
-        (() => row("incell",
-          ivfFilteredKnn(corpus, queries, vecCol, idCol, attrCol, k,
-            nCells, nProbe, iterations, maxTrainPerCell))) +:
-        oversamples.map { ov => () =>
-          row(f"post_ov$ov%02d",
-            ivfPostFilterKnn(corpus, queries, vecCol, idCol, attrCol, k, ov,
-              nCells, nProbe, iterations, maxTrainPerCell))
-        })
-      rows.tail.foldLeft(rows.head)(_.unionAll(_)).orderBy(col("strategy"))
-    } finally { exact.unpersist(); () }
+    val strategies = "incell" +: oversamples.map(ov => f"post_ov$ov%02d")
+    val chains = (() => ivfFilteredKnn(corpus, queries, vecCol, idCol,
+        attrCol, k, nCells, nProbe, iterations, maxTrainPerCell)) +:
+      oversamples.map(ov => () => ivfPostFilterKnn(corpus, queries, vecCol,
+        idCol, attrCol, k, ov, nCells, nProbe, iterations, maxTrainPerCell))
+    // chains named by position, so a repeated oversample stays two rows
+    val row = recallAudit(
+      filteredKnn(corpus, queries, vecCol, idCol, attrCol, k), k)(
+      chains.indices.map(i => i.toString -> chains(i)): _*)
+    strategies.indices.map { i =>
+      row.select(lit(strategies(i)).as("strategy"), col("n_queries"),
+        col("k"), col(s"hits_$i").as("n_hits"),
+        col(s"recall_${i}_milli").as("recall_milli"))
+    }.reduce(_.unionAll(_)).orderBy(col("strategy"))
   }
 
-  /** Measured recall audit of the IVF tier vs exact brute force — the
-    * `q_dedup_lsh_audit` discipline applied to ANN: run BOTH detectors
-    * end to end over the same corpus/queries and report one row
-    * (n_queries, k, n_hits, recall_milli) where `n_hits` is the summed
-    * per-query top-k intersection and `recall_milli = hits·1000 div
-    * (k·|Q|)`. This is the number a production retrieval stack needs
-    * before trusting `nProbe`: IVF recall depends on the data's cluster
-    * structure, so it must be MEASURED per corpus, not assumed from the
-    * parameter sheet. Runs on a sampled query set at scale (the brute
-    * side is one broadcast-query scan — |Q|·N dot products, fine for
-    * audit-sized |Q|).
-    */
   /** OPQ-style structured rotation — the rotation tier of FAISS's OPQ
     * (Ge et al., CVPR 2013) with the deterministic Hadamard·sign
     * construction in place of the alternating-SVD refinement (an SVD is
@@ -2401,31 +2297,12 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsPlain, hitsPerm) = inParallel(Seq(
-        () => hits(ivfPqKnn(corpus, queries, vecCol, idCol, k,
-          nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-        () => hits(ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
-          dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsPlain).as("hits_plain"),
-        lit(milli(hitsPlain)).as("recall_plain_milli"),
-        lit(hitsPerm).as("hits_perm"),
-        lit(milli(hitsPerm)).as("recall_perm_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      maxTrainPerCell: Int = 16384): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "plain" -> (() => ivfPqKnn(corpus, queries, vecCol, idCol, k,
+        nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
+      "perm" -> (() => ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
+        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)))
 
   /** Measured value of the normalize knob on the LEARNED-permutation
     * chain ([[ivfCosineRecallAudit]]'s discipline on the varperm
@@ -2440,32 +2317,13 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsRaw, hitsNorm) = inParallel(Seq(
-        () => hits(ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
-          dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-        () => hits(ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
-          dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
-          normalize = true))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsRaw).as("hits_raw"),
-        lit(milli(hitsRaw)).as("recall_raw_milli"),
-        lit(hitsNorm).as("hits_norm"),
-        lit(milli(hitsNorm)).as("recall_norm_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      maxTrainPerCell: Int = 16384): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "raw" -> (() => ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
+        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
+      "norm" -> (() => ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
+        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
+        normalize = true)))
 
   /** Integer-determinized power iteration: the corpus's dominant
     * principal direction (of the uncentered second-moment matrix), as a
@@ -2719,33 +2577,14 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hits1, hits2) = inParallel(Seq(
-        () => hits(ivfPqPcaKnn(corpus, queries, vecCol, idCol,
-          dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
-          powerIters)),
-        () => hits(ivfPqPca2Knn(corpus, queries, vecCol, idCol,
-          dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
-          powerIters))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hits1).as("hits_pca1"),
-        lit(milli(hits1)).as("recall_pca1_milli"),
-        lit(hits2).as("hits_pca2"),
-        lit(milli(hits2)).as("recall_pca2_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "pca1" -> (() => ivfPqPcaKnn(corpus, queries, vecCol, idCol,
+        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
+        powerIters)),
+      "pca2" -> (() => ivfPqPca2Knn(corpus, queries, vecCol, idCol,
+        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
+        powerIters)))
 
   /** The THIRD deflated component's measured value: two- vs three-
     * reflection chains at equal budget on the same corpus, both vs
@@ -2761,31 +2600,12 @@ object SimilaritySearch {
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
       maxTrainPerCell: Int = 16384, powerIters: Int = 4,
       normalize: Boolean = false, balancePivots: Boolean = false): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hits2, hits3) = inParallel(Seq(
-        () => hits(ivfPqPcaKKnn(corpus, queries, vecCol, idCol,
-          dim, k, 2, nCells, nProbe, m, pqCells, iterations,
-          maxTrainPerCell, powerIters, normalize, balancePivots)),
-        () => hits(ivfPqPcaKKnn(corpus, queries, vecCol, idCol,
-          dim, k, 3, nCells, nProbe, m, pqCells, iterations,
-          maxTrainPerCell, powerIters, normalize, balancePivots))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hits2).as("hits_pca2"),
-        lit(milli(hits2)).as("recall_pca2_milli"),
-        lit(hits3).as("hits_pca3"),
-        lit(milli(hits3)).as("recall_pca3_milli"))
-    } finally { exact.unpersist(); () }
+    def pcaK(components: Int): () => DataFrame = () =>
+      ivfPqPcaKKnn(corpus, queries, vecCol, idCol, dim, k, components,
+        nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
+        powerIters, normalize, balancePivots)
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "pca2" -> pcaK(2), "pca3" -> pcaK(3))
   }
 
   /** The metric-consistency audit: the SAME plain IVF-PQ chain at the
@@ -2803,48 +2623,16 @@ object SimilaritySearch {
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
       maxTrainPerCell: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      def norm(df: DataFrame): DataFrame =
-        df.select(col(idCol), unitNorm(col(vecCol)).as(vecCol))
+    def norm(df: DataFrame): DataFrame =
+      df.select(col(idCol), unitNorm(col(vecCol)).as(vecCol))
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
       // the mismatch ceiling itself: EXACT L2 top-k vs cosine top-k
-      val pc = prep(corpus, vecCol, idCol)
-        .select(col("id"), col("e"))
-      val pq = prep(queries, vecCol, idCol)
-        .select(col("id").as("qid"), col("e").as("qe"))
-      val Seq(hitsRaw, hitsNorm, hitsL2) = inParallel(Seq(
-        () => hits(rankAdc(ivfPqAdcScores(corpus, queries, vecCol,
-          idCol, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)),
-        () => hits(rankAdc(ivfPqAdcScores(norm(corpus), norm(queries),
-          vecCol, idCol, nCells, nProbe, m, pqCells, iterations,
-          maxTrainPerCell), k)),
-        () => hits(pq.crossJoin(pc)
-          .where(col("qid") =!= col("id"))
-          .withColumn("d2", aggregate(zip_with(col("qe"), col("e"),
-            (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))
-          .groupBy(col("qid"))
-          .agg(graft.functions.BoundedTopK.topK(
-            struct((lit(0.0) - col("d2")).as("negd"), col("id").as("nid")),
-            k).as("top"))
-          .select(col("qid"), explode(col("top.nid")).as("nid")))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsL2).as("hits_exact_l2"),
-        lit(milli(hitsL2)).as("recall_exact_l2_milli"),
-        lit(hitsRaw).as("hits_raw"),
-        lit(milli(hitsRaw)).as("recall_raw_milli"),
-        lit(hitsNorm).as("hits_norm"),
-        lit(milli(hitsNorm)).as("recall_norm_milli"))
-    } finally { exact.unpersist(); () }
+      "exact_l2" -> (() => exactL2Knn(corpus, queries, vecCol, idCol, k)),
+      "raw" -> (() => rankAdc(ivfPqAdcScores(corpus, queries, vecCol,
+        idCol, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)),
+      "norm" -> (() => rankAdc(ivfPqAdcScores(norm(corpus), norm(queries),
+        vecCol, idCol, nCells, nProbe, m, pqCells, iterations,
+        maxTrainPerCell), k)))
   }
 
   /** The SATURATION audit for the deflation loop: recall at components
@@ -2867,31 +2655,13 @@ object SimilaritySearch {
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
       maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(components: Int): Long =
-        ivfPqPcaKKnn(corpus, queries, vecCol, idCol, dim, k, components,
-          nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
-          powerIters, normalize = true, balancePivots = true)
-          .select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsUnder, hitsFull, hitsOver) = inParallel(Seq(
-        () => hits(m - 1), () => hits(m), () => hits(m + 1)))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"), lit(m).as("m"),
-        lit(hitsUnder).as("hits_under"),
-        lit(milli(hitsUnder)).as("recall_under_milli"),
-        lit(hitsFull).as("hits_full"),
-        lit(milli(hitsFull)).as("recall_full_milli"),
-        lit(hitsOver).as("hits_over"),
-        lit(milli(hitsOver)).as("recall_over_milli"))
-    } finally { exact.unpersist(); () }
+    def pcaK(components: Int): () => DataFrame = () =>
+      ivfPqPcaKKnn(corpus, queries, vecCol, idCol, dim, k, components,
+        nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
+        powerIters, normalize = true, balancePivots = true)
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k,
+      lit(m).as("m"))(
+      "under" -> pcaK(m - 1), "full" -> pcaK(m), "over" -> pcaK(m + 1))
   }
 
   /** Apply the exact orthogonal reflection H = I − 2uuᵀ/(uᵀu) row-
@@ -3025,32 +2795,13 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsPerm, hitsPca) = inParallel(Seq(
-        () => hits(ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
-          dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-        () => hits(ivfPqPcaKnn(corpus, queries, vecCol, idCol,
-          dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
-          powerIters))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsPerm).as("hits_perm"),
-        lit(milli(hitsPerm)).as("recall_perm_milli"),
-        lit(hitsPca).as("hits_pca"),
-        lit(milli(hitsPca)).as("recall_pca_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "perm" -> (() => ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
+        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
+      "pca" -> (() => ivfPqPcaKnn(corpus, queries, vecCol, idCol,
+        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
+        powerIters)))
 
   /** Measured-recall comparison of the OPQ-rotated IVF-PQ tier against
     * the plain one at EQUAL probe budget, both vs exact brute force —
@@ -3064,51 +2815,33 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsPlain, hitsOpq) = inParallel(Seq(
-        () => hits(ivfPqKnn(corpus, queries, vecCol, idCol, k,
-          nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-        () => hits(ivfPqOpqKnn(corpus, queries, vecCol, idCol, dim, k,
-          nCells, nProbe, m, pqCells, iterations, maxTrainPerCell))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsPlain).as("hits_plain"), lit(milli(hitsPlain)).as("recall_plain_milli"),
-        lit(hitsOpq).as("hits_opq"), lit(milli(hitsOpq)).as("recall_opq_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      maxTrainPerCell: Int = 16384): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "plain" -> (() => ivfPqKnn(corpus, queries, vecCol, idCol, k,
+        nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
+      "opq" -> (() => ivfPqOpqKnn(corpus, queries, vecCol, idCol, dim, k,
+        nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)))
 
+  /** Measured recall audit of the IVF tier vs exact brute force — the
+    * `q_dedup_lsh_audit` discipline applied to ANN: run BOTH detectors
+    * end to end over the same corpus/queries and report one row
+    * (n_queries, k, n_hits, recall_milli) where `n_hits` is the summed
+    * per-query top-k intersection and `recall_milli = hits·1000 div
+    * (k·|Q|)`. This is the number a production retrieval stack needs
+    * before trusting `nProbe`: IVF recall depends on the data's cluster
+    * structure, so it must be MEASURED per corpus, not assumed from the
+    * parameter sheet. Runs on a sampled query set at scale (the brute
+    * side is one broadcast-query scan — |Q|·N dot products, fine for
+    * audit-sized |Q|).
+    */
   def annRecallAudit(
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 4, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-    val ivf = ivfKnn(corpus, queries, vecCol, idCol, k,
-      nCells, nProbe, iterations, maxTrainPerCell).select(col("qid"), col("nid"))
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      val nHits = ivf.join(exact, Seq("qid", "nid"), "left_semi").count()
-      val recallMilli =
-        if (nQueries == 0) 1000L else nHits * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(nHits).as("n_hits"), lit(recallMilli).as("recall_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      maxTrainPerCell: Int = 16384): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "" -> (() => ivfKnn(corpus, queries, vecCol, idCol, k,
+        nCells, nProbe, iterations, maxTrainPerCell)))
 
   /** Graph-walk ANN (NSW-lite): deterministic beam search over a
     * within-cell k-NN graph — the graph tier of the ANN family, kept
@@ -4092,26 +3825,12 @@ object SimilaritySearch {
       crossCells: Int = 0, degreeCross: Int = 0,
       entryBeam: Int = 4, hopsTop: Int = 2, degreeTop: Int = 4,
       entryCells: Int = 4, hopsCells: Int = 2,
-      degreeCells: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    val hier = graphKnnHier2(corpus, queries, vecCol, idCol, k, nCells,
-      degree, beamWidth, hops, seedsPerCell, iterations, maxTrainPerCell,
-      maxEdgeCandidatesPerCell, crossCells, degreeCross,
-      entryBeam, hopsTop, degreeTop, entryCells, hopsCells, degreeCells)
-      .select(col("qid"), col("nid"))
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      val nHits = hier.join(exact, Seq("qid", "nid"), "left_semi").count()
-      val recallMilli =
-        if (nQueries == 0) 1000L else nHits * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(nHits).as("n_hits"), lit(recallMilli).as("recall_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      degreeCells: Int = 4): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "" -> (() => graphKnnHier2(corpus, queries, vecCol, idCol, k, nCells,
+        degree, beamWidth, hops, seedsPerCell, iterations, maxTrainPerCell,
+        maxEdgeCandidatesPerCell, crossCells, degreeCross,
+        entryBeam, hopsTop, degreeTop, entryCells, hopsCells, degreeCells)))
 
   /** Measured recall of the hierarchical walk vs exact brute force —
     * the [[graphRecallAudit]] discipline for [[graphKnnHier]].
@@ -4124,26 +3843,12 @@ object SimilaritySearch {
       maxTrainPerCell: Int = 16384,
       maxEdgeCandidatesPerCell: Int = 16384,
       crossCells: Int = 0, degreeCross: Int = 0,
-      entryBeam: Int = 4, hopsTop: Int = 2, degreeTop: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    val hier = graphKnnHier(corpus, queries, vecCol, idCol, k, nCells,
-      degree, beamWidth, hops, seedsPerCell, iterations, maxTrainPerCell,
-      maxEdgeCandidatesPerCell, crossCells, degreeCross,
-      entryBeam, hopsTop, degreeTop)
-      .select(col("qid"), col("nid"))
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      val nHits = hier.join(exact, Seq("qid", "nid"), "left_semi").count()
-      val recallMilli =
-        if (nQueries == 0) 1000L else nHits * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(nHits).as("n_hits"), lit(recallMilli).as("recall_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      entryBeam: Int = 4, hopsTop: Int = 2, degreeTop: Int = 4): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "" -> (() => graphKnnHier(corpus, queries, vecCol, idCol, k, nCells,
+        degree, beamWidth, hops, seedsPerCell, iterations, maxTrainPerCell,
+        maxEdgeCandidatesPerCell, crossCells, degreeCross,
+        entryBeam, hopsTop, degreeTop)))
 
   /** Measured recall of the graph tier vs exact brute force — the
     * [[annRecallAudit]] discipline for [[graphKnn]]: one row
@@ -4159,25 +3864,11 @@ object SimilaritySearch {
       seedsPerCell: Int = 2, iterations: Int = 2,
       maxTrainPerCell: Int = 16384,
       maxEdgeCandidatesPerCell: Int = 16384,
-      crossCells: Int = 0, degreeCross: Int = 0): DataFrame = {
-    val spark = corpus.sparkSession
-    val graph = graphKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe,
-      degree, beamWidth, hops, seedsPerCell, iterations, maxTrainPerCell,
-      maxEdgeCandidatesPerCell, crossCells, degreeCross)
-      .select(col("qid"), col("nid"))
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      val nHits = graph.join(exact, Seq("qid", "nid"), "left_semi").count()
-      val recallMilli =
-        if (nQueries == 0) 1000L else nHits * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(nHits).as("n_hits"), lit(recallMilli).as("recall_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      crossCells: Int = 0, degreeCross: Int = 0): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "" -> (() => graphKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe,
+        degree, beamWidth, hops, seedsPerCell, iterations, maxTrainPerCell,
+        maxEdgeCandidatesPerCell, crossCells, degreeCross)))
 
   /** The metric-consistency audit for the IVF-Flat tier (the
     * [[cosineRecallAudit]] discipline one tier down): the SAME probe
@@ -4193,32 +3884,13 @@ object SimilaritySearch {
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 4, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsRaw, hitsNorm) = inParallel(Seq(
-        () => hits(ivfKnn(corpus, queries, vecCol, idCol, k,
-          nCells, nProbe, iterations, maxTrainPerCell)),
-        () => hits(ivfKnn(
-          unitNormed(corpus, vecCol, idCol), unitNormed(queries, vecCol, idCol),
-          vecCol, idCol, k, nCells, nProbe, iterations, maxTrainPerCell))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsRaw).as("hits_raw"),
-        lit(milli(hitsRaw)).as("recall_raw_milli"),
-        lit(hitsNorm).as("hits_norm"),
-        lit(milli(hitsNorm)).as("recall_norm_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      maxTrainPerCell: Int = 16384): DataFrame =
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "raw" -> (() => ivfKnn(corpus, queries, vecCol, idCol, k,
+        nCells, nProbe, iterations, maxTrainPerCell)),
+      "norm" -> (() => ivfKnn(
+        unitNormed(corpus, vecCol, idCol), unitNormed(queries, vecCol, idCol),
+        vecCol, idCol, k, nCells, nProbe, iterations, maxTrainPerCell)))
 
   /** IVF-PQ with RESIDUAL encoding — the layout FAISS's IVFPQ actually
     * ships (Jégou et al., TPAMI 2011 §IV.B, "IVFADC"): PQ codes
@@ -4499,49 +4171,17 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-    val pc = prep(corpus, vecCol, idCol).select(col("id"), col("e"))
-    val exact = broadcast(prep(queries, vecCol, idCol)
-        .select(col("id").as("qid"), col("e").as("qe")))
-      .join(pc, col("qid") =!= col("id"))
-      .withColumn("d2", aggregate(zip_with(col("qe"), col("e"),
-        (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))
-      .groupBy(col("qid"))
-      .agg(graft.functions.BoundedTopK.topK(
-        struct((lit(0.0) - col("d2")).as("negd"), col("id").as("nid")),
-        k).as("top"))
-      .select(col("qid"), explode(col("top.nid")).as("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsPlain, hitsPerm, hitsRes, hitsBoth) = inParallel(Seq(
-        () => hits(rankAdc(ivfPqAdcScores(corpus, queries, vecCol,
-          idCol, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)),
-        () => hits(ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
-          dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-        () => hits(ivfPqResidualKnn(corpus, queries, vecCol, idCol,
-          k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-        () => hits(ivfPqOpqResidualKnn(corpus, queries, vecCol,
-          idCol, dim, k, nCells, nProbe, m, pqCells, iterations,
-          maxTrainPerCell))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsPlain).as("hits_plain"),
-        lit(milli(hitsPlain)).as("recall_plain_milli"),
-        lit(hitsPerm).as("hits_perm"),
-        lit(milli(hitsPerm)).as("recall_perm_milli"),
-        lit(hitsRes).as("hits_residual"),
-        lit(milli(hitsRes)).as("recall_residual_milli"),
-        lit(hitsBoth).as("hits_both"),
-        lit(milli(hitsBoth)).as("recall_both_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      maxTrainPerCell: Int = 16384): DataFrame =
+    recallAudit(exactL2Knn(corpus, queries, vecCol, idCol, k), k)(
+      "plain" -> (() => rankAdc(ivfPqAdcScores(corpus, queries, vecCol,
+        idCol, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)),
+      "perm" -> (() => ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
+        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
+      "residual" -> (() => ivfPqResidualKnn(corpus, queries, vecCol, idCol,
+        k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
+      "both" -> (() => ivfPqOpqResidualKnn(corpus, queries, vecCol,
+        idCol, dim, k, nCells, nProbe, m, pqCells, iterations,
+        maxTrainPerCell)))
 
   /** Residual ADC with an exact re-ranking tail — [[ivfPqRefineKnn]]'s
     * FAISS `IndexRefineFlat` pattern on the residual chain (IVFADC +
@@ -4620,32 +4260,14 @@ object SimilaritySearch {
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int,
       prefixDim: Int, refine: Int = 16): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      def trunc(df: DataFrame) = df.select(col(idCol),
-        slice(col(vecCol), 1, prefixDim).as(vecCol))
-      val Seq(hitsPrefix, hitsRescored) = inParallel(Seq(
-        () => hits(bruteForceKnn(trunc(corpus), trunc(queries),
-          vecCol, idCol, k)),
-        () => hits(matryoshkaKnn(corpus, queries, vecCol, idCol,
-          k, prefixDim, refine))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(prefixDim).as("prefix_dim"), lit(refine).as("refine"),
-        lit(hitsPrefix).as("hits_prefix"),
-        lit(milli(hitsPrefix)).as("recall_prefix_milli"),
-        lit(hitsRescored).as("hits_rescored"),
-        lit(milli(hitsRescored)).as("recall_rescored_milli"))
-    } finally { exact.unpersist(); () }
+    def trunc(df: DataFrame) = df.select(col(idCol),
+      slice(col(vecCol), 1, prefixDim).as(vecCol))
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k,
+      lit(prefixDim).as("prefix_dim"), lit(refine).as("refine"))(
+      "prefix" -> (() => bruteForceKnn(trunc(corpus), trunc(queries),
+        vecCol, idCol, k)),
+      "rescored" -> (() => matryoshkaKnn(corpus, queries, vecCol, idCol,
+        k, prefixDim, refine)))
   }
 
   /** Residual vs absolute PQ coding at the SAME budget, both vs exact
@@ -4659,40 +4281,12 @@ object SimilaritySearch {
       vecCol: String, idCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-    val pc = prep(corpus, vecCol, idCol).select(col("id"), col("e"))
-    val exact = broadcast(prep(queries, vecCol, idCol)
-        .select(col("id").as("qid"), col("e").as("qe")))
-      .join(pc, col("qid") =!= col("id"))
-      .withColumn("d2", aggregate(zip_with(col("qe"), col("e"),
-        (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))
-      .groupBy(col("qid"))
-      .agg(graft.functions.BoundedTopK.topK(
-        struct((lit(0.0) - col("d2")).as("negd"), col("id").as("nid")),
-        k).as("top"))
-      .select(col("qid"), explode(col("top.nid")).as("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      val Seq(hitsPlain, hitsRes) = inParallel(Seq(
-        () => hits(rankAdc(ivfPqAdcScores(corpus, queries, vecCol,
-          idCol, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)),
-        () => hits(ivfPqResidualKnn(corpus, queries, vecCol, idCol,
-          k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsPlain).as("hits_plain"),
-        lit(milli(hitsPlain)).as("recall_plain_milli"),
-        lit(hitsRes).as("hits_residual"),
-        lit(milli(hitsRes)).as("recall_residual_milli"))
-    } finally { exact.unpersist(); () }
-  }
+      maxTrainPerCell: Int = 16384): DataFrame =
+    recallAudit(exactL2Knn(corpus, queries, vecCol, idCol, k), k)(
+      "plain" -> (() => rankAdc(ivfPqAdcScores(corpus, queries, vecCol,
+        idCol, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)),
+      "residual" -> (() => ivfPqResidualKnn(corpus, queries, vecCol, idCol,
+        k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)))
 
   /** The metric-consistency audit for the graph tier: [[graphKnn]] at
     * the SAME walk budget over raw vs unit-normalized vectors, both vs
@@ -4713,31 +4307,13 @@ object SimilaritySearch {
       maxTrainPerCell: Int = 16384,
       maxEdgeCandidatesPerCell: Int = 16384,
       crossCells: Int = 0, degreeCross: Int = 0): DataFrame = {
-    val spark = corpus.sparkSession
-    val exact = bruteForceKnn(corpus, queries, vecCol, idCol, k)
-      .select(col("qid"), col("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nQueries = exact.select(col("qid")).distinct().count()
-      def hits(ann: DataFrame): Long =
-        ann.select(col("qid"), col("nid"))
-          .join(exact, Seq("qid", "nid"), "left_semi").count()
-      def run(c: DataFrame, q: DataFrame): Long =
-        hits(graphKnn(c, q, vecCol, idCol, k, nCells, nProbe, degree,
-          beamWidth, hops, seedsPerCell, iterations, maxTrainPerCell,
-          maxEdgeCandidatesPerCell, crossCells, degreeCross))
-      val Seq(hitsRaw, hitsNorm) = inParallel(Seq(
-        () => run(corpus, queries),
-        () => run(unitNormed(corpus, vecCol, idCol),
-          unitNormed(queries, vecCol, idCol))))
-      def milli(h: Long): Long =
-        if (nQueries == 0) 1000L else h * 1000L / (k.toLong * nQueries)
-      spark.range(1).select(
-        lit(nQueries).as("n_queries"), lit(k).as("k"),
-        lit(hitsRaw).as("hits_raw"),
-        lit(milli(hitsRaw)).as("recall_raw_milli"),
-        lit(hitsNorm).as("hits_norm"),
-        lit(milli(hitsNorm)).as("recall_norm_milli"))
-    } finally { exact.unpersist(); () }
+    def walk(c: DataFrame, q: DataFrame): () => DataFrame = () =>
+      graphKnn(c, q, vecCol, idCol, k, nCells, nProbe, degree,
+        beamWidth, hops, seedsPerCell, iterations, maxTrainPerCell,
+        maxEdgeCandidatesPerCell, crossCells, degreeCross)
+    recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
+      "raw" -> walk(corpus, queries),
+      "norm" -> walk(unitNormed(corpus, vecCol, idCol),
+        unitNormed(queries, vecCol, idCol)))
   }
 }

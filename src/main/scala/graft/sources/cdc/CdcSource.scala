@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.functions.CdcFunctions
 import graft.sources.{ParquetIO, SchemaCatalog}
-import graft.sources.kv.KvSource
+import graft.sources.kv.{KvSchemaMeta, KvSource}
 
 /** `cdc` DataSource V2 — change-data-capture stream over a local
   * changelog directory (SURVEY.md §2 T1/T2).
@@ -258,12 +258,20 @@ object Cdc {
     * is folded to its latest-per-key image (column ops resolved), turned
     * into per-row merge operations (DELETE → DELETE, else UPSERT), and
     * merged atomically into the target. Caller starts/stops the returned
-    * query.
+    * query. On a changelog with no batch yet, the stream starts from the
+    * target's recorded schema, so it can run before the first change.
     */
   def applyStream(spark: SparkSession, changelogDir: String, targetDir: String,
       pks: Seq[String], checkpointDir: String,
       maxFilesPerTrigger: Int = 1): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.format("cdc")
+    val cdc = spark.readStream.format("cdc")
+    val reader = if (ParquetIO.listFiles(changelogDir).nonEmpty) cdc else {
+      val target = KvSchemaMeta.read(targetDir).getOrElse(throw new IllegalArgumentException(
+        s"no changelog files under $changelogDir and no recorded schema for $targetDir"))
+      cdc.schema(augmentSchema(target, pks)
+        .add(StructField(RecordSeqCol, LongType, nullable = true)))
+    }
+    reader
       .option("path", changelogDir)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .load()

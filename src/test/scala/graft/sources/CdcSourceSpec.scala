@@ -106,6 +106,40 @@ class CdcSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming CDC apply starts on an empty changelog from the target's recorded schema") {
+    val logDir = Files.createTempDirectory("cdcempty").toString + "/log"
+    val target = Files.createTempDirectory("cdcemptytarget").toString + "/t"
+    val ckpt = Files.createTempDirectory("cdcemptyckpt").toString
+    Seq((1L, "seed", 0.5)).toDF("pk", "name", "score")
+      .write.format("kv").option("path", target).mode("append").save()
+    val noTarget = Files.createTempDirectory("cdcnotarget").toString + "/t"
+    val err = intercept[IllegalArgumentException](
+      Cdc.applyStream(spark, logDir, noTarget, Seq("pk"), ckpt))
+    assert(err.getMessage.contains(logDir) && err.getMessage.contains(noTarget),
+      err.getMessage)
+
+    val q = Cdc.applyStream(spark, logDir, target, Seq("pk"), ckpt)
+    try {
+      q.processAllAvailable()
+      Cdc.appendBatch(changesDf(Seq(
+        changeRow("PUT", 1L, 1L, "alice", 1.0, "PUT", "PUT"),
+        changeRow("PUT", 1L, 2L, "bob", 2.0, "PUT", "PUT"))), logDir)
+      Cdc.appendBatch(changesDf(Seq(
+        changeRow("UPDATE", 2L, 1L, "alice2", null, "PUT", "DELETE_ONE_VERSION"),
+        changeRow("DELETE", 2L, 2L, null, null, null, null),
+        changeRow("PUT", 2L, 3L, "carol", 3.0, "PUT", "PUT"))), logDir)
+      q.processAllAvailable()
+      // every seeded key is rewritten by the changelog, so the applied
+      // table equals the batch fold of the changelog alone
+      val got = spark.read.format("kv").option("path", target).load()
+      val want = Cdc.applyChanges(
+        spark.read.format("cdc").option("path", logDir).load(), Seq("pk"))
+      assert(got.orderBy("pk").collect().map(_.toSeq).toSeq ==
+        want.orderBy("pk").collect().map(_.toSeq).toSeq)
+      assert(got.count() == 2)
+    } finally q.stop()
+  }
+
   test("equal-timestamp changes resolve by changelog position (deterministic tiebreak)") {
     // PUT then DELETE for one key, same record timestamp, committed in one
     // batch: the later changelog row (higher __cdc_seq__) must win.

@@ -7,8 +7,9 @@ output is identical to another build's output.
 
 Usage: python3 scripts/diff_outputs.py <dirA> <dirB> [prefix,prefix,...]
 (each dir from `sbt "runMain graft.Verify <sfDir> <dir> [prefixes]"`).
-Exit 0 when every gate matches; otherwise prints the first gate that
-differs and why, and exits 1.
+Prints one `SAME <gate>` or `DIFF <gate>: <why>` line per gate found under
+either tree (a gate under only one tree is a DIFF), so one run shows every
+gate a change touched. Exit 0 when every gate matches, else 1.
 """
 import math
 import os
@@ -63,21 +64,23 @@ def main(argv):
     dir_a, dir_b = argv[1], argv[2]
     prefixes = [p for p in argv[3].split(",") if p] if len(argv) == 4 else []
     ga, gb = gates(dir_a, prefixes), gates(dir_b, prefixes)
-    only = sorted(set(ga) ^ set(gb))
-    if only:
-        print(f"DIFF {only[0]}: only under {dir_a if only[0] in ga else dir_b}")
-        return 1
-    if not ga:
+    every = sorted(set(ga) | set(gb))
+    if not every:
         print("DIFF: no gate outputs to compare")
         return 1
-    for g in ga:
-        why = diff_gate(os.path.join(dir_a, g), os.path.join(dir_b, g))
-        if why is not None:
+    same = 0
+    for g in every:
+        if g not in gb or g not in ga:
+            why = f"only under {dir_a if g in ga else dir_b}"
+        else:
+            why = diff_gate(os.path.join(dir_a, g), os.path.join(dir_b, g))
+        if why is None:
+            same += 1
+            print(f"SAME {g}")
+        else:
             print(f"DIFF {g}: {why}")
-            return 1
-        print(f"SAME {g}")
-    print(f"{len(ga)}/{len(ga)} gates identical")
-    return 0
+    print(f"{same}/{len(every)} gates identical")
+    return 0 if same == len(every) else 1
 
 
 if __name__ == "__main__":

@@ -1249,14 +1249,23 @@ object SimilaritySearch {
     * refinement trades determinism for recall; this variant keeps every
     * stage bit-replayable by the oracle, and the recall knobs are
     * nProbe/pqCells).
+    *
+    * `normalize` unit-normalizes corpus and queries first (on unit
+    * vectors ‖x−y‖² = 2−2·cos, so the L2 chain becomes cosine-
+    * consistent); `rotation` then puts a [[Rotation]] in front of the
+    * chain, fitted once on the (normalized) corpus and applied to
+    * corpus and queries alike — coarse cells, codes and ADC all live in
+    * the rotated space.
     */
   def ivfPqKnn(
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame = {
-    rankAdc(ivfPqAdcScores(corpus, queries, vecCol, idCol,
+      maxTrainPerCell: Int = 16384, normalize: Boolean = false,
+      rotation: Option[Rotation] = None): DataFrame = {
+    val (base, pre) = fitPreprocess(corpus, vecCol, idCol, m, normalize, rotation)
+    rankAdc(ivfPqAdcScores(base, pre(queries, vecCol, idCol), vecCol, idCol,
       nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)
   }
 
@@ -1270,7 +1279,8 @@ object SimilaritySearch {
         round(-col("s.negd"), 6).as("adist"), (col("pos") + 1).cast("int").as("rnk"))
 
   /** The IVF-PQ candidate generator shared by [[ivfPqKnn]] and
-    * [[ivfPqRefineKnn]]: (qid, nid, adist) for every code in the query's
+    * [[ivfPqRefineKnn]] (inputs already preprocessed): (qid, nid, adist)
+    * for every code in the query's
     * probed cells, self-matches excluded.
     */
   private def ivfPqAdcScores(
@@ -1289,13 +1299,7 @@ object SimilaritySearch {
     // ONE row-local encode pass: coarse cell + all m codes per corpus
     // row over the broadcast model arrays (formerly a per-subspace
     // assign + m-way join + lists join — each an exchange)
-    val prepped = prep(corpus, vecCol, idCol)
-      .crossJoin(broadcast(
-        centroidArray(coarse).select(col("cents").as("__cents_coarse"))))
-    val codes = encodeCodes(prepped, col("e"), perSubCents,
-      keep = Seq(col("id").as("nid"),
-        argminCell(col("__cents_coarse"), col("e")).as("ivf_cell")))
-
+    val codes = encodeAbsolute(corpus, vecCol, idCol, coarse, perSubCents)
     val dtabs = pqDistanceTables(queries, vecCol, idCol, perSubCents)
     ivfPqScoreModel(queries, vecCol, idCol, coarse, dtabs, codes, nProbe, m)
   }
@@ -1364,13 +1368,19 @@ object SimilaritySearch {
     * `<path>/pq<s>`, and the corpus as codes (nid, ivf_cell, codes) at
     * `<path>/codes` — m bytes-worth of codes per vector instead of the
     * raw floats. Searches and appends never retrain or rescan the
-    * corpus.
+    * corpus; they apply the preprocessing the build recorded
+    * (`normalize` in `meta`, a stored rotation in its own tables —
+    * [[StoredRotation]]), so answers are bit-identical to the in-memory
+    * [[ivfPqKnn]] at the same knobs. Only the rotations with a stored
+    * form (VarPerm, Pca) persist.
     */
   def buildIvfPqIndex(
       corpus: DataFrame, vecCol: String, idCol: String, path: String,
       nCells: Int = 16, m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, normalize: Boolean = false): Unit = {
-    val base = if (normalize) unitNormed(corpus, vecCol, idCol) else corpus
+      maxTrainPerCell: Int = 16384, normalize: Boolean = false,
+      rotation: Option[Rotation] = None): Unit = {
+    val (base, pre) = fitPreprocess(corpus, vecCol, idCol, m, normalize, rotation)
+    StoredRotation.write(corpus.sparkSession, path, pre)
     val coarse = trainCentroids(base, vecCol, idCol, nCells, iterations, maxTrainPerCell)
     coarse.write.format("kv").option("path", s"$path/coarse")
       .mode("overwrite").save()
@@ -1380,45 +1390,78 @@ object SimilaritySearch {
       cents.write.format("kv").option("path", s"$path/pq$s")
         .mode("overwrite").save()
     }
-    // ONE row-local encode pass (coarse cell + all m codes per row)
-    val prepped = prep(base, vecCol, idCol)
-      .crossJoin(broadcast(
-        centroidArray(coarse).select(col("cents").as("__cents_coarse"))))
-    encodeCodes(prepped, col("e"), perSubCents,
-      keep = Seq(col("id").as("nid"),
-        argminCell(col("__cents_coarse"), col("e")).as("ivf_cell")))
+    encodeAbsolute(base, vecCol, idCol, coarse, perSubCents)
       .write.format("kv").option("path", s"$path/codes")
       .mode("overwrite").save()
-    val spark = corpus.sparkSession
+    writePqMeta(corpus.sparkSession, path, residual = false, pre)
+  }
+
+  /** ONE row-local encode pass of preprocessed rows against an absolute
+    * IVF-PQ model: coarse cell + all m codes per row (nid, ivf_cell,
+    * codes) — shared by the in-memory chain, the build and the append.
+    */
+  private def encodeAbsolute(df: DataFrame, vecCol: String, idCol: String,
+      coarse: DataFrame, subCents: Seq[DataFrame]): DataFrame = {
+    val prepped = prep(df, vecCol, idCol)
+      .crossJoin(broadcast(
+        centroidArray(coarse).select(col("cents").as("__cents_coarse"))))
+    encodeCodes(prepped, col("e"), subCents,
+      keep = Seq(col("id").as("nid"),
+        argminCell(col("__cents_coarse"), col("e")).as("ivf_cell")))
+  }
+
+  /** The PQ layouts' one-row `meta` table: the residual layout marker
+    * and the normalize flag. A rotated index records its normalize flag
+    * with the rotation instead ([[StoredRotation]]) and 0 here.
+    */
+  private def writePqMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String, residual: Boolean, pre: Preprocess): Unit = {
     import spark.implicits._
-    Seq((0L, if (normalize) 1L else 0L)).toDF("residual", "normalize")
+    Seq((if (residual) 1L else 0L,
+      if (pre.normalize && pre.rotation.isEmpty) 1L else 0L))
+      .toDF("residual", "normalize")
       .write.format("kv").option("path", s"$path/meta")
       .mode("overwrite").save()
   }
 
-  /** The IVF-PQ family's stored preprocessing flag — the
-    * [[readNormalizeKnob]] contract on the `meta` table the PQ layouts
-    * carry (`normalize=1` → unit-normalize inputs before prep).
-    * Pre-meta layouts read as raw.
+  /** A one-row 0/1 flag table's flag (`table` a full path): 1 → true.
+    * An absent table or column (layouts that predate the flag) reads
+    * false, so old indexes keep their exact behavior.
     */
-  private def readPqMetaNormalize(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    readPqMetaFlag(spark, path, "normalize")
-
-  private def readPqMetaResidual(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    readPqMetaFlag(spark, path, "residual")
-
-  private def readPqMetaFlag(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      name: String): Boolean = {
-    if (graft.sources.ParquetIO.listFiles(s"$path/meta").isEmpty) false
-    else {
-      val df = spark.read.format("kv").option("path", s"$path/meta").load()
+  private def readFlag(spark: org.apache.spark.sql.SparkSession,
+      table: String, name: String): Boolean =
+    graft.sources.ParquetIO.listFiles(table).nonEmpty && {
+      val df = spark.read.format("kv").option("path", table).load()
       df.columns.contains(name) &&
-        df.select(col(name)).collect()
-          .headOption.exists(_.getLong(0) == 1L)
+        df.select(col(name)).collect().headOption.exists(_.getLong(0) == 1L)
     }
+
+  /** Open a persisted IVF-PQ index for search or append: its table
+    * reader, the per-subspace codebooks, and the STORED preprocessing
+    * raw inputs take before they meet the codebooks — unit
+    * normalization (the `meta` flag, or the rotation's), then the stored
+    * rotation. `residual` is the layout the caller codes for; the other
+    * layout refuses, because absolute-coding tables over residual codes
+    * (or the reverse) give silently wrong distances.
+    */
+  private def openPqIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String, residual: Boolean)
+      : (String => DataFrame, Seq[DataFrame], Preprocess) = {
+    def table(sub: String) =
+      spark.read.format("kv").option("path", s"$path/$sub").load()
+    val subCents = Iterator.from(0)
+      .takeWhile(s => graft.sources.ParquetIO.listFiles(s"$path/pq$s").nonEmpty)
+      .map(s => table(s"pq$s")).toSeq
+    require(subCents.nonEmpty, s"no PQ codebooks under $path")
+    require(readFlag(spark, s"$path/meta", "residual") == residual,
+      if (residual) s"$path is not a residual IVF-PQ index (no residual " +
+        "meta marker) — use ivfPqKnnIndexed / ivfPqIndexAppend"
+      else s"$path is a residual IVF-PQ index — use " +
+        "ivfPqResidualKnnIndexed / ivfPqResidualIndexAppend")
+    val stored = StoredRotation.read(spark, path)
+    (table, subCents, Preprocess(
+      readFlag(spark, s"$path/meta", "normalize") || stored.exists(_._2),
+      stored.map(_._1)))
   }
 
   /** Search a persisted IVF-PQ index — must answer IDENTICALLY to the
@@ -1430,21 +1473,8 @@ object SimilaritySearch {
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, vecCol: String, idCol: String,
       k: Int, nProbe: Int = 4): DataFrame = {
-    def table(sub: String) =
-      spark.read.format("kv").option("path", s"$path/$sub").load()
-    val subCents = Iterator.from(0)
-      .takeWhile(s => graft.sources.ParquetIO.listFiles(s"$path/pq$s").nonEmpty)
-      .map(s => table(s"pq$s")).toSeq
-    require(subCents.nonEmpty, s"no PQ codebooks under $path")
-    // the symmetric layout guard: absolute-coding tables over residual
-    // codes would be silently wrong distances
-    require(!readPqMetaResidual(spark, path),
-      s"$path is a residual IVF-PQ index — use ivfPqResidualKnnIndexed")
-    // stored preprocessing (meta.normalize): raw queries take the same
-    // transform the corpus was encoded under
-    val qBase =
-      if (readPqMetaNormalize(spark, path)) unitNormed(queries, vecCol, idCol)
-      else queries
+    val (table, subCents, pre) = openPqIndex(spark, path, residual = false)
+    val qBase = pre(queries, vecCol, idCol)
     val dtabs = pqDistanceTables(qBase, vecCol, idCol, subCents)
     // dedup by (qid, nid): an [[ivfPqIndexAppend]] retried after a crash
     // appends the same codes rows twice; without this, one nid's
@@ -1456,31 +1486,18 @@ object SimilaritySearch {
       nProbe, subCents.length).dropDuplicates("qid", "nid"), k)
   }
 
-  /** Incremental IVF-PQ maintenance: encode NEW vectors against the
-    * persisted codebooks (coarse assignment + per-subspace codes — no
-    * retraining, the codebooks stay stable) and append them to the codes
-    * table. Periodic re-training is [[buildIvfPqIndex]] again.
+  /** Incremental IVF-PQ maintenance: preprocess NEW vectors as the build
+    * did, encode them against the persisted codebooks (coarse
+    * assignment + per-subspace codes — no retraining, the codebooks stay
+    * stable) and append them to the codes table. Periodic re-training is
+    * [[buildIvfPqIndex]] again.
     */
   def ivfPqIndexAppend(
       newVecs: DataFrame, vecCol: String, idCol: String, path: String): Unit = {
-    val spark = newVecs.sparkSession
-    def table(sub: String) =
-      spark.read.format("kv").option("path", s"$path/$sub").load()
-    val subCents = Iterator.from(0)
-      .takeWhile(s => graft.sources.ParquetIO.listFiles(s"$path/pq$s").nonEmpty)
-      .map(s => table(s"pq$s")).toSeq
-    require(subCents.nonEmpty, s"no PQ codebooks under $path")
-    val m = subCents.length
-    val base =
-      if (readPqMetaNormalize(spark, path)) unitNormed(newVecs, vecCol, idCol)
-      else newVecs
-    // ONE row-local encode pass against the persisted model tables
-    val prepped = prep(base, vecCol, idCol)
-      .crossJoin(broadcast(
-        centroidArray(table("coarse")).select(col("cents").as("__cents_coarse"))))
-    encodeCodes(prepped, col("e"), subCents,
-      keep = Seq(col("id").as("nid"),
-        argminCell(col("__cents_coarse"), col("e")).as("ivf_cell")))
+    val (table, subCents, pre) =
+      openPqIndex(newVecs.sparkSession, path, residual = false)
+    encodeAbsolute(pre(newVecs, vecCol, idCol), vecCol, idCol,
+      table("coarse"), subCents)
       .write.format("kv").option("path", s"$path/codes").mode("append").save()
   }
 
@@ -1533,7 +1550,8 @@ object SimilaritySearch {
     * directional neighbors — the metric mismatch `q_ann_cosine_audit`
     * pins for the ADC tiers applies to cell ROUTING here). The flag is
     * recorded in the index's knobs table so search and append apply the
-    * identical preprocessing — the `buildPcaIndex` pca_meta discipline.
+    * identical preprocessing — the [[buildIvfPqIndex]] stored-preprocessing
+    * discipline.
     */
   def buildIvfIndex(
       corpus: DataFrame, vecCol: String, idCol: String, path: String,
@@ -1561,15 +1579,8 @@ object SimilaritySearch {
     * keep their exact behavior.
     */
   private def readNormalizeKnob(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    if (graft.sources.ParquetIO.listFiles(s"$path/knobs").isEmpty) false
-    else {
-      val df = spark.read.format("kv").option("path", s"$path/knobs").load()
-      df.columns.contains("normalize") &&
-        df.select(col("normalize")).collect()
-          .headOption.exists(_.getLong(0) == 1L)
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    readFlag(spark, s"$path/knobs", "normalize")
 
   /** Row-local unit normalization of `vecCol` (id projected through) —
     * the cosine-consistency transform shared by every `normalize` knob.
@@ -2023,6 +2034,191 @@ object SimilaritySearch {
     }.reduce(_.unionAll(_)).orderBy(col("strategy"))
   }
 
+  /** A pre-rotation in front of an unchanged IVF-PQ index — FAISS's
+    * `VectorTransform` stage (the `OPQ…,IVF…,PQ…` index-factory
+    * string): one orthogonal map, fitted once on the (normalized)
+    * corpus and applied row-locally to the corpus, the queries and
+    * appended rows alike. Exact distances are unchanged; only PQ's fixed
+    * subspace split sees a different basis, which is the OPQ objective
+    * (Ge et al., CVPR 2013). The chains ([[ivfPqKnn]],
+    * [[ivfPqResidualKnn]]) and the builds take it as their `rotation`;
+    * the indexed searches and appends apply the stored one themselves.
+    */
+  sealed abstract class Rotation private ()
+
+  object Rotation {
+    /** [[opqRotate]]: the data-free Hadamard·sign map (`dim` a power of
+      * two). No stored form.
+      */
+    final case class Hadamard(dim: Int) extends Rotation
+    /** [[opqRotateFwht]]: the same map as the codegen'd FWHT butterfly —
+      * equal up to final ulps, so its chains get their own oracle. No
+      * stored form.
+      */
+    final case class HadamardFwht(dim: Int) extends Rotation
+    /** [[variancePermutation]]: the learned variance-balancing dimension
+      * permutation over the chain's `m` subspaces. Stored.
+      */
+    final case class VarPerm(dim: Int) extends Rotation
+    /** [[pcaDirectionsK]]: `components` deflated Householder reflections
+      * of `powerIters` power rounds each, pivots placed by
+      * [[balancedPivots]] over the chain's `m` subspaces when
+      * `balancePivots` (else 0..components−1). Stored.
+      */
+    final case class Pca(dim: Int, components: Int = 1, powerIters: Int = 4,
+        balancePivots: Boolean = false) extends Rotation
+  }
+
+  /** A fitted [[Rotation]]: its row map, and for the stored kinds the
+    * values [[StoredRotation]] writes.
+    */
+  private sealed trait Fitted { def apply(vec: Column): Column }
+  private final case class DataFree(f: Column => Column) extends Fitted {
+    def apply(vec: Column): Column = f(vec)
+  }
+  private final case class Permutation(perm: Seq[Int]) extends Fitted {
+    def apply(vec: Column): Column = permuteVec(vec, perm)
+  }
+  /** ONE chained-kernel pass per row, whatever the component count. */
+  private final case class Reflections(us: Seq[Seq[Long]]) extends Fitted {
+    def apply(vec: Column): Column =
+      graft.functions.VectorExpressions.householderChain(
+        vec, us.map(_.map(_.toDouble)))
+  }
+
+  /** The preprocessing every IVF-PQ input takes, as one row-local
+    * select: unit normalization (iff `normalize`; fixed original
+    * coordinate order — the [[unitNorm]] kernel the oracle replays),
+    * then the fitted rotation. Chains, builds, searches and appends all
+    * apply it, so corpus, queries and appended rows are always coded in
+    * one space.
+    */
+  private final case class Preprocess(normalize: Boolean,
+      rotation: Option[Fitted]) {
+    def apply(df: DataFrame, vecCol: String, idCol: String): DataFrame = {
+      val base = if (normalize) unitNormed(df, vecCol, idCol) else df
+      rotation.fold(base)(r => base.select(col(idCol), r(col(vecCol)).as(vecCol)))
+    }
+  }
+
+  /** Fit `rotation` on the (normalized) corpus: the preprocessed corpus,
+    * and the [[Preprocess]] every other input takes. A learned fit
+    * re-reads the corpus (the permutation's proxy pass, the power
+    * chains) and the chain reads it several times more, so that corpus
+    * is cached once — released at the next gate boundary
+    * ([[SessionCaches]]), never by a per-chain finally-unpersist:
+    * CacheManager dedupes plan-equal persists to ONE entry that a
+    * sibling chain under [[inParallel]] may still be reading.
+    */
+  private def fitPreprocess(corpus: DataFrame, vecCol: String, idCol: String,
+      m: Int, normalize: Boolean,
+      rotation: Option[Rotation]): (DataFrame, Preprocess) = {
+    val base = Preprocess(normalize, None)(corpus, vecCol, idCol)
+    def learned(fit: DataFrame => Fitted): (DataFrame, Fitted) = {
+      val cached = SessionCaches.register(base)
+      (cached, fit(cached))
+    }
+    rotation.map {
+      case Rotation.Hadamard(d) => (base, DataFree(opqRotate(_, d)))
+      case Rotation.HadamardFwht(d) => (base, DataFree(opqRotateFwht(_, d)))
+      case Rotation.VarPerm(d) =>
+        learned(b => Permutation(variancePermutation(b, vecCol, d, m)))
+      case Rotation.Pca(d, components, powerIters, balance) =>
+        learned(b => Reflections(pcaDirectionsK(b, vecCol, d, components,
+          powerIters,
+          if (balance) balancedPivots(components, d, m) else Seq.empty)))
+    }.fold((base, Preprocess(normalize, None))) { case (b, f) =>
+      (Preprocess(false, Some(f))(b, vecCol, idCol),
+        Preprocess(normalize, Some(f)))
+    }
+  }
+
+  /** The stored rotations' on-disk form — the ONE definition naming
+    * their tables. A VarPerm index carries `perm` (slot j → source dim
+    * pos), a Pca index `householder` ((comp, slot) → integer u_j, one
+    * reflection per comp in application order); beside each, a one-row
+    * `normalize` table (`perm_meta` / `pca_meta`) records whether inputs
+    * unit-normalize BEFORE the rotation (the index's own `meta.normalize`
+    * then reads 0). Both are bounded driver reads (dim·components rows).
+    */
+  private object StoredRotation {
+    /** (rotation table, its meta table) of each stored kind under `path`. */
+    private def tables(path: String) = Seq(
+      s"$path/perm" -> s"$path/perm_meta",
+      s"$path/householder" -> s"$path/pca_meta")
+
+    /** Write `pre`'s rotation beside the index; an unrotated build clears
+      * stale rotation tables instead. A data-free rotation has no stored
+      * form and refuses before anything is touched.
+      */
+    def write(spark: org.apache.spark.sql.SparkSession, path: String,
+        pre: Preprocess): Unit = {
+      import spark.implicits._
+      val Seq(perm, pca) = tables(path)
+      val stored = pre.rotation.map {
+        case Permutation(p) => perm ->
+          p.zipWithIndex.map { case (pos, j) => (j.toLong, pos.toLong) }
+            .toDF("slot", "pos")
+        case Reflections(us) => pca ->
+          us.zipWithIndex.flatMap { case (u, c) =>
+            u.zipWithIndex.map { case (uj, j) => (c.toLong, j.toLong, uj) }
+          }.toDF("comp", "slot", "u")
+        case _: DataFree => throw new IllegalArgumentException(
+          "a persisted index stores only the learned rotations (VarPerm, Pca)")
+      }
+      tables(path).foreach { case (t, meta) =>
+        graft.sources.ParquetIO.deletePath(t)
+        graft.sources.ParquetIO.deletePath(meta)
+      }
+      stored.foreach { case ((t, meta), rows) =>
+        rows.write.format("kv").option("path", t).mode("overwrite").save()
+        Seq(Tuple1(if (pre.normalize) 1L else 0L)).toDF("normalize")
+          .write.format("kv").option("path", meta).mode("overwrite").save()
+      }
+    }
+
+    /** The stored rotation and its normalize flag; None for an unrotated
+      * index. A meta table whose rotation table is gone refuses (never
+      * search unrotated); a rotation table without its meta (a layout
+      * that predates the knob) reads as raw inputs. Pre-multi-component
+      * `householder` tables (no `comp` column) read as one reflection.
+      */
+    def read(spark: org.apache.spark.sql.SparkSession,
+        path: String): Option[(Fitted, Boolean)] = {
+      def exists(t: String) = graft.sources.ParquetIO.listFiles(t).nonEmpty
+      val Seq(perm, pca) = tables(path)
+      Seq(perm, pca).find { case (t, meta) => exists(t) || exists(meta) }.map {
+        case (t, meta) =>
+          val rows =
+            if (!exists(t)) Array.empty[org.apache.spark.sql.Row]
+            else spark.read.format("kv").option("path", t).load().collect()
+          require(rows.nonEmpty, s"no rotation table $t, but $meta " +
+            "records a rotation — refusing to search unrotated")
+          val fitted =
+            if (t == perm._1) {
+              val p = rows
+                .map(r => r.getAs[Long]("slot").toInt -> r.getAs[Long]("pos").toInt)
+                .sortBy(_._1).map(_._2).toSeq
+              require(p.sorted == (0 until p.length),
+                s"corrupt permutation table $t")
+              Permutation(p)
+            } else {
+              val hasComp = rows.head.schema.fieldNames.contains("comp")
+              val us = rows
+                .map(r => ((if (hasComp) r.getAs[Long]("comp") else 0L),
+                  r.getAs[Long]("slot").toInt, r.getAs[Long]("u")))
+                .groupBy(_._1).toSeq.sortBy(_._1)
+                .map { case (_, rs) => rs.sortBy(_._2).map(_._3).toSeq }
+              require(us.forall(_.map(x => x * x).sum > 0),
+                s"corrupt householder table $t")
+              Reflections(us)
+            }
+          (fitted, readFlag(spark, meta, "normalize"))
+      }
+    }
+  }
+
+
   /** OPQ-style structured rotation — the rotation tier of FAISS's OPQ
     * (Ge et al., CVPR 2013) with the deterministic Hadamard·sign
     * construction in place of the alternating-SVD refinement (an SVD is
@@ -2080,46 +2276,6 @@ object SimilaritySearch {
     graft.functions.VectorExpressions.fwhtRotate(vec, opqSigns(d))
   }
 
-  /** [[ivfPqOpqKnn]] with the rotation executed by the FWHT expression —
-    * same chain, O(d log d) rotation cost, codegen'd end to end.
-    */
-  def ivfPqOpqFwhtKnn(
-      corpus: DataFrame, queries: DataFrame,
-      vecCol: String, idCol: String, dim: Int, k: Int,
-      nCells: Int = 16, nProbe: Int = 4,
-      m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame = {
-    def rot(df: DataFrame): DataFrame =
-      df.select(col(idCol), opqRotateFwht(col(vecCol), dim).as(vecCol))
-    rankAdc(ivfPqAdcScores(rot(corpus), rot(queries), vecCol, idCol,
-      nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)
-  }
-
-  /** IVF-PQ over the OPQ-rotated basis: rotate corpus and queries with
-    * the same orthogonal matrix, then run the standard deterministic
-    * IVF-PQ chain. Coarse cells, codes and ADC all live in the rotated
-    * space; since the rotation preserves distances, results are
-    * directly comparable to [[ivfPqKnn]] at equal probe budget — the
-    * recall delta IS the rotation's value on the corpus at hand.
-    * `normalize=true` unit-normalizes BEFORE rotating (fixed original
-    * coordinate order — the [[unitNorm]] kernel the oracle replays),
-    * making the rotated chain cosine-consistent like every other
-    * normalize knob.
-    */
-  def ivfPqOpqKnn(
-      corpus: DataFrame, queries: DataFrame,
-      vecCol: String, idCol: String, dim: Int, k: Int,
-      nCells: Int = 16, nProbe: Int = 4,
-      m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, normalize: Boolean = false): DataFrame = {
-    val base = if (normalize) unitNormed(corpus, vecCol, idCol) else corpus
-    val qs = if (normalize) unitNormed(queries, vecCol, idCol) else queries
-    def rot(df: DataFrame): DataFrame =
-      df.select(col(idCol), opqRotate(col(vecCol), dim).as(vecCol))
-    rankAdc(ivfPqAdcScores(rot(base), rot(qs), vecCol, idCol,
-      nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)
-  }
-
   /** Data-dependent OPQ rotation, determinized: a variance-balancing
     * dimension PERMUTATION — the eigenvalue-allocation step of OPQ's
     * parametric solution (Ge et al., CVPR 2013 §4.1; FAISS OPQ's
@@ -2174,117 +2330,6 @@ object SimilaritySearch {
   def permuteVec(vec: Column, perm: Seq[Int]): Column =
     array(perm.map(p => element_at(vec, p + 1).cast("double")): _*)
 
-  /** IVF-PQ over the variance-permuted basis ([[variancePermutation]]):
-    * permute corpus and queries with the same data-derived permutation,
-    * then run the standard deterministic chain — [[ivfPqOpqKnn]] with a
-    * LEARNED (data-dependent) orthogonal map in place of the data-free
-    * Hadamard·sign one.
-    */
-  def ivfPqVarPermKnn(
-      corpus: DataFrame, queries: DataFrame,
-      vecCol: String, idCol: String, dim: Int, k: Int,
-      nCells: Int = 16, nProbe: Int = 4,
-      m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, normalize: Boolean = false): DataFrame = {
-    // cosine-consistent variant: unit-normalize FIRST (fixed original
-    // coordinate order), then derive the permutation from the unit
-    // vectors — a permutation computed on raw vectors would balance
-    // magnitude variance cosine ignores
-    val base = if (normalize) unitNormed(corpus, vecCol, idCol) else corpus
-    val qs = if (normalize) unitNormed(queries, vecCol, idCol) else queries
-    val perm = variancePermutation(base, vecCol, dim, m)
-    def rot(df: DataFrame): DataFrame =
-      df.select(col(idCol), permuteVec(col(vecCol), perm).as(vecCol))
-    rankAdc(ivfPqAdcScores(rot(base), rot(qs), vecCol, idCol,
-      nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)
-  }
-
-  /** Persist a variance-permuted IVF-PQ index: derive the permutation
-    * from the corpus, store it as a kv table (`perm`: slot j → source
-    * dim) beside the standard IVF-PQ tables built over the PERMUTED
-    * vectors — train once, search many for the learned tier. Queries
-    * at search time apply the STORED permutation ([[varPermKnnIndexed]]),
-    * so index and query live in the same learned basis even across
-    * sessions; answers are bit-identical to the in-memory
-    * [[ivfPqVarPermKnn]] at the same knobs.
-    */
-  def buildVarPermIndex(
-      corpus: DataFrame, vecCol: String, idCol: String, path: String,
-      dim: Int, nCells: Int = 16, m: Int = 2, pqCells: Int = 16,
-      iterations: Int = 2, maxTrainPerCell: Int = 16384,
-      normalize: Boolean = false): Unit = {
-    val spark = corpus.sparkSession
-    val base = if (normalize) unitNormed(corpus, vecCol, idCol) else corpus
-    val perm = variancePermutation(base, vecCol, dim, m)
-    writeStoredPerm(spark, path, perm, normalize)
-    buildIvfPqIndex(
-      base.select(col(idCol), permuteVec(col(vecCol), perm).as(vecCol)),
-      vecCol, idCol, path, nCells, m, pqCells, iterations, maxTrainPerCell)
-  }
-
-  /** Persist the permuted tiers' shared preprocessing: the `perm`
-    * table (slot j → source dim) plus `perm_meta` recording whether
-    * inputs unit-normalize BEFORE the permutation — the
-    * [[readNormalizeKnob]] discipline for the learned-permutation
-    * family (pre-meta layouts read as raw).
-    */
-  private def writeStoredPerm(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      perm: Seq[Int], normalize: Boolean): Unit = {
-    import spark.implicits._
-    perm.zipWithIndex.map { case (pos, j) => (j.toLong, pos.toLong) }
-      .toDF("slot", "pos")
-      .write.format("kv").option("path", s"$path/perm")
-      .mode("overwrite").save()
-    Seq(Tuple1(if (normalize) 1L else 0L)).toDF("normalize")
-      .write.format("kv").option("path", s"$path/perm_meta")
-      .mode("overwrite").save()
-  }
-
-  /** Read a [[writeStoredPerm]] layout back: (permutation, normalize
-    * flag). Both reads are bounded (`dim` rows / 1 row); a missing
-    * `perm_meta` (pre-knob index) degrades to raw inputs.
-    */
-  private def readStoredPerm(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): (Seq[Int], Boolean) = {
-    val permRows = spark.read.format("kv").option("path", s"$path/perm")
-      .load().collect()
-    require(permRows.nonEmpty, s"no permutation table under $path")
-    val perm = permRows
-      .map(r => r.getAs[Long]("slot").toInt -> r.getAs[Long]("pos").toInt)
-      .sortBy(_._1).map(_._2).toSeq
-    require(perm.sorted == (0 until perm.length),
-      s"corrupt permutation table under $path")
-    val normalize =
-      if (graft.sources.ParquetIO.listFiles(s"$path/perm_meta").isEmpty) false
-      else {
-        val df = spark.read.format("kv")
-          .option("path", s"$path/perm_meta").load()
-        df.columns.contains("normalize") &&
-          df.select(col("normalize")).collect()
-            .headOption.exists(_.getLong(0) == 1L)
-      }
-    (perm, normalize)
-  }
-
-  /** Search a [[buildVarPermIndex]] index: apply the STORED
-    * preprocessing (unit-normalize iff the build recorded it, then the
-    * stored permutation) to raw queries, then the standard indexed ADC
-    * chain. The perm table is `dim` rows — a bounded driver read, like
-    * the centroid tables.
-    */
-  def varPermKnnIndexed(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, vecCol: String, idCol: String,
-      k: Int, nProbe: Int = 4): DataFrame = {
-    val (perm, normalize) = readStoredPerm(spark, path)
-    val qs = if (normalize) unitNormed(queries, vecCol, idCol) else queries
-    ivfPqKnnIndexed(spark, path,
-      qs.select(col(idCol), permuteVec(col(vecCol), perm).as(vecCol)),
-      vecCol, idCol, k, nProbe)
-  }
-
   /** Measured value of the learned permutation: permuted vs plain
     * IVF-PQ recall at EQUAL probe budget, both vs exact brute force —
     * one row ([[opqRecallAudit]] discipline). On an anisotropic corpus
@@ -2297,12 +2342,13 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame =
+      maxTrainPerCell: Int = 16384): DataFrame = {
+    def pq(rotation: Option[Rotation]): () => DataFrame = () =>
+      ivfPqKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe, m,
+        pqCells, iterations, maxTrainPerCell, rotation = rotation)
     recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
-      "plain" -> (() => ivfPqKnn(corpus, queries, vecCol, idCol, k,
-        nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-      "perm" -> (() => ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
-        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)))
+      "plain" -> pq(None), "perm" -> pq(Some(Rotation.VarPerm(dim))))
+  }
 
   /** Measured value of the normalize knob on the LEARNED-permutation
     * chain ([[ivfCosineRecallAudit]]'s discipline on the varperm
@@ -2317,13 +2363,14 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame =
+      maxTrainPerCell: Int = 16384): DataFrame = {
+    def pq(normalize: Boolean): () => DataFrame = () =>
+      ivfPqKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe, m,
+        pqCells, iterations, maxTrainPerCell, normalize,
+        Some(Rotation.VarPerm(dim)))
     recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
-      "raw" -> (() => ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
-        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-      "norm" -> (() => ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
-        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
-        normalize = true)))
+      "raw" -> pq(false), "norm" -> pq(true))
+  }
 
   /** Integer-determinized power iteration: the corpus's dominant
     * principal direction (of the uncentered second-moment matrix), as a
@@ -2437,25 +2484,10 @@ object SimilaritySearch {
     (0 until components).map(c => (c % m) * (dim / m) + c / m)
   }
 
-  /** TWO deflated principal directions as Householder vectors (u₁, u₂):
-    * power-iterate the dominant direction and reflect it onto e₁, then
-    * power-iterate the RESIDUAL — the reflected corpus with dimension 0
-    * masked to exactly 0.0, so the second moment pass cannot see the
-    * isolated first component (and its per-dim sums at position 0 are
-    * exactly zero, giving v₂[0] = 0 — the [[householderUAt]] pivot
-    * contract holds by construction, not by rounding luck) — and
-    * reflect it onto e₂. H₂∘H₁ is a product of exact orthogonals,
-    * hence exactly orthogonal: quantization never distorts distances.
-    */
-  def pcaDirections2(corpus: DataFrame, vecCol: String, dim: Int,
-      powerIters: Int = 4): (Seq[Long], Seq[Long]) = {
-    val us = pcaDirectionsK(corpus, vecCol, dim, 2, powerIters)
-    (us(0), us(1))
-  }
-
   /** `components` deflated principal directions as Householder vectors
-    * u₀..u_{k−1} — [[pcaDirections2]]'s deflation loop generalized:
-    * component i power-iterates the RESIDUAL (the corpus rotated by the
+    * u₀..u_{k−1}: component 0 is [[householderU]] of the corpus's
+    * [[powerDirection]]; component i power-iterates the RESIDUAL (the
+    * corpus rotated by the
     * reflections learned so far, with the already-isolated dimensions
     * 0..i−1 masked to exactly 0.0 — their per-dim moment sums are then
     * exactly zero, so v_i satisfies the [[householderUAt]] pivot
@@ -2497,64 +2529,6 @@ object SimilaritySearch {
     us.toSeq
   }
 
-  /** IVF-PQ over the TWO-component PCA basis: H₂(H₁x) isolates the two
-    * dominant oblique directions into dimensions 0 and 1 — covering
-    * corpora where one reflection leaves the SECOND shared component
-    * smeared across every dimension of both PQ subspaces (measured in
-    * the audit; the single-component chain is blind to it exactly the
-    * way the permutation was blind to the first).
-    */
-  def ivfPqPca2Knn(
-      corpus: DataFrame, queries: DataFrame,
-      vecCol: String, idCol: String, dim: Int, k: Int,
-      nCells: Int = 16, nProbe: Int = 4,
-      m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame =
-    ivfPqPcaKKnn(corpus, queries, vecCol, idCol, dim, k, 2, nCells,
-      nProbe, m, pqCells, iterations, maxTrainPerCell, powerIters)
-
-  /** IVF-PQ over the `components`-reflection PCA basis: the composed
-    * chain isolates the k dominant oblique directions into dimensions
-    * 0..k−1 — each additional component covers a corpus whose NEXT
-    * shared direction the shorter chain leaves smeared across every PQ
-    * subspace (measured rung by rung in [[pca3RecallAudit]]). The
-    * whole rotation is ONE chained-kernel pass per row, so search cost
-    * is independent of k.
-    */
-  def ivfPqPcaKKnn(
-      corpus: DataFrame, queries: DataFrame,
-      vecCol: String, idCol: String, dim: Int, k: Int, components: Int,
-      nCells: Int = 16, nProbe: Int = 4,
-      m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, powerIters: Int = 4,
-      normalize: Boolean = false, balancePivots: Boolean = false): DataFrame = {
-    val pivots =
-      if (balancePivots) balancedPivots(components, dim, m) else Seq.empty[Int]
-    def base(df: DataFrame): DataFrame =
-      if (normalize) df.select(col(idCol), unitNorm(col(vecCol)).as(vecCol))
-      else df
-    // the derivation re-reads the corpus 4·k times (power chains) and
-    // the ADC chain several more — cache the (normalized) base once.
-    // No per-chain finally-unpersist (CacheManager dedupes plan-equal
-    // persists to ONE entry; a sibling chain under inParallel may still
-    // be reading it) — released at the next gate boundary instead
-    // (SessionCaches), so the corpus-sized entry no longer outlives the
-    // gate (r14 verdict #1).
-    val bCorpus = SessionCaches.register(base(corpus))
-    val us = pcaDirectionsK(bCorpus, vecCol, dim, components, powerIters,
-      pivots)
-    // ONE chained-kernel pass per row — nesting householderReflect here
-    // re-evaluated the inner reflection per outer HOF reference
-    def rot(df: DataFrame): DataFrame =
-      df.select(col(idCol),
-        graft.functions.VectorExpressions.householderChain(
-          col(vecCol), us.map(_.map(_.toDouble)))
-          .as(vecCol))
-    rankAdc(ivfPqAdcScores(rot(bCorpus), rot(base(queries)), vecCol, idCol,
-      nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)
-      .localCheckpoint()
-  }
-
   /** Row-local unit normalization — the cosine-consistency fix for the
     * L2 ADC chain: on unit vectors ‖x−y‖² = 2−2·cos(x,y), so L2
     * nearest neighbors ARE cosine nearest neighbors and the quantizer's
@@ -2577,14 +2551,14 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame =
+      maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame = {
+    def pcaK(components: Int): () => DataFrame = () =>
+      ivfPqKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe, m,
+        pqCells, iterations, maxTrainPerCell,
+        rotation = Some(Rotation.Pca(dim, components, powerIters)))
     recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
-      "pca1" -> (() => ivfPqPcaKnn(corpus, queries, vecCol, idCol,
-        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
-        powerIters)),
-      "pca2" -> (() => ivfPqPca2Knn(corpus, queries, vecCol, idCol,
-        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
-        powerIters)))
+      "pca1" -> pcaK(1), "pca2" -> pcaK(2))
+  }
 
   /** The THIRD deflated component's measured value: two- vs three-
     * reflection chains at equal budget on the same corpus, both vs
@@ -2601,9 +2575,9 @@ object SimilaritySearch {
       maxTrainPerCell: Int = 16384, powerIters: Int = 4,
       normalize: Boolean = false, balancePivots: Boolean = false): DataFrame = {
     def pcaK(components: Int): () => DataFrame = () =>
-      ivfPqPcaKKnn(corpus, queries, vecCol, idCol, dim, k, components,
-        nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
-        powerIters, normalize, balancePivots)
+      ivfPqKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe, m,
+        pqCells, iterations, maxTrainPerCell, normalize,
+        Some(Rotation.Pca(dim, components, powerIters, balancePivots)))
     recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
       "pca2" -> pcaK(2), "pca3" -> pcaK(3))
   }
@@ -2623,16 +2597,13 @@ object SimilaritySearch {
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
       maxTrainPerCell: Int = 16384): DataFrame = {
-    def norm(df: DataFrame): DataFrame =
-      df.select(col(idCol), unitNorm(col(vecCol)).as(vecCol))
+    def pq(normalize: Boolean): () => DataFrame = () =>
+      ivfPqKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe, m,
+        pqCells, iterations, maxTrainPerCell, normalize)
     recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
       // the mismatch ceiling itself: EXACT L2 top-k vs cosine top-k
       "exact_l2" -> (() => exactL2Knn(corpus, queries, vecCol, idCol, k)),
-      "raw" -> (() => rankAdc(ivfPqAdcScores(corpus, queries, vecCol,
-        idCol, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)),
-      "norm" -> (() => rankAdc(ivfPqAdcScores(norm(corpus), norm(queries),
-        vecCol, idCol, nCells, nProbe, m, pqCells, iterations,
-        maxTrainPerCell), k)))
+      "raw" -> pq(false), "norm" -> pq(true))
   }
 
   /** The SATURATION audit for the deflation loop: recall at components
@@ -2656,9 +2627,9 @@ object SimilaritySearch {
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
       maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame = {
     def pcaK(components: Int): () => DataFrame = () =>
-      ivfPqPcaKKnn(corpus, queries, vecCol, idCol, dim, k, components,
-        nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
-        powerIters, normalize = true, balancePivots = true)
+      ivfPqKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe, m,
+        pqCells, iterations, maxTrainPerCell, normalize = true,
+        Some(Rotation.Pca(dim, components, powerIters, balancePivots = true)))
     recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k,
       lit(m).as("m"))(
       "under" -> pcaK(m - 1), "full" -> pcaK(m), "over" -> pcaK(m + 1))
@@ -2676,113 +2647,6 @@ object SimilaritySearch {
     graft.functions.VectorExpressions.householderChain(
       vec, Seq(u.map(_.toDouble)))
 
-  /** IVF-PQ over the PCA-rotated basis: power-iterate the dominant
-    * principal direction, reflect it onto e₁ (Householder), run the
-    * standard chain. A permutation can only reallocate AXIS variances;
-    * when the dominant variance direction is oblique (correlated dims —
-    * every axis variance equal) it is blind, and only a genuine
-    * rotation concentrates the shared component into ONE dimension
-    * that a single product quantizer then codes with its whole
-    * codebook. (Measured: re-permuting AFTER the reflection re-mixes
-    * that isolated dimension back across both subspaces and recall
-    * falls — 50 → 16‰ on the sheared fixture — so the rotation is
-    * deliberately NOT composed with the allocation step here.)
-    */
-  def ivfPqPcaKnn(
-      corpus: DataFrame, queries: DataFrame,
-      vecCol: String, idCol: String, dim: Int, k: Int,
-      nCells: Int = 16, nProbe: Int = 4,
-      m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame = {
-    val u = householderU(powerDirection(corpus, vecCol, dim, powerIters))
-    def rot(df: DataFrame): DataFrame =
-      df.select(col(idCol), householderReflect(col(vecCol), u).as(vecCol))
-    rankAdc(ivfPqAdcScores(rot(corpus), rot(queries), vecCol, idCol,
-      nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)
-  }
-
-  /** Persist a PCA-rotated IVF-PQ index: derive the power direction and
-    * Householder u from the corpus, store u as a kv table
-    * (`householder`: slot j → integer u_j) beside the standard IVF-PQ
-    * tables built over the REFLECTED vectors — train once, search many
-    * for the learned-rotation tier ([[buildVarPermIndex]] discipline).
-    * Queries at search time apply the STORED u, so index and query live
-    * in the same learned basis across sessions; answers are
-    * bit-identical to the in-memory [[ivfPqPcaKnn]] at the same knobs.
-    */
-  def buildPcaIndex(
-      corpus: DataFrame, vecCol: String, idCol: String, path: String,
-      dim: Int, nCells: Int = 16, m: Int = 2, pqCells: Int = 16,
-      iterations: Int = 2, maxTrainPerCell: Int = 16384,
-      powerIters: Int = 4, components: Int = 1,
-      normalize: Boolean = false, balancePivots: Boolean = false): Unit = {
-    val spark = corpus.sparkSession
-    val pivots =
-      if (balancePivots) balancedPivots(components, dim, m) else Seq.empty[Int]
-    // derivation + index build re-read the (normalized) base many times
-    val bCorpus =
-      (if (normalize) corpus.select(col(idCol), unitNorm(col(vecCol)).as(vecCol))
-       else corpus)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val us = pcaDirectionsK(bCorpus, vecCol, dim, components, powerIters,
-        pivots)
-      import spark.implicits._
-      // (comp, slot) → u_j: one reflection per component, in application
-      // order — dim·components rows, still a bounded driver read
-      us.zipWithIndex.flatMap { case (u, c) =>
-        u.zipWithIndex.map { case (uj, j) => (c.toLong, j.toLong, uj) }
-      }.toDF("comp", "slot", "u")
-        .write.format("kv").option("path", s"$path/householder")
-        .mode("overwrite").save()
-      // search-time preprocessing knobs (pivots are build-time-only: the
-      // stored u vectors already encode the placement)
-      Seq(Tuple1(if (normalize) 1L else 0L)).toDF("normalize")
-        .write.format("kv").option("path", s"$path/pca_meta")
-        .mode("overwrite").save()
-      val rot = graft.functions.VectorExpressions.householderChain(
-        col(vecCol), us.map(_.map(_.toDouble)))
-      buildIvfPqIndex(
-        bCorpus.select(col(idCol), rot.as(vecCol)),
-        vecCol, idCol, path, nCells, m, pqCells, iterations, maxTrainPerCell)
-    } finally { bCorpus.unpersist(); () }
-  }
-
-  /** Search a [[buildPcaIndex]] index: apply the STORED Householder
-    * chain to the queries, then the standard indexed ADC chain. The u
-    * table is `dim·components` rows — a bounded driver read, like the
-    * perm table. Pre-multi-component tables (no `comp` column) read as
-    * one reflection.
-    */
-  def pcaKnnIndexed(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, vecCol: String, idCol: String,
-      k: Int, nProbe: Int = 4): DataFrame = {
-    val uRows = spark.read.format("kv").option("path", s"$path/householder")
-      .load().collect()
-    require(uRows.nonEmpty, s"no householder table under $path")
-    val hasComp = uRows.head.schema.fieldNames.contains("comp")
-    val us = uRows
-      .map(r => ((if (hasComp) r.getAs[Long]("comp") else 0L),
-        r.getAs[Long]("slot").toInt, r.getAs[Long]("u")))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toSeq }
-    require(us.forall(_.map(x => x * x).sum > 0),
-      s"corrupt householder table under $path")
-    // normalize flag from pca_meta (pre-meta indexes: raw vectors)
-    val normalize =
-      graft.sources.ParquetIO.listFiles(s"$path/pca_meta").nonEmpty &&
-        spark.read.format("kv").option("path", s"$path/pca_meta").load()
-          .collect().headOption.exists(_.getAs[Long]("normalize") == 1L)
-    val qVec =
-      if (normalize) unitNorm(col(vecCol)) else col(vecCol)
-    val rot = graft.functions.VectorExpressions.householderChain(
-      qVec, us.map(_.map(_.toDouble)))
-    ivfPqKnnIndexed(spark, path,
-      queries.select(col(idCol), rot.as(vecCol)),
-      vecCol, idCol, k, nProbe)
-  }
-
   /** Measured value of the PCA rotation vs the variance permutation at
     * EQUAL probe budget, both vs exact brute force — one row. On an
     * oblique-anisotropy corpus (a dominant direction shared across
@@ -2795,13 +2659,14 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame =
+      maxTrainPerCell: Int = 16384, powerIters: Int = 4): DataFrame = {
+    def pq(rotation: Rotation): () => DataFrame = () =>
+      ivfPqKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe, m,
+        pqCells, iterations, maxTrainPerCell, rotation = Some(rotation))
     recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
-      "perm" -> (() => ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
-        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-      "pca" -> (() => ivfPqPcaKnn(corpus, queries, vecCol, idCol,
-        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell,
-        powerIters)))
+      "perm" -> pq(Rotation.VarPerm(dim)),
+      "pca" -> pq(Rotation.Pca(dim, powerIters = powerIters)))
+  }
 
   /** Measured-recall comparison of the OPQ-rotated IVF-PQ tier against
     * the plain one at EQUAL probe budget, both vs exact brute force —
@@ -2815,12 +2680,13 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame =
+      maxTrainPerCell: Int = 16384): DataFrame = {
+    def pq(rotation: Option[Rotation]): () => DataFrame = () =>
+      ivfPqKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe, m,
+        pqCells, iterations, maxTrainPerCell, rotation = rotation)
     recallAudit(bruteForceKnn(corpus, queries, vecCol, idCol, k), k)(
-      "plain" -> (() => ivfPqKnn(corpus, queries, vecCol, idCol, k,
-        nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-      "opq" -> (() => ivfPqOpqKnn(corpus, queries, vecCol, idCol, dim, k,
-        nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)))
+      "plain" -> pq(None), "opq" -> pq(Some(Rotation.Hadamard(dim))))
+  }
 
   /** Measured recall audit of the IVF tier vs exact brute force — the
     * `q_dedup_lsh_audit` discipline applied to ANN: run BOTH detectors
@@ -3915,11 +3781,13 @@ object SimilaritySearch {
       vecCol: String, idCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame = {
-    val (coarse, subCents, codes) = residualModel(corpus, vecCol, idCol,
+      maxTrainPerCell: Int = 16384, normalize: Boolean = false,
+      rotation: Option[Rotation] = None): DataFrame = {
+    val (base, pre) = fitPreprocess(corpus, vecCol, idCol, m, normalize, rotation)
+    val (coarse, subCents, codes) = residualModel(base, vecCol, idCol,
       nCells, m, pqCells, iterations, maxTrainPerCell)
-    rankAdc(residualAdcScores(queries, vecCol, idCol, coarse, subCents,
-      codes, nProbe, m), k)
+    rankAdc(residualAdcScores(pre(queries, vecCol, idCol), vecCol, idCol,
+      coarse, subCents, codes, nProbe, m), k)
   }
 
   /** The residual tier's three model pieces — coarse centroids (cell,
@@ -4015,13 +3883,17 @@ object SimilaritySearch {
     * (nid, ivf_cell, codes) at `<path>/codes`, plus a one-row `meta`
     * marker (`residual=1`) so a reader can tell the layouts apart —
     * searching residual codes with absolute-coding tables would return
-    * silently wrong distances.
+    * silently wrong distances. `normalize` and a stored `rotation`
+    * persist as in [[buildIvfPqIndex]] (FAISS's `OPQ,IVF,PQ` factory
+    * composition with a VarPerm rotation).
     */
   def buildIvfPqResidualIndex(
       corpus: DataFrame, vecCol: String, idCol: String, path: String,
       nCells: Int = 16, m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, normalize: Boolean = false): Unit = {
-    val base = if (normalize) unitNormed(corpus, vecCol, idCol) else corpus
+      maxTrainPerCell: Int = 16384, normalize: Boolean = false,
+      rotation: Option[Rotation] = None): Unit = {
+    val (base, pre) = fitPreprocess(corpus, vecCol, idCol, m, normalize, rotation)
+    StoredRotation.write(corpus.sparkSession, path, pre)
     val (coarse, subCents, codes) = residualModel(base, vecCol, idCol,
       nCells, m, pqCells, iterations, maxTrainPerCell)
     coarse.write.format("kv").option("path", s"$path/coarse")
@@ -4032,11 +3904,7 @@ object SimilaritySearch {
     }
     codes.write.format("kv").option("path", s"$path/codes")
       .mode("overwrite").save()
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    Seq((1L, if (normalize) 1L else 0L)).toDF("residual", "normalize")
-      .write.format("kv").option("path", s"$path/meta")
-      .mode("overwrite").save()
+    writePqMeta(corpus.sparkSession, path, residual = true, pre)
   }
 
   /** Search a persisted residual index — answers IDENTICALLY to the
@@ -4048,116 +3916,33 @@ object SimilaritySearch {
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, vecCol: String, idCol: String,
       k: Int, nProbe: Int = 4): DataFrame = {
-    def table(sub: String) =
-      spark.read.format("kv").option("path", s"$path/$sub").load()
-    require(graft.sources.ParquetIO.listFiles(s"$path/meta").nonEmpty &&
-      table("meta").collect().headOption
-        .exists(_.getAs[Long]("residual") == 1L),
-      s"$path is not a residual IVF-PQ index (no residual meta marker) — " +
-        "use ivfPqKnnIndexed for absolute-coding layouts")
-    val subCents = Iterator.from(0)
-      .takeWhile(s => graft.sources.ParquetIO.listFiles(s"$path/pq$s").nonEmpty)
-      .map(s => table(s"pq$s")).toSeq
-    require(subCents.nonEmpty, s"no PQ codebooks under $path")
-    val qBase =
-      if (readPqMetaNormalize(spark, path)) unitNormed(queries, vecCol, idCol)
-      else queries
+    val (table, subCents, pre) = openPqIndex(spark, path, residual = true)
     // per-(qid, nid) dedup: a crash-retried append leaves duplicate
     // codes rows (the ivfPqKnnIndexed discipline)
-    rankAdc(residualAdcScores(qBase, vecCol, idCol, table("coarse"),
-      subCents, table("codes").select(col("nid"), col("ivf_cell"), col("codes")),
+    rankAdc(residualAdcScores(pre(queries, vecCol, idCol), vecCol, idCol,
+      table("coarse"), subCents,
+      table("codes").select(col("nid"), col("ivf_cell"), col("codes")),
       nProbe, subCents.length).dropDuplicates("qid", "nid"), k)
   }
 
-  /** Incremental residual-index maintenance: encode NEW vectors against
-    * the PERSISTED coarse centroids and residual codebooks (assign →
-    * subtract centroid → per-subspace code — no retraining) and append
-    * their code rows. Centroids and codebooks stay fixed, which is what
-    * keeps incremental encoding cheap; re-clustering is a rebuild.
+  /** Incremental residual-index maintenance: preprocess NEW vectors as
+    * the build did, encode them against the PERSISTED coarse centroids
+    * and residual codebooks (assign → subtract centroid → per-subspace
+    * code — no retraining) and append their code rows. Centroids and
+    * codebooks stay fixed, which is what keeps incremental encoding
+    * cheap; re-clustering is a rebuild.
     */
   def ivfPqResidualIndexAppend(
       newVecs: DataFrame, vecCol: String, idCol: String, path: String): Unit = {
-    val spark = newVecs.sparkSession
-    def table(sub: String) =
-      spark.read.format("kv").option("path", s"$path/$sub").load()
-    val subCents = Iterator.from(0)
-      .takeWhile(s => graft.sources.ParquetIO.listFiles(s"$path/pq$s").nonEmpty)
-      .map(s => table(s"pq$s")).toSeq
-    require(subCents.nonEmpty, s"no PQ codebooks under $path")
-    val m = subCents.length
-    val base =
-      if (readPqMetaNormalize(spark, path)) unitNormed(newVecs, vecCol, idCol)
-      else newVecs
-    val resid = residualRows(prep(base, vecCol, idCol), table("coarse"))
+    val (table, subCents, pre) =
+      openPqIndex(newVecs.sparkSession, path, residual = true)
+    val resid = residualRows(prep(pre(newVecs, vecCol, idCol), vecCol, idCol),
+      table("coarse"))
     // ONE row-local encode pass against the persisted codebooks
     encodeCodes(resid, col("rvec"), subCents,
       keep = Seq(col("id").as("nid"), col("ivf_cell")))
       .write.format("kv").option("path", s"$path/codes")
       .mode("append").save()
-  }
-
-  /** OPQ × IVFADC — FAISS's `OPQ,IVF,PQ` factory composition: the
-    * learned variance-balancing permutation ([[variancePermutation]])
-    * first, residual coding ([[ivfPqResidualKnn]]) after. The two
-    * fixes are INDEPENDENT: the permutation balances per-SUBSPACE
-    * variance (which axes share a codebook), residual coding removes
-    * per-CELL means (what each codebook must span) — on a corpus with
-    * both pathologies either alone is capped and the composition
-    * clears both ([[opqResidualRecallAudit]] measures all four
-    * quadrants). A permutation is orthogonal, so exact distances are
-    * unchanged and the whole derivation stays oracle-replayable.
-    */
-  def ivfPqOpqResidualKnn(
-      corpus: DataFrame, queries: DataFrame,
-      vecCol: String, idCol: String, dim: Int, k: Int,
-      nCells: Int = 16, nProbe: Int = 4,
-      m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384, normalize: Boolean = false): DataFrame = {
-    val base = if (normalize) unitNormed(corpus, vecCol, idCol) else corpus
-    val qs = if (normalize) unitNormed(queries, vecCol, idCol) else queries
-    val perm = variancePermutation(base, vecCol, dim, m)
-    def rot(df: DataFrame): DataFrame =
-      df.select(col(idCol), permuteVec(col(vecCol), perm).as(vecCol))
-    ivfPqResidualKnn(rot(base), rot(qs), vecCol, idCol, k,
-      nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)
-  }
-
-  /** Persist an OPQ×IVFADC index ([[buildVarPermIndex]]'s stance for
-    * the composed tier): the learned permutation lands as the `perm`
-    * table and the residual layout (coarse + residual codebooks +
-    * codes + residual meta marker) builds over the PERMUTED corpus —
-    * train once, search many for the full FAISS factory composition.
-    */
-  def buildOpqResidualIndex(
-      corpus: DataFrame, vecCol: String, idCol: String, path: String,
-      dim: Int, nCells: Int = 16, m: Int = 2, pqCells: Int = 16,
-      iterations: Int = 2, maxTrainPerCell: Int = 16384,
-      normalize: Boolean = false): Unit = {
-    val spark = corpus.sparkSession
-    val base = if (normalize) unitNormed(corpus, vecCol, idCol) else corpus
-    val perm = variancePermutation(base, vecCol, dim, m)
-    writeStoredPerm(spark, path, perm, normalize)
-    buildIvfPqResidualIndex(
-      base.select(col(idCol), permuteVec(col(vecCol), perm).as(vecCol)),
-      vecCol, idCol, path, nCells, m, pqCells, iterations, maxTrainPerCell)
-  }
-
-  /** Search a [[buildOpqResidualIndex]] index: apply the STORED
-    * preprocessing (unit-normalize iff recorded, then the stored
-    * permutation) to raw queries, then the residual indexed chain —
-    * answers bit-identically to the in-memory [[ivfPqOpqResidualKnn]]
-    * at the same knobs (the [[varPermKnnIndexed]] discipline on the
-    * residual layout).
-    */
-  def opqResidualKnnIndexed(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, vecCol: String, idCol: String,
-      k: Int, nProbe: Int = 4): DataFrame = {
-    val (perm, normalize) = readStoredPerm(spark, path)
-    val qs = if (normalize) unitNormed(queries, vecCol, idCol) else queries
-    ivfPqResidualKnnIndexed(spark, path,
-      qs.select(col(idCol), permuteVec(col(vecCol), perm).as(vecCol)),
-      vecCol, idCol, k, nProbe)
   }
 
   /** The composition's four quadrants at one budget, all vs exact L2
@@ -4171,17 +3956,18 @@ object SimilaritySearch {
       vecCol: String, idCol: String, dim: Int, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
-      maxTrainPerCell: Int = 16384): DataFrame =
+      maxTrainPerCell: Int = 16384): DataFrame = {
+    val perm = Some(Rotation.VarPerm(dim))
+    def pq(rotation: Option[Rotation]): () => DataFrame = () =>
+      ivfPqKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe, m,
+        pqCells, iterations, maxTrainPerCell, rotation = rotation)
+    def residual(rotation: Option[Rotation]): () => DataFrame = () =>
+      ivfPqResidualKnn(corpus, queries, vecCol, idCol, k, nCells, nProbe,
+        m, pqCells, iterations, maxTrainPerCell, rotation = rotation)
     recallAudit(exactL2Knn(corpus, queries, vecCol, idCol, k), k)(
-      "plain" -> (() => rankAdc(ivfPqAdcScores(corpus, queries, vecCol,
-        idCol, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)),
-      "perm" -> (() => ivfPqVarPermKnn(corpus, queries, vecCol, idCol,
-        dim, k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-      "residual" -> (() => ivfPqResidualKnn(corpus, queries, vecCol, idCol,
-        k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
-      "both" -> (() => ivfPqOpqResidualKnn(corpus, queries, vecCol,
-        idCol, dim, k, nCells, nProbe, m, pqCells, iterations,
-        maxTrainPerCell)))
+      "plain" -> pq(None), "perm" -> pq(perm),
+      "residual" -> residual(None), "both" -> residual(perm))
+  }
 
   /** Residual ADC with an exact re-ranking tail — [[ivfPqRefineKnn]]'s
     * FAISS `IndexRefineFlat` pattern on the residual chain (IVFADC +
@@ -4283,8 +4069,8 @@ object SimilaritySearch {
       m: Int = 2, pqCells: Int = 16, iterations: Int = 2,
       maxTrainPerCell: Int = 16384): DataFrame =
     recallAudit(exactL2Knn(corpus, queries, vecCol, idCol, k), k)(
-      "plain" -> (() => rankAdc(ivfPqAdcScores(corpus, queries, vecCol,
-        idCol, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell), k)),
+      "plain" -> (() => ivfPqKnn(corpus, queries, vecCol, idCol, k,
+        nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)),
       "residual" -> (() => ivfPqResidualKnn(corpus, queries, vecCol, idCol,
         k, nCells, nProbe, m, pqCells, iterations, maxTrainPerCell)))
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{LangId, Sketches, TextFunctions}
 import graft.operators.{Curation, Dedup, Multimodal, SimilaritySearch}
+import graft.operators.SimilaritySearch.Rotation
 
 /** Gate entries for the training-data-pipeline operators (dedup,
   * similarity search, multimodal, text analysis). Entries whose math is
@@ -526,9 +527,10 @@ object PipelineQueries {
     // — replays exactly in the oracle). Same budget as q_ann_ivfpq.
     "q_ann_opq" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
-      SimilaritySearch.ivfPqOpqKnn(emb, emb.filter(col("vec_id") < 5),
-        "embedding", "vec_id", dim = 64, k = 3, nCells = 4, nProbe = 2,
-        m = 2, pqCells = 4, maxTrainPerCell = 32)
+      SimilaritySearch.ivfPqKnn(emb, emb.filter(col("vec_id") < 5),
+        "embedding", "vec_id", k = 3, nCells = 4, nProbe = 2,
+        m = 2, pqCells = 4, maxTrainPerCell = 32,
+        rotation = Some(Rotation.Hadamard(64)))
         .orderBy(col("qid"), col("rnk"))
     }),
 
@@ -865,9 +867,10 @@ object PipelineQueries {
     // reusing q_ann_opq's naive-fold replay.
     "q_ann_opq_fwht" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
-      SimilaritySearch.ivfPqOpqFwhtKnn(emb, emb.filter(col("vec_id") < 5),
-        "embedding", "vec_id", dim = 64, k = 3, nCells = 4, nProbe = 2,
-        m = 2, pqCells = 4, maxTrainPerCell = 32)
+      SimilaritySearch.ivfPqKnn(emb, emb.filter(col("vec_id") < 5),
+        "embedding", "vec_id", k = 3, nCells = 4, nProbe = 2,
+        m = 2, pqCells = 4, maxTrainPerCell = 32,
+        rotation = Some(Rotation.HadamardFwht(64)))
         .orderBy(col("qid"), col("rnk"))
     }),
 
@@ -1081,10 +1084,10 @@ object PipelineQueries {
         transform(col("embedding"), (x, i) =>
           x.cast("double") * when(i < 32, lit(4.0)).otherwise(lit(0.25)))
           .as("embedding"))
-      SimilaritySearch.ivfPqVarPermKnn(aniso,
+      SimilaritySearch.ivfPqKnn(aniso,
         aniso.filter(col("vec_id") < 20), "embedding", "vec_id",
-        dim = 64, k = 3, nCells = 4, nProbe = 4, m = 2, pqCells = 16,
-        maxTrainPerCell = 64)
+        k = 3, nCells = 4, nProbe = 4, m = 2, pqCells = 16,
+        maxTrainPerCell = 64, rotation = Some(Rotation.VarPerm(64)))
         .orderBy(col("qid"), col("rnk"))
     }),
 
@@ -1100,9 +1103,10 @@ object PipelineQueries {
         transform(col("embedding"), (x, i) =>
           x.cast("double") * when(i < 32, lit(4.0)).otherwise(lit(0.25)))
           .as("embedding"))
-      SimilaritySearch.buildVarPermIndex(aniso, "embedding", "vec_id", idx,
-        dim = 64, nCells = 4, m = 2, pqCells = 16, maxTrainPerCell = 64)
-      SimilaritySearch.varPermKnnIndexed(s, idx,
+      SimilaritySearch.buildIvfPqIndex(aniso, "embedding", "vec_id", idx,
+        nCells = 4, m = 2, pqCells = 16, maxTrainPerCell = 64,
+        rotation = Some(Rotation.VarPerm(64)))
+      SimilaritySearch.ivfPqKnnIndexed(s, idx,
         aniso.filter(col("vec_id") < 20), "embedding", "vec_id",
         k = 3, nProbe = 4)
         .orderBy(col("qid"), col("rnk"))
@@ -1126,21 +1130,21 @@ object PipelineQueries {
     }),
 
     // The learned-permutation tier under the stored cosine knob:
-    // buildVarPermIndex(normalize=true) unit-normalizes FIRST, derives
-    // the permutation from the UNIT vectors (a raw-variance proxy is
-    // dominated by vector length, which cosine ignores) and records
-    // the flag in perm_meta — raw queries enter and varPermKnnIndexed
-    // applies the identical transform. Unit chain, proxy sums,
+    // buildIvfPqIndex(normalize = true, rotation = VarPerm) unit-
+    // normalizes FIRST, derives the permutation from the UNIT vectors (a
+    // raw-variance proxy is dominated by vector length, which cosine
+    // ignores) and records the flag in perm_meta — raw queries enter and
+    // ivfPqKnnIndexed applies the identical transform. Unit chain, proxy sums,
     // permutation and the full IVF-PQ chain replay in the oracle.
     "q_ann_varperm_cosine" -> ((s, dir) => {
       val idx = s"/tmp/graft_vpcos${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
       graft.sources.ParquetIO.deletePath(idx)
       val emb = Tables.load(s, dir, "embeddings")
       val mixed = MrlFixture(Pca3Fixture(emb))
-      SimilaritySearch.buildVarPermIndex(mixed, "embedding", "vec_id", idx,
-        dim = 64, nCells = 8, m = 4, pqCells = 16, maxTrainPerCell = 64,
-        normalize = true)
-      SimilaritySearch.varPermKnnIndexed(s, idx,
+      SimilaritySearch.buildIvfPqIndex(mixed, "embedding", "vec_id", idx,
+        nCells = 8, m = 4, pqCells = 16, maxTrainPerCell = 64,
+        normalize = true, rotation = Some(Rotation.VarPerm(64)))
+      SimilaritySearch.ivfPqKnnIndexed(s, idx,
         mixed.filter(col("vec_id") < 5), "embedding", "vec_id",
         k = 3, nProbe = 4)
         .orderBy(col("qid"), col("rnk"))
@@ -1176,10 +1180,10 @@ object PipelineQueries {
           x.cast("double") +
             lit(4.0) * element_at(col("embedding"), 1).cast("double"))
           .as("embedding"))
-      SimilaritySearch.ivfPqPcaKnn(sheared,
+      SimilaritySearch.ivfPqKnn(sheared,
         sheared.filter(col("vec_id") < 20), "embedding", "vec_id",
-        dim = 64, k = 3, nCells = 4, nProbe = 4, m = 2, pqCells = 16,
-        maxTrainPerCell = 64)
+        k = 3, nCells = 4, nProbe = 4, m = 2, pqCells = 16,
+        maxTrainPerCell = 64, rotation = Some(Rotation.Pca(64)))
         .orderBy(col("qid"), col("rnk"))
     }),
 
@@ -1196,9 +1200,10 @@ object PipelineQueries {
           x.cast("double") +
             lit(4.0) * element_at(col("embedding"), 1).cast("double"))
           .as("embedding"))
-      SimilaritySearch.buildPcaIndex(sheared, "embedding", "vec_id", idx,
-        dim = 64, nCells = 4, m = 2, pqCells = 16, maxTrainPerCell = 64)
-      SimilaritySearch.pcaKnnIndexed(s, idx,
+      SimilaritySearch.buildIvfPqIndex(sheared, "embedding", "vec_id", idx,
+        nCells = 4, m = 2, pqCells = 16, maxTrainPerCell = 64,
+        rotation = Some(Rotation.Pca(64)))
+      SimilaritySearch.ivfPqKnnIndexed(s, idx,
         sheared.filter(col("vec_id") < 20), "embedding", "vec_id",
         k = 3, nProbe = 4)
         .orderBy(col("qid"), col("rnk"))
@@ -1237,10 +1242,10 @@ object PipelineQueries {
             when(pmod(i, lit(2)) === 0, lit(2.0)).otherwise(lit(-2.0)) *
               element_at(col("embedding"), 2).cast("double"))
           .as("embedding"))
-      SimilaritySearch.ivfPqPca2Knn(two,
+      SimilaritySearch.ivfPqKnn(two,
         two.filter(col("vec_id") < 20), "embedding", "vec_id",
-        dim = 64, k = 3, nCells = 4, nProbe = 4, m = 2, pqCells = 16,
-        maxTrainPerCell = 64)
+        k = 3, nCells = 4, nProbe = 4, m = 2, pqCells = 16,
+        maxTrainPerCell = 64, rotation = Some(Rotation.Pca(64, components = 2)))
         .orderBy(col("qid"), col("rnk"))
     }),
 
@@ -1277,11 +1282,11 @@ object PipelineQueries {
     "q_ann_pca3" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val three = Pca3Fixture(emb)
-      SimilaritySearch.ivfPqPcaKKnn(three,
+      SimilaritySearch.ivfPqKnn(three,
         three.filter(col("vec_id") < 20), "embedding", "vec_id",
-        dim = 64, k = 3, components = 3, nCells = 4, nProbe = 4, m = 4,
-        pqCells = 16, maxTrainPerCell = 64,
-        normalize = true, balancePivots = true)
+        k = 3, nCells = 4, nProbe = 4, m = 4, pqCells = 16,
+        maxTrainPerCell = 64, normalize = true, rotation = Some(
+          Rotation.Pca(64, components = 3, balancePivots = true)))
         .orderBy(col("qid"), col("rnk"))
     }),
 
@@ -1296,10 +1301,11 @@ object PipelineQueries {
       graft.sources.ParquetIO.deletePath(idx)
       val emb = Tables.load(s, dir, "embeddings")
       val three = Pca3Fixture(emb)
-      SimilaritySearch.buildPcaIndex(three, "embedding", "vec_id", idx,
-        dim = 64, nCells = 4, m = 4, pqCells = 16, maxTrainPerCell = 64,
-        components = 3, normalize = true, balancePivots = true)
-      SimilaritySearch.pcaKnnIndexed(s, idx,
+      SimilaritySearch.buildIvfPqIndex(three, "embedding", "vec_id", idx,
+        nCells = 4, m = 4, pqCells = 16, maxTrainPerCell = 64,
+        normalize = true, rotation = Some(
+          Rotation.Pca(64, components = 3, balancePivots = true)))
+      SimilaritySearch.ivfPqKnnIndexed(s, idx,
         three.filter(col("vec_id") < 20), "embedding", "vec_id",
         k = 3, nProbe = 4)
         .orderBy(col("qid"), col("rnk"))
@@ -1857,10 +1863,10 @@ object PipelineQueries {
     "q_ann_opq_residual" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val mixed = MrlFixture(Pca3Fixture(emb))
-      SimilaritySearch.ivfPqOpqResidualKnn(mixed,
+      SimilaritySearch.ivfPqResidualKnn(mixed,
         mixed.filter(col("vec_id") < 5), "embedding", "vec_id",
-        dim = 64, k = 3, nCells = 8, nProbe = 4, m = 4, pqCells = 16,
-        maxTrainPerCell = 64)
+        k = 3, nCells = 8, nProbe = 4, m = 4, pqCells = 16,
+        maxTrainPerCell = 64, rotation = Some(Rotation.VarPerm(64)))
         .orderBy(col("qid"), col("rnk"))
     }),
 
@@ -1873,10 +1879,10 @@ object PipelineQueries {
       graft.sources.ParquetIO.deletePath(idx)
       val emb = Tables.load(s, dir, "embeddings")
       val mixed = MrlFixture(Pca3Fixture(emb))
-      SimilaritySearch.buildOpqResidualIndex(mixed, "embedding", "vec_id",
-        idx, dim = 64, nCells = 8, m = 4, pqCells = 16,
-        maxTrainPerCell = 64)
-      SimilaritySearch.opqResidualKnnIndexed(s, idx,
+      SimilaritySearch.buildIvfPqResidualIndex(mixed, "embedding", "vec_id",
+        idx, nCells = 8, m = 4, pqCells = 16, maxTrainPerCell = 64,
+        rotation = Some(Rotation.VarPerm(64)))
+      SimilaritySearch.ivfPqResidualKnnIndexed(s, idx,
         mixed.filter(col("vec_id") < 5), "embedding", "vec_id",
         k = 3, nProbe = 4)
         .orderBy(col("qid"), col("rnk"))
@@ -1905,10 +1911,10 @@ object PipelineQueries {
       graft.sources.ParquetIO.deletePath(idx)
       val emb = Tables.load(s, dir, "embeddings")
       val mixed = MrlFixture(Pca3Fixture(emb))
-      SimilaritySearch.buildOpqResidualIndex(mixed, "embedding", "vec_id",
-        idx, dim = 64, nCells = 8, m = 4, pqCells = 16,
-        maxTrainPerCell = 64, normalize = true)
-      SimilaritySearch.opqResidualKnnIndexed(s, idx,
+      SimilaritySearch.buildIvfPqResidualIndex(mixed, "embedding", "vec_id",
+        idx, nCells = 8, m = 4, pqCells = 16, maxTrainPerCell = 64,
+        normalize = true, rotation = Some(Rotation.VarPerm(64)))
+      SimilaritySearch.ivfPqResidualKnnIndexed(s, idx,
         mixed.filter(col("vec_id") < 5), "embedding", "vec_id",
         k = 3, nProbe = 4)
         .orderBy(col("qid"), col("rnk"))

@@ -4213,8 +4213,9 @@ object SketchOracleSql {
     * unit-normalize FIRST (original coordinate order), derive the
     * serpentine permutation from the UNIT vectors, then the standard
     * IVF-PQ chain in the permuted basis. The gate's queries enter raw;
-    * `buildVarPermIndex(normalize=true)` records the flag and
-    * `varPermKnnIndexed` applies the identical transform.
+    * `buildIvfPqIndex(normalize = true, rotation = Some(VarPerm(64)))`
+    * records the flag and `ivfPqKnnIndexed` applies the identical
+    * transform.
     */
   def annVarPermCosineOracle: String =
     s"""WITH $opqResidualBaseCte, $mxUnitCte,

@@ -253,16 +253,17 @@ class AnnIndexMaintenanceSpec extends SparkSpec {
     // dim must equal the corpus's true dimension (16): the round-13
     // HouseholderChain kernel REFUSES a mismatched reflection vector
     // where the old zip_with silently null-padded past the array
-    SimilaritySearch.buildPcaIndex(sheared, "embedding", "vec_id", idx,
-      dim = 16, nCells = 2, m = 2, pqCells = 8, maxTrainPerCell = 64)
+    val pca = Some(SimilaritySearch.Rotation.Pca(16))
+    SimilaritySearch.buildIvfPqIndex(sheared, "embedding", "vec_id", idx,
+      nCells = 2, m = 2, pqCells = 8, maxTrainPerCell = 64, rotation = pca)
     val q = sheared.filter(col("vec_id") < 3L)
-    def search() = SimilaritySearch.pcaKnnIndexed(
+    def search() = SimilaritySearch.ivfPqKnnIndexed(
       spark, idx, q, "embedding", "vec_id", k = 3, nProbe = 2)
     val baseline = rows(search())
     // indexed == in-memory at the same knobs (same stored basis)
-    assert(baseline == rows(SimilaritySearch.ivfPqPcaKnn(sheared, q,
-      "embedding", "vec_id", dim = 16, k = 3, nCells = 2, nProbe = 2,
-      m = 2, pqCells = 8, maxTrainPerCell = 64)))
+    assert(baseline == rows(SimilaritySearch.ivfPqKnn(sheared, q,
+      "embedding", "vec_id", k = 3, nCells = 2, nProbe = 2,
+      m = 2, pqCells = 8, maxTrainPerCell = 64, rotation = pca)))
     KvMerge.rewrite(spark, s"$idx/householder", numFiles = 1)
     KvMerge.rewrite(spark, s"$idx/codes", numFiles = 2)
     assert(rows(search()) == baseline, "pca index rewrite changed results")

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import graft.operators.SimilaritySearch.Rotation
 
 class SimilaritySearchSpec extends SparkSpec {
   import spark.implicits._
@@ -131,7 +132,7 @@ class SimilaritySearchSpec extends SparkSpec {
       (s.toLong, x.zipWithIndex.map { case (xi, i) =>
         xi + 4.0 * x.head + (if (i % 2 == 0) 2.0 else -2.0) * x(1) })
     }.toDF("vec_id", "embedding")
-    val (u1, u2) = SimilaritySearch.pcaDirections2(two, "embedding", 16)
+    val Seq(u1, u2) = SimilaritySearch.pcaDirectionsK(two, "embedding", 16, 2)
     // the deflation contract: the masked residual's dim-0 moment sums
     // are exactly zero, so u2 fixes e₁ EXACTLY (not to rounding)
     assert(u2.head == 0L, s"u2[0] must be exactly 0, got ${u2.head}")
@@ -192,10 +193,10 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(us(1)(0) == 0L, s"u2[0] must be exactly 0, got ${us(1)(0)}")
     assert(us(2)(0) == 0L && us(2)(4) == 0L,
       s"u3 must be exactly 0 at pivots 0 and 4, got ${us(2)(0)}, ${us(2)(4)}")
-    // delegation pin: the sequential-pivot K path IS pcaDirections2
-    val (u1, u2) = SimilaritySearch.pcaDirections2(three, "embedding", 16)
+    // delegation pin: the default K path IS the sequential-pivot one
     assert(SimilaritySearch.pcaDirectionsK(three, "embedding", 16, 2) ==
-      Seq(u1, u2))
+      SimilaritySearch.pcaDirectionsK(three, "embedding", 16, 2,
+        pivots = Seq(0, 1)))
     // the composed 3-reflection chain is exactly orthogonal
     val n = three.select(
       sqrt(aggregate(transform(col("embedding"), x => x * x),
@@ -212,26 +213,32 @@ class SimilaritySearchSpec extends SparkSpec {
       lit(0.0), (a, x) => a + x)) - lit(1.0)).as("d"))
       .agg(max(col("d"))).collect()(0).getDouble(0)
     assert(un < 1e-12, s"unitNorm drift $un")
-    // components=1, raw, sequential == the single-reflection chain
+    // components=1, raw, sequential == the plain chain over inputs
+    // reflected by the single power direction's Householder u
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.orderBy("qid", "rnk").collect().map(_.toString).toSeq
-    assert(rows(SimilaritySearch.ivfPqPcaKKnn(three, q, "embedding",
-      "vec_id", 16, 3, 1, nCells = 4, nProbe = 2, m = 2, pqCells = 8,
-      maxTrainPerCell = 64)) ==
-      rows(SimilaritySearch.ivfPqPcaKnn(three, q, "embedding", "vec_id",
-        16, 3, nCells = 4, nProbe = 2, m = 2, pqCells = 8,
-        maxTrainPerCell = 64)))
+    val u = SimilaritySearch.householderU(
+      SimilaritySearch.powerDirection(three, "embedding", 16))
+    def reflected(df: org.apache.spark.sql.DataFrame) = df.select(col("vec_id"),
+      SimilaritySearch.householderReflect(col("embedding"), u).as("embedding"))
+    assert(rows(SimilaritySearch.ivfPqKnn(three, q, "embedding",
+      "vec_id", 3, nCells = 4, nProbe = 2, m = 2, pqCells = 8,
+      maxTrainPerCell = 64, rotation = Some(Rotation.Pca(16)))) ==
+      rows(SimilaritySearch.ivfPqKnn(reflected(three), reflected(q),
+        "embedding", "vec_id", 3, nCells = 4, nProbe = 2, m = 2,
+        pqCells = 8, maxTrainPerCell = 64)))
     // persisted 3-component normalized+balanced index answers
     // bit-identically to the in-memory chain (pca_meta normalize flag
     // round-trips; stored u chain applied to normalized queries)
     val idx = java.nio.file.Files.createTempDirectory("pca3idx").toString
-    SimilaritySearch.buildPcaIndex(three, "embedding", "vec_id", idx,
-      dim = 16, nCells = 4, m = 4, pqCells = 8, maxTrainPerCell = 64,
-      components = 3, normalize = true, balancePivots = true)
-    val mem = rows(SimilaritySearch.ivfPqPcaKKnn(three, q, "embedding",
-      "vec_id", 16, 3, 3, nCells = 4, nProbe = 2, m = 4, pqCells = 8,
-      maxTrainPerCell = 64, normalize = true, balancePivots = true))
-    val viaIdx = rows(SimilaritySearch.pcaKnnIndexed(spark, idx, q,
+    val pca3 = Some(Rotation.Pca(16, components = 3, balancePivots = true))
+    SimilaritySearch.buildIvfPqIndex(three, "embedding", "vec_id", idx,
+      nCells = 4, m = 4, pqCells = 8, maxTrainPerCell = 64,
+      normalize = true, rotation = pca3)
+    val mem = rows(SimilaritySearch.ivfPqKnn(three, q, "embedding",
+      "vec_id", 3, nCells = 4, nProbe = 2, m = 4, pqCells = 8,
+      maxTrainPerCell = 64, normalize = true, rotation = pca3))
+    val viaIdx = rows(SimilaritySearch.ivfPqKnnIndexed(spark, idx, q,
       "embedding", "vec_id", k = 3, nProbe = 2))
     assert(mem == viaIdx)
     // the normalization audit is non-vacuous on this fixture: the
@@ -644,12 +651,14 @@ class SimilaritySearchSpec extends SparkSpec {
       df.select("qid", "nid", "adist", "rnk")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .sortBy(t => (t._1, t._4)).toSeq
-    val direct = rows(SimilaritySearch.ivfPqOpqResidualKnn(corpus, q,
-      "embedding", "vec_id", dim = 24, k = 2, nCells = 4, nProbe = 2,
-      m = 2, pqCells = 4, maxTrainPerCell = 32))
-    SimilaritySearch.buildOpqResidualIndex(corpus, "embedding", "vec_id",
-      idx, dim = 24, nCells = 4, m = 2, pqCells = 4, maxTrainPerCell = 32)
-    val indexed = rows(SimilaritySearch.opqResidualKnnIndexed(spark, idx,
+    val perm = Some(Rotation.VarPerm(24))
+    val direct = rows(SimilaritySearch.ivfPqResidualKnn(corpus, q,
+      "embedding", "vec_id", k = 2, nCells = 4, nProbe = 2,
+      m = 2, pqCells = 4, maxTrainPerCell = 32, rotation = perm))
+    SimilaritySearch.buildIvfPqResidualIndex(corpus, "embedding", "vec_id",
+      idx, nCells = 4, m = 2, pqCells = 4, maxTrainPerCell = 32,
+      rotation = perm)
+    val indexed = rows(SimilaritySearch.ivfPqResidualKnnIndexed(spark, idx,
       q, "embedding", "vec_id", k = 2, nProbe = 2))
     assert(indexed == direct,
       "persisted OPQxIVFADC diverged from the in-memory composition")
@@ -940,8 +949,9 @@ class SimilaritySearchSpec extends SparkSpec {
 
   test("ivfPqOpqKnn ranks the planted exact duplicate first") {
     val q = corpus16.filter(col("vec_id") === 0L)
-    val got = SimilaritySearch.ivfPqOpqKnn(corpus16, q, "embedding", "vec_id",
-      dim = 16, k = 3, nCells = 2, nProbe = 2, m = 2, pqCells = 8)
+    val got = SimilaritySearch.ivfPqKnn(corpus16, q, "embedding", "vec_id",
+      k = 3, nCells = 2, nProbe = 2, m = 2, pqCells = 8,
+      rotation = Some(Rotation.Hadamard(16)))
       .orderBy("rnk").collect()
     assert(got.nonEmpty)
     // identical vector -> identical rotated vector -> identical codes ->
@@ -995,8 +1005,9 @@ class SimilaritySearchSpec extends SparkSpec {
 
   test("ivfPqOpqFwhtKnn ranks the planted exact duplicate first") {
     val q = corpus16.filter(col("vec_id") === 0L)
-    val got = SimilaritySearch.ivfPqOpqFwhtKnn(corpus16, q, "embedding", "vec_id",
-      dim = 16, k = 3, nCells = 2, nProbe = 2, m = 2, pqCells = 8)
+    val got = SimilaritySearch.ivfPqKnn(corpus16, q, "embedding", "vec_id",
+      k = 3, nCells = 2, nProbe = 2, m = 2, pqCells = 8,
+      rotation = Some(Rotation.HadamardFwht(16)))
       .orderBy("rnk").collect()
     assert(got.nonEmpty)
     val dup = got.find(_.getAs[Long]("nid") == 99L)
@@ -1123,19 +1134,20 @@ class SimilaritySearchSpec extends SparkSpec {
         .as("embedding"))
     val q = aniso.filter(col("vec_id") < 3L)
     val idx = java.nio.file.Files.createTempDirectory("vpidx").toString + "/i"
-    SimilaritySearch.buildVarPermIndex(aniso, "embedding", "vec_id", idx,
-      dim = 16, nCells = 2, m = 2, pqCells = 8, maxTrainPerCell = 64)
-    val indexed = SimilaritySearch.varPermKnnIndexed(spark, idx, q,
+    val perm = Some(Rotation.VarPerm(16))
+    SimilaritySearch.buildIvfPqIndex(aniso, "embedding", "vec_id", idx,
+      nCells = 2, m = 2, pqCells = 8, maxTrainPerCell = 64, rotation = perm)
+    val indexed = SimilaritySearch.ivfPqKnnIndexed(spark, idx, q,
       "embedding", "vec_id", k = 3, nProbe = 2)
       .orderBy("qid", "rnk").collect().toSeq
-    val mem = SimilaritySearch.ivfPqVarPermKnn(aniso, q, "embedding",
-      "vec_id", dim = 16, k = 3, nCells = 2, nProbe = 2, m = 2,
-      pqCells = 8, maxTrainPerCell = 64)
+    val mem = SimilaritySearch.ivfPqKnn(aniso, q, "embedding",
+      "vec_id", k = 3, nCells = 2, nProbe = 2, m = 2,
+      pqCells = 8, maxTrainPerCell = 64, rotation = perm)
       .orderBy("qid", "rnk").collect().toSeq
     assert(indexed == mem, "stored permutation diverged from the in-memory chain")
     // missing perm table fails fast instead of searching the wrong basis
     intercept[Exception] {
-      SimilaritySearch.varPermKnnIndexed(spark,
+      SimilaritySearch.ivfPqKnnIndexed(spark,
         java.nio.file.Files.createTempDirectory("vpnone").toString + "/x",
         q, "embedding", "vec_id", k = 3)
     }
@@ -1201,43 +1213,44 @@ class SimilaritySearchSpec extends SparkSpec {
     val q = mixed.filter(col("vec_id") < 3L)
     // varperm tier: indexed normalized == in-memory normalize=true
     val idx = java.nio.file.Files.createTempDirectory("vpcos").toString + "/i"
-    SimilaritySearch.buildVarPermIndex(mixed, "embedding", "vec_id", idx,
-      dim = 16, nCells = 2, m = 2, pqCells = 8, maxTrainPerCell = 64,
-      normalize = true)
-    val indexed = SimilaritySearch.varPermKnnIndexed(spark, idx, q,
+    val perm = Some(Rotation.VarPerm(16))
+    SimilaritySearch.buildIvfPqIndex(mixed, "embedding", "vec_id", idx,
+      nCells = 2, m = 2, pqCells = 8, maxTrainPerCell = 64,
+      normalize = true, rotation = perm)
+    val indexed = SimilaritySearch.ivfPqKnnIndexed(spark, idx, q,
       "embedding", "vec_id", k = 3, nProbe = 2)
       .orderBy("qid", "rnk").collect().toSeq
-    val mem = SimilaritySearch.ivfPqVarPermKnn(mixed, q, "embedding",
-      "vec_id", dim = 16, k = 3, nCells = 2, nProbe = 2, m = 2,
-      pqCells = 8, maxTrainPerCell = 64, normalize = true)
+    val mem = SimilaritySearch.ivfPqKnn(mixed, q, "embedding",
+      "vec_id", k = 3, nCells = 2, nProbe = 2, m = 2,
+      pqCells = 8, maxTrainPerCell = 64, normalize = true, rotation = perm)
       .orderBy("qid", "rnk").collect().toSeq
     assert(indexed == mem,
       "stored perm_meta normalize knob diverged from the in-memory unit chain")
     // pre-meta layout (no perm_meta table) degrades to raw queries —
     // old indexes keep answering exactly as they did before the knob
     val idxRaw = java.nio.file.Files.createTempDirectory("vpraw").toString + "/i"
-    SimilaritySearch.buildVarPermIndex(mixed, "embedding", "vec_id", idxRaw,
-      dim = 16, nCells = 2, m = 2, pqCells = 8, maxTrainPerCell = 64)
+    SimilaritySearch.buildIvfPqIndex(mixed, "embedding", "vec_id", idxRaw,
+      nCells = 2, m = 2, pqCells = 8, maxTrainPerCell = 64, rotation = perm)
     graft.sources.ParquetIO.deletePath(s"$idxRaw/perm_meta")
-    val legacy = SimilaritySearch.varPermKnnIndexed(spark, idxRaw, q,
+    val legacy = SimilaritySearch.ivfPqKnnIndexed(spark, idxRaw, q,
       "embedding", "vec_id", k = 3, nProbe = 2)
       .orderBy("qid", "rnk").collect().toSeq
-    val rawMem = SimilaritySearch.ivfPqVarPermKnn(mixed, q, "embedding",
-      "vec_id", dim = 16, k = 3, nCells = 2, nProbe = 2, m = 2,
-      pqCells = 8, maxTrainPerCell = 64)
+    val rawMem = SimilaritySearch.ivfPqKnn(mixed, q, "embedding",
+      "vec_id", k = 3, nCells = 2, nProbe = 2, m = 2,
+      pqCells = 8, maxTrainPerCell = 64, rotation = perm)
       .orderBy("qid", "rnk").collect().toSeq
     assert(legacy == rawMem, "missing perm_meta did not degrade to raw")
     // composed OPQ x IVFADC tier: same knob, same parity
     val idxOr = java.nio.file.Files.createTempDirectory("orcos").toString + "/i"
-    SimilaritySearch.buildOpqResidualIndex(mixed, "embedding", "vec_id",
-      idxOr, dim = 16, nCells = 2, m = 2, pqCells = 8,
-      maxTrainPerCell = 64, normalize = true)
-    val orIndexed = SimilaritySearch.opqResidualKnnIndexed(spark, idxOr, q,
+    SimilaritySearch.buildIvfPqResidualIndex(mixed, "embedding", "vec_id",
+      idxOr, nCells = 2, m = 2, pqCells = 8,
+      maxTrainPerCell = 64, normalize = true, rotation = perm)
+    val orIndexed = SimilaritySearch.ivfPqResidualKnnIndexed(spark, idxOr, q,
       "embedding", "vec_id", k = 3, nProbe = 2)
       .orderBy("qid", "rnk").collect().toSeq
-    val orMem = SimilaritySearch.ivfPqOpqResidualKnn(mixed, q, "embedding",
-      "vec_id", dim = 16, k = 3, nCells = 2, nProbe = 2, m = 2,
-      pqCells = 8, maxTrainPerCell = 64, normalize = true)
+    val orMem = SimilaritySearch.ivfPqResidualKnn(mixed, q, "embedding",
+      "vec_id", k = 3, nCells = 2, nProbe = 2, m = 2,
+      pqCells = 8, maxTrainPerCell = 64, normalize = true, rotation = perm)
       .orderBy("qid", "rnk").collect().toSeq
     assert(orIndexed == orMem,
       "composed tier's stored normalize knob diverged from the in-memory chain")
@@ -1249,13 +1262,15 @@ class SimilaritySearchSpec extends SparkSpec {
     val unitC = mixed.select(col("vec_id"),
       graft.functions.VectorExpressions.unitNormalize(col("embedding"))
         .as("embedding"))
-    val opqNorm = SimilaritySearch.ivfPqOpqKnn(mixed, q, "embedding",
-      "vec_id", dim = 16, k = 3, nCells = 2, nProbe = 2, m = 2,
-      pqCells = 8, maxTrainPerCell = 64, normalize = true)
+    val hadamard = Some(Rotation.Hadamard(16))
+    val opqNorm = SimilaritySearch.ivfPqKnn(mixed, q, "embedding",
+      "vec_id", k = 3, nCells = 2, nProbe = 2, m = 2,
+      pqCells = 8, maxTrainPerCell = 64, normalize = true,
+      rotation = hadamard)
       .orderBy("qid", "rnk").collect().toSeq
-    val opqUnit = SimilaritySearch.ivfPqOpqKnn(unitC, unitQ, "embedding",
-      "vec_id", dim = 16, k = 3, nCells = 2, nProbe = 2, m = 2,
-      pqCells = 8, maxTrainPerCell = 64)
+    val opqUnit = SimilaritySearch.ivfPqKnn(unitC, unitQ, "embedding",
+      "vec_id", k = 3, nCells = 2, nProbe = 2, m = 2,
+      pqCells = 8, maxTrainPerCell = 64, rotation = hadamard)
       .orderBy("qid", "rnk").collect().toSeq
     assert(opqNorm == opqUnit,
       "FWHT chain normalize knob != plain chain over unit vectors")
